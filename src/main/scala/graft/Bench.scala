@@ -18,13 +18,10 @@ object Bench {
     * benched) — excluded so the headline number reflects the plans meant
     * for 100 TB.
     */
-  private val exclude = Set("dedup_ngram_jaccard", "dedup_embedding_cosine",
+  private[graft] val exclude = Set("dedup_ngram_jaccard", "dedup_embedding_cosine",
     // exhaustive shared-shingle baseline; shingle_containment_capped is
     // the benched df-bounded scale path (identical per-pair values)
     "shingle_containment",
-    // round-4 demoted grows-with-n configs (quadratic by construction;
-    // the promoted √n-stride / capped-ksub entries are the benched paths)
-    "embedding_clusters_sampled", "semdedup_apply_sampled", "pq_topk_sampled",
     // the declared small-n/loose-threshold SRP recall tool: 16x4-bit
     // bands give near-linear candidate growth (measured sf0.1→sf1
     // exponent 0.94); the benched scale path is dedup_embedding_srp_wide
@@ -42,14 +39,13 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Same codec pin as SpillBench (zstd): the sf100 spill regime needs
-    // it (halves spill bytes; lz4 killed the shingle family on local
-    // scratch), and the in-memory regime is insensitive — the lz4-vs-zstd
-    // delta at sf0.1 sign-flips across quiet samples inside the noise
-    // band (SURVEY §6 "Round-9/10/11 adjudication" note;
-    // BENCH_CODEC_AB_r11.json holds the committed A/B runs). One codec
-    // across both harnesses keeps every artifact row comparable;
-    // recorded in the emitted JSON so no run is ambiguous.
+    // Codec pin (zstd): the sf100 spill regime needs it (halves spill
+    // bytes; lz4 killed the shingle family on local scratch —
+    // BENCH_SF100_SPILL.json), and the in-memory regime is insensitive —
+    // the lz4-vs-zstd delta at sf0.1 sign-flips across quiet samples
+    // inside the noise band (SURVEY §6 "Round-9/10/11 adjudication" note;
+    // BENCH_CODEC_AB_r11.json holds the committed A/B runs). Recorded in
+    // the emitted JSON so no run is ambiguous.
     val codec = sys.env.getOrElse("SPARK_GRAFT_CODEC", "zstd")
     // The codec lands both in a Spark conf and (unescaped) in the
     // hand-built JSON artifact — reject anything outside Spark's own
@@ -70,22 +66,6 @@ object Bench {
         .write.format("noop").mode("overwrite").save()
 
     run("q1_pricing_agg") // warmup, untimed
-
-    // Dev aid (r14 verdict #7): SPARK_GRAFT_PREFIX=n runs the first n
-    // benched inventory entries ONCE, untimed, before the timed loop.
-    // Solo runs of an entry do not reproduce full-suite conditions
-    // (listener-bus backlog, populated heap/block manager, JIT state) —
-    // the r14 CC rewrite passed solo A/B and regressed 3x in-suite. This
-    // recreates the suite environment around a SPARK_GRAFT_ONLY subset
-    // without paying 3 timed trials of everything. Unset (every driver
-    // run), the timed path is UNCHANGED.
-    sys.env.get("SPARK_GRAFT_PREFIX").map(_.toInt).foreach { n =>
-      Queries.all.map(_.name).filterNot(exclude).take(n).foreach { nm =>
-        try run(nm)
-        catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] prefix $nm failed: ${e.getMessage}") }
-      }
-    }
 
     // Dev aid: SPARK_GRAFT_ONLY=q1,q2 benches a subset (same timing path).
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)

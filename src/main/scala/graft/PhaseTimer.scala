@@ -1,11 +1,13 @@
 package graft
 
-/** Phase-timing hook threaded through the maintenance APPLY bodies and
-  * the publish machinery: the production entries run them un-timed
-  * ([[NoTimer]] — zero overhead, the phases inline away), while
-  * `graft.tools.SwapProbe` drives the SAME bodies with a wall-clock
-  * timer per phase. One code path, so probe attribution can never drift
-  * from what the entries ship.
+/** The library's one timing hook, threaded through the maintenance
+  * APPLY bodies and the publish machinery: the production entries run
+  * them un-timed ([[NoTimer]] — zero overhead, the phases inline away).
+  * Two timed implementations drive the SAME bodies: the benchmark's
+  * traced run (`graft.perfbench.Tracer`, which turns each phase into a
+  * span with its Spark jobs attributed) and `graft.tools.SwapProbe` (a
+  * wall-clock timer per phase at sf100). One code path, so attribution
+  * can never drift from what the entries ship.
   */
 trait PhaseTimer {
   def apply[A](label: String)(f: => A): A

@@ -923,24 +923,20 @@ object Queries {
     * `cb` = (subspace, code, cvs), `enc` = nearest code per
     * (vec_id, subspace). The PRIMARY sample rule is every 25th vector
     * CAPPED at 256 codewords (`vec_id < 6400`) — ksub constant in n, so
-    * the encode join stays linear (the Pq scale note); the uncapped
-    * grows-with-n rule survives only in the demoted `pq_topk_sampled`
-    * baseline.
+    * the encode join stays linear (the Pq scale note).
     */
-  private def pqCteSql(capped: Boolean = true): String = {
-    val capWhere = if (capped) " AND e.vec_id < 6400" else ""
+  private val pqCteSql: String =
     s"""cb AS (SELECT CAST(s.s AS BIGINT) AS subspace,
        |         ROW_NUMBER() OVER (PARTITION BY s.s ORDER BY e.vec_id) - 1 AS code,
        |         list_slice(e.embedding, s.s*16+1, s.s*16+16) AS cvs
        |       FROM embeddings e, (SELECT unnest([0,1,2,3]) AS s) s
-       |       WHERE e.vec_id % 25 = 0$capWhere),
+       |       WHERE e.vec_id % 25 = 0 AND e.vec_id < 6400),
        |scored AS (SELECT e.vec_id, c.subspace, c.code,
        |    ${l2Sql("list_slice(e.embedding, c.subspace*16+1, c.subspace*16+16)", "c.cvs")} AS d
        |  FROM embeddings e CROSS JOIN cb c),
        |enc AS (SELECT vec_id, subspace, code, d FROM (
        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, subspace
        |      ORDER BY d, code) AS rn FROM scored) WHERE rn = 1)""".stripMargin
-  }
 
   /** The PQ codebook sample at its production (capped) rule, Spark side:
     * every 25th vector, at most 256 codewords.
@@ -1139,13 +1135,6 @@ object Queries {
     while (pw < target && pw < (1 << 20)) pw <<= 1
     pw
   }
-
-  /** Phase-timing hook for the maintenance APPLY bodies below — the
-    * top-level [[graft.PhaseTimer]], re-exported so existing callers
-    * (`graft.tools.SwapProbe`) keep addressing it as `Queries.PhaseTimer`.
-    */
-  private[graft] type PhaseTimer = graft.PhaseTimer
-  private[graft] val NoTimer = graft.NoTimer
 
   /** Adopt-or-apply for a maintained-index PUBLISHED VERSION — the
     * production steady state the manifest work buys: when the stamped
@@ -1449,20 +1438,15 @@ object Queries {
   private val sqrtStrideSql: String =
     "(SELECT GREATEST(1, COUNT(*) // GREATEST(16, CAST(FLOOR(SQRT(COUNT(*))) AS BIGINT))) FROM embeddings)"
 
-  /** Centroid-selection predicates: the primary √n-stride rule and the
-    * demoted grows-with-n sampled rule (kept only as an unbenched
-    * baseline, like dedup_ngram_jaccard for LSH).
-    */
+  /** Centroid-selection predicate of the √n-stride rule. */
   private val sqrtCentsWhereSql: String = s"vec_id % $sqrtStrideSql = 0"
-  private val sampledCentsWhereSql: String = "vec_id % 25 = 0"
 
   /** IVF-bucketed cosine near-dup pairs (the dedup_embedding_bucketed
     * relation), reused by the embedding-cluster oracle.
     */
-  private def bucketedCosPairsSql(threshold: Double,
-                                  centsWhere: String = sqrtCentsWhereSql): String =
+  private def bucketedCosPairsSql(threshold: Double): String =
     s"""WITH c AS (SELECT vec_id AS centroid_id, embedding AS cv
-       |        FROM embeddings WHERE $centsWhere),
+       |        FROM embeddings WHERE $sqrtCentsWhereSql),
        |scored AS (SELECT e.vec_id, c.centroid_id,
        |    ${cosSql("e.embedding", "c.cv")} AS cos
        |  FROM embeddings e CROSS JOIN c),
@@ -2480,30 +2464,6 @@ object Queries {
         |        FROM closure GROUP BY node)
         |SELECT doc_id, cluster_id, doc_id = cluster_id AS keep FROM agg""".stripMargin)),
 
-    Q("embedding_clusters_sampled",
-      // DEMOTED round-4 baseline: the original grows-with-n centroid rule
-      // (every 25th vector ⇒ k ∝ n ⇒ assign O(n²/25), probed 186 s at
-      // 100x). Unbenched, like dedup_ngram_jaccard — the primary
-      // embedding_clusters entry runs the √n-stride rule.
-      (s, d) => {
-        val emb = Tables.embeddings(s, d)
-        val assign = Ann.ivfAssign(emb, emb.filter(col("vec_id") % 25 === 0),
-          "vec_id", "embedding", "vec_id", "embedding")
-        Clustering.dedupClusters(
-          Ann.bucketedCosinePairs(emb, assign, "vec_id", "embedding", 0.4),
-          "id_a", "id_b")
-      },
-      Some(s"""WITH RECURSIVE pr AS (${bucketedCosPairsSql(0.4, sampledCentsWhereSql)}),
-        |edges AS (SELECT id_a AS src, id_b AS dst FROM pr
-        |          UNION ALL SELECT id_b, id_a FROM pr),
-        |closure(node, reach) AS (
-        |  SELECT DISTINCT src, src FROM edges
-        |  UNION
-        |  SELECT c.node, e.dst FROM closure c JOIN edges e ON c.reach = e.src),
-        |agg AS (SELECT node AS doc_id, MIN(reach) AS cluster_id
-        |        FROM closure GROUP BY node)
-        |SELECT doc_id, cluster_id, doc_id = cluster_id AS keep FROM agg""".stripMargin)),
-
     Q("semdedup_apply",
       // SemDeDup (Abbas et al. '23): semantic dedup of the embedding
       // corpus itself — semantically-duplicate vectors (cosine above the
@@ -2520,30 +2480,6 @@ object Queries {
           "vec_id", "id_a", "id_b")
       },
       Some(s"""WITH RECURSIVE pr AS (${bucketedCosPairsSql(0.4)}),
-        |edges AS (SELECT id_a AS src, id_b AS dst FROM pr
-        |          UNION ALL SELECT id_b, id_a FROM pr),
-        |closure(node, reach) AS (
-        |  SELECT DISTINCT src, src FROM edges
-        |  UNION
-        |  SELECT c.node, e.dst FROM closure c JOIN edges e ON c.reach = e.src),
-        |agg AS (SELECT node AS vid, MIN(reach) AS cluster_id
-        |        FROM closure GROUP BY node)
-        |SELECT vec_id, label FROM embeddings
-        |WHERE vec_id NOT IN (SELECT vid FROM agg WHERE vid <> cluster_id)""".stripMargin)),
-
-    Q("semdedup_apply_sampled",
-      // DEMOTED round-4 baseline: SemDeDup over the grows-with-n centroid
-      // rule (282 s at 100x, SURVEY §3). Unbenched; the primary
-      // semdedup_apply entry runs the √n-stride rule.
-      (s, d) => {
-        val emb = Tables.embeddings(s, d)
-        val assign = Ann.ivfAssign(emb, emb.filter(col("vec_id") % 25 === 0),
-          "vec_id", "embedding", "vec_id", "embedding")
-        Clustering.applyDedup(emb.select("vec_id", "label"),
-          Ann.bucketedCosinePairs(emb, assign, "vec_id", "embedding", 0.4),
-          "vec_id", "id_a", "id_b")
-      },
-      Some(s"""WITH RECURSIVE pr AS (${bucketedCosPairsSql(0.4, sampledCentsWhereSql)}),
         |edges AS (SELECT id_a AS src, id_b AS dst FROM pr
         |          UNION ALL SELECT id_b, id_a FROM pr),
         |closure(node, reach) AS (
@@ -2654,7 +2590,7 @@ object Queries {
             "vec_id", "embedding", m = 4, subDim = 16),
           "vec_id", "embedding", subDim = 16)
       },
-      Some(s"""WITH ${pqCteSql()}
+      Some(s"""WITH ${pqCteSql}
         |SELECT vec_id, subspace, code, ROUND(d, 4) AS dist FROM enc""".stripMargin)),
 
     Q("pq_topk",
@@ -2671,36 +2607,7 @@ object Queries {
           cb, emb.filter(col("vec_id") < 5), "vec_id", "embedding",
           subDim = 16, k = 3)
       },
-      Some(s"""WITH ${pqCteSql()},
-        |lut AS (SELECT q.vec_id AS query_id, c.subspace, c.code,
-        |    ${l2Sql("list_slice(q.embedding, c.subspace*16+1, c.subspace*16+16)", "c.cvs")} AS d
-        |  FROM embeddings q CROSS JOIN cb c WHERE q.vec_id < 5),
-        |summed AS (SELECT l.query_id, en.vec_id AS neighbor_id,
-        |    SUM(CAST(l.d AS DECIMAL(38,12))) AS adc_exact
-        |  FROM enc en JOIN lut l ON en.subspace = l.subspace AND en.code = l.code
-        |  WHERE en.vec_id <> l.query_id GROUP BY 1, 2)
-        |SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank,
-        |  ROUND(CAST(adc_exact AS DOUBLE), 4) AS adc
-        |FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-        |        ORDER BY adc_exact, neighbor_id) AS rank FROM summed)
-        |WHERE rank <= 3""".stripMargin)),
-
-    Q("pq_topk_sampled",
-      // DEMOTED round-4 baseline: the uncapped codebook sample (ksub ∝ n
-      // ⇒ encode O(n²/25); its 100x probe spilled local disk — the trap
-      // Pq.codebookFromSample documents). Unbenched; the primary pq_topk
-      // entry caps ksub at 256.
-      (s, d) => {
-        val emb = Tables.embeddings(s, d)
-        val cb = Pq.codebookFromSample(emb.filter(col("vec_id") % 25 === 0),
-          "vec_id", "embedding", m = 4, subDim = 16)
-        Pq.adcTopK(
-          Pq.encode(emb, cb, "vec_id", "embedding", subDim = 16)
-            .select("vec_id", "subspace", "code"),
-          cb, emb.filter(col("vec_id") < 5), "vec_id", "embedding",
-          subDim = 16, k = 3)
-      },
-      Some(s"""WITH ${pqCteSql(capped = false)},
+      Some(s"""WITH ${pqCteSql},
         |lut AS (SELECT q.vec_id AS query_id, c.subspace, c.code,
         |    ${l2Sql("list_slice(q.embedding, c.subspace*16+1, c.subspace*16+16)", "c.cvs")} AS d
         |  FROM embeddings q CROSS JOIN cb c WHERE q.vec_id < 5),

@@ -31,14 +31,12 @@ object VerifySlice {
     */
   val tailEntries: Seq[String] = Seq(
     "dedup_embedding_srp_wide", "embedding_clusters",
-    "ann_ivfadc_topk", "ann_recall_report",
-    "dedup_embedding_cosine", "embedding_clusters_sampled",
+    "ann_ivfadc_topk", "ann_recall_report", "dedup_embedding_cosine",
     "fuzzy_blocked_pairs", "knn_components", "knn_confusion", "knn_graph",
     "knn_hubness_report", "knn_label_spread", "pq_encode", "pq_topk",
-    "pq_topk_sampled", "repeated_span_removal", "repeated_span_stats",
-    "repeated_spans", "retrieval_maxsim", "semdedup_apply",
-    "semdedup_apply_sampled", "semdedup_savings", "shingle_containment",
-    "shingle_containment_capped", "split_leakage_report",
+    "repeated_span_removal", "repeated_span_stats", "repeated_spans",
+    "retrieval_maxsim", "semdedup_apply", "semdedup_savings",
+    "shingle_containment", "shingle_containment_capped", "split_leakage_report",
     "survivor_selection_report",
     // round-8 additions sharing the capped-containment oracle family
     "shingle_index_roundtrip", "shingle_containment_indexed",

@@ -14,8 +14,8 @@ import org.apache.spark.sql.types._
   * The byte-at-a-time builtin form (conv∘hex∘substring inside a HOF
   * `aggregate`) evaluates INTERPRETED per bit; unrolling the reads as 63
   * named codegen'd columns executes fast (60 ms at sf0.1) but costs ~1 s
-  * of CATALYST PLANNING per query — measured with tools/Probe DECOMP=pcm3
-  * (planning 1.03 s, second execute 0.06 s) and linear in nBits. A plain
+  * of CATALYST PLANNING per query — measured at planning 1.03 s against
+  * 0.06 s for a second execute, and linear in nBits. A plain
   * JVM loop behind StaticInvoke is one expression node: planning is
   * trivial and the loop runs inside whole-stage codegen at every scale.
   */

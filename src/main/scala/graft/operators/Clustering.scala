@@ -14,23 +14,10 @@ import org.apache.spark.sql.functions._
   * aggregate — all declarative, AQE-optimized; the driver only decides
   * WHEN to stop (a count per round), it never touches row data. Dedup
   * graphs are unions of small cliques, so convergence is 1-2 rounds in
-  * practice; maxIter bounds adversarial chains.
+  * practice; maxIter bounds adversarial chains, and a loop that reaches
+  * it unconverged throws rather than return partial labels.
   */
 object Clustering {
-
-  /** Dev-only phase timing for the CC loops (GRAFT_CC_DEBUG=1): stderr
-    * wall-clock per phase, zero overhead when unset. Exists because the
-    * r14 in-suite regression could not be attributed from solo runs.
-    */
-  private val ccDebug = sys.env.contains("GRAFT_CC_DEBUG")
-  @inline private def ccTime[A](label: => String)(f: => A): A =
-    if (!ccDebug) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"[cc] $label: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
-    }
 
   /** (node, component) for every node in `pairs`, component = min node id
     * reachable. `pairs` columns: (aCol, bCol), one row per undirected edge.
@@ -64,11 +51,11 @@ object Clustering {
     // re-run it; that previously forced an extra intermediate checkpoint
     // of the un-mirrored pairs (r14 optimization: one materialization job
     // at loop entry instead of two).
-    val (edges, edgeIds) = ccTime("edges ck")(checkpointTracked(
+    val (edges, edgeIds) = checkpointTracked(
       pairs.select(explode(array(
           struct(col(aCol).as("src"), col(bCol).as("dst")),
           struct(col(bCol).as("src"), col(aCol).as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))))
+        .select(col("e.src").as("src"), col("e.dst").as("dst")))
     // Size-gated broadcast of the label side of both per-round joins
     // (r15). The label relation — one row per node — is never larger than
     // the mirrored edge relation, whose MATERIALIZED size the block
@@ -95,6 +82,7 @@ object Clustering {
       .select(col("node"), least(col("node"), col("mind")).as("comp"))
     var labelIds: Set[Int] = Set.empty
     var iter = 0
+    var changed = 0L
     var converged = false
     while (iter < maxIter && !converged) {
       // One round = min over {own label} ∪ {neighbours' labels} ∪
@@ -107,8 +95,7 @@ object Clustering {
       // per node — labels is unique by node) carries the previous label
       // through the aggregate so the convergence check needs no probe:
       // an Observation counts changed rows DURING the round's checkpoint
-      // job (probed in tools/Probe DECOMP=obs, spec-gated in
-      // ClusteringSpec's long-chain test).
+      // job (spec-gated in ClusteringSpec's long-chain test).
       val neighbour = edges
         .join(maybeBcast(labels.withColumnRenamed("node", "dst2")),
           col("dst") === col("dst2"))
@@ -118,16 +105,15 @@ object Clustering {
         .select(col("l.node").as("node"), col("p.comp").as("comp"),
           lit(0).as("self"))
       val obs = org.apache.spark.sql.Observation()
-      val (next, nextIds) = ccTime(s"round $iter ck")(checkpointTracked(labels
+      val (next, nextIds) = checkpointTracked(labels
         .select(col("node"), col("comp"), lit(1).as("self"))
         .unionByName(neighbour).unionByName(pointer)
         .groupBy("node")
         .agg(min(col("comp")).as("comp"),
           max(when(col("self") === 1, col("comp"))).as("prev"))
-        .observe(obs, count(when(col("comp") =!= col("prev"), 1)).as("changed"))))
-      val changed = ccTime(s"round $iter obs.get")(
-        Scans.observed(obs, s"cc round $iter convergence")("changed")
-          .asInstanceOf[Long])
+        .observe(obs, count(when(col("comp") =!= col("prev"), 1)).as("changed")))
+      changed = Scans.observed(obs, s"cc round $iter convergence")("changed")
+        .asInstanceOf[Long]
       unpersistIds(labelIds) // superseded round's blocks
       labels = next.select("node", "comp")
       labelIds = nextIds
@@ -135,6 +121,10 @@ object Clustering {
       iter += 1
     }
     unpersistIds(edgeIds)
+    if (!converged) {
+      unpersistIds(labelIds)
+      throw notConverged("connectedComponents", maxIter, changed)
+    }
     labels.select(col("node").as("doc_id"), col("comp").as("cluster_id"))
   }
 
@@ -256,9 +246,9 @@ object Clustering {
       .select(least(col(aCol), col(bCol)).as("src"),
         greatest(col(aCol), col(bCol)).as("dst"))
       .filter(col("src") =!= col("dst"))
-    var (edges, edgeIds) = ccTime("stars edges ck")(checkpointTracked(
+    var (edges, edgeIds) = checkpointTracked(
       (if (dedupPairs) canonical.distinct() else canonical)
-        .observe(initObs, count(lit(1)).as("n"))))
+        .observe(initObs, count(lit(1)).as("n")))
     minsFit = Scans.fitsBroadcast(spark,
       2L * Scans.materializedBytes(sc, edgeIds))
     // Nodes with no surviving edge after a star round are their own
@@ -274,9 +264,9 @@ object Clustering {
     val edges0 = edges
     val edges0Ids = edgeIds
     var iter = 0
-    var prevCount = ccTime("stars init obs.get")(
-      Scans.observed(initObs, "stars initial edge count")("n")
-        .asInstanceOf[Long])
+    var prevCount = Scans.observed(initObs, "stars initial edge count")("n")
+      .asInstanceOf[Long]
+    var changed = 0L
     var converged = prevCount == 0
     while (iter < maxIter && !converged) {
       // Each round's checkpoint job also observes its output row count
@@ -286,12 +276,10 @@ object Clustering {
       // the counts match (typically the final round), removing one driver
       // job + one co-grouping pass from every non-final round.
       val roundObs = org.apache.spark.sql.Observation()
-      val (next, nextIds) = ccTime(s"stars round $iter ck")(
-        checkpointTracked(smallStar(largeStar(edges))
-          .observe(roundObs, count(lit(1)).as("n"))))
-      val nextCount = ccTime(s"stars round $iter obs.get")(
-        Scans.observed(roundObs, s"stars round $iter edge count")("n")
-          .asInstanceOf[Long])
+      val (next, nextIds) = checkpointTracked(smallStar(largeStar(edges))
+        .observe(roundObs, count(lit(1)).as("n")))
+      val nextCount = Scans.observed(roundObs, s"stars round $iter edge count")("n")
+        .asInstanceOf[Long]
       // Fixpoint = identical edge SETS (both sides are distinct() by
       // construction): ONE symmetric-difference probe — union with ±1
       // weights, grouped sum ≠ 0 ⟺ an edge on exactly one side — in
@@ -301,20 +289,25 @@ object Clustering {
       // partial-aggregated count shuffle). Safe against the exceptAll
       // constraint-propagation trap because both sides are rebased
       // checkpoints with fresh lineage (see checkpointTracked above).
-      val changed =
-        if (nextCount != prevCount) 1L
-        else ccTime(s"stars round $iter probe")(
-          next.select(col("src"), col("dst"), lit(1).as("w"))
+      // `changed` is a lower bound on the edges that differ: the count
+      // delta, or the probe's one witness.
+      changed =
+        if (nextCount != prevCount) math.abs(nextCount - prevCount)
+        else next.select(col("src"), col("dst"), lit(1).as("w"))
           .unionByName(edges.select(col("src"), col("dst"), lit(-1).as("w")))
           .groupBy("src", "dst").agg(sum(col("w")).as("d"))
           .filter(col("d") =!= 0)
-          .limit(1).count())
+          .limit(1).count()
       unpersistIds(edgeIds -- edges0Ids)
       edges = next
       edgeIds = nextIds
       prevCount = nextCount
       converged = changed == 0
       iter += 1
+    }
+    if (!converged) {
+      unpersistIds(edgeIds ++ edges0Ids)
+      throw notConverged("connectedComponentsStars", maxIter, changed)
     }
     // At fixpoint the edge relation IS the star forest: every non-root
     // appears exactly once as (component min, node). Nodes absent from
@@ -325,15 +318,20 @@ object Clustering {
       .unionByName(edges0.select(col("dst").as("node"))).distinct()
     // the fixpoint forest never exceeds the initial edge relation, so the
     // same size gate covers broadcasting it under the left join
-    val (labels, _) = ccTime("stars labels ck")(checkpointTracked(nodes
+    val (labels, _) = checkpointTracked(nodes
       .join(maybeBcast(
           edges.select(col("dst").as("node"), col("src").as("comp"))),
         Seq("node"), "left")
       .select(col("node").as("doc_id"),
-        coalesce(col("comp"), col("node")).as("cluster_id"))))
+        coalesce(col("comp"), col("node")).as("cluster_id")))
     unpersistIds(edgeIds ++ edges0Ids)
     labels
   }
+
+  private def notConverged(algorithm: String, maxIter: Int,
+                           changed: Long): IllegalStateException =
+    new IllegalStateException(s"$algorithm did not converge within " +
+      s"maxIter = $maxIter rounds (last round's changed count: $changed)")
 
   /** Duplicate clusters from near-dup pairs: every clustered doc with its
     * cluster id (= min doc id in the cluster) and a keep flag on the

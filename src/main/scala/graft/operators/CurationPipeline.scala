@@ -56,7 +56,7 @@ object CurationPipeline {
     * boundary, so all five survivor counts come out of ONE execution of
     * the final plan (CollectMetrics is a filter-pushdown barrier and is
     * not double-counted when a stage relation is referenced more than
-    * once in the DAG — probed in tools/ObserveProbe and pinned by spec).
+    * once in the DAG — pinned by spec).
     * The plain [[stages]]/[[curate]] path stays observation-free so the
     * barriers can't block cross-stage optimization there.
     */

@@ -255,8 +255,8 @@ object Multimodal {
     * lambda evaluated interpreted (CodegenFallback, substring+hex+conv
     * against the payload twice per bit, ~0.9 s/trial at sf0.1); an
     * intermediate unrolled-63-column form executed fast but cost ~1 s of
-    * Catalyst PLANNING per query (tools/Probe DECOMP=pcm3: planning
-    * 1.03 s vs 0.06 s warm execution — see ByteOps.scala). Bit-for-bit
+    * Catalyst PLANNING per query (planning 1.03 s vs 0.06 s warm
+    * execution — see ByteOps.scala). Bit-for-bit
     * equality of the kernel with the relational byte-read form is
     * spec-gated. nBits ≤ 62 keeps the signature non-negative in an
     * int64. Payloads shorter than nBits+1 bytes carry no gradient signal

@@ -3,8 +3,15 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Dev probe for stage-level timing of the hot operators (not part of the
-  * driver contract).
+/** Dev probe for plans and scaling (outside `graft.Verify`/`graft.Bench`),
+  * one mode per run, selected by env var:
+  *  - `SCALEGEN=k:dir` writes a k-x replica of SPARK_GRAFT_SF_DIR to dir;
+  *  - `SCALE=k1,k2` fits the scaling exponent of the SCALEQ entries;
+  *  - `PLANS=q1,q2` dumps each entry's formatted and AQE-final plan;
+  *  - `AUDIT=q1,q2` (the default) counts exchanges, broadcasts and codegen
+  *    stages and prints the pushed filters.
+  * Timing and per-layer attribution are the benchmark's traced run
+  * (`python3 perfbench/run.py --trace 1`), not a probe mode.
   */
 object Probe {
 
@@ -92,90 +99,10 @@ object Probe {
     val spark = SparkSession.builder()
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.codegen.maxFields", sys.env.getOrElse("MAXFIELDS", "100"))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def time(label: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val n = f
-      println(f"[probe] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
-    }
-
-    if (sys.env.contains("AQECMP")) {
-      val names = Seq("q1_pricing_agg", "snapshot_diff_updates", "pk_reconcile_missing",
-        "join_revenue_nation", "dedup_minhash_lsh", "events_sessionize")
-      def runAll(label: String): Unit = {
-        val t0 = System.nanoTime()
-        names.foreach { n =>
-          graft.SparkEntry.queries(n)(spark, sfDir).write.format("noop").mode("overwrite").save()
-        }
-        println(f"[aqe] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
-      runAll("warmup")
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      runAll("aqe on ")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      runAll("aqe off")
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      runAll("aqe on2")
-      spark.stop(); return
-    }
-    if (sys.env.contains("TOPK")) {
-      import org.apache.spark.sql.expressions.Window
-      val df = spark.range(20000000L).select(
-        (col("id") % 40).as("g"),
-        (col("id") * 2654435761L % 1000000007L).as("score"),
-        col("id"))
-      df.write.format("noop").mode("overwrite").save() // warm
-      def t(label: String)(f: => Unit): Unit = {
-        val t0 = System.nanoTime(); f
-        println(f"[topk] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
-      t("window row_number k=10") {
-        df.withColumn("rank", org.apache.spark.sql.functions.row_number().over(
-            Window.partitionBy("g").orderBy(col("score").desc, col("id"))))
-          .filter(col("rank") <= 10)
-          .write.format("noop").mode("overwrite").save()
-      }
-      t("TopKPerGroup k=10") {
-        org.apache.spark.sql.graft.TopKPerGroup(df, Seq(col("g")),
-            Seq(col("score").desc, col("id")), 10)
-          .write.format("noop").mode("overwrite").save()
-      }
-      spark.stop(); return
-    }
-    if (sys.env.contains("WINSCAN")) {
-      // Structural audit: which entries' PHYSICAL plans contain a
-      // window with an EMPTY partition spec (the "moving all data to a
-      // single partition" class)? Bounded relations (vocab tops,
-      // 1-row aggregates, ≤63-range digests) may use one legitimately —
-      // the report exists so each hit is a DECISION, not a surprise in
-      // a bench log. AQE off so the executed plan is concrete.
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      var total = 0
-      graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-        try {
-          val plan = fn(spark, sfDir).queryExecution.executedPlan
-          val hits = plan.collect {
-            case w: org.apache.spark.sql.execution.window.WindowExec
-                if w.partitionSpec.isEmpty => w.windowExpression.mkString(";").take(90)
-            case w: org.apache.spark.sql.execution.window.WindowGroupLimitExec
-                if w.partitionSpec.isEmpty => s"grouplimit ${w.rankLikeFunction}".take(90)
-          }
-          if (hits.nonEmpty) {
-            total += hits.size
-            println(s"[winscan] $name: ${hits.size} global window(s): ${hits.mkString(" | ")}")
-          }
-        } catch {
-          case e: Throwable =>
-            println(s"[winscan] $name failed to plan: ${e.getMessage}")
-        }
-      }
-      println(s"[winscan] total global-window sites: $total")
-      spark.stop(); return
-    }
     if (sys.env.contains("SCALEGEN")) {
       // Persistent scale-up dir: SCALEGEN="10:/root/repo/target/sf1"
       // builds a content-perturbed 10x replica of SPARK_GRAFT_SF_DIR
@@ -258,192 +185,6 @@ object Probe {
       dirs.drop(1).foreach { case (_, d) =>
         org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d))
       }
-      spark.stop(); return
-    }
-    // DECOMP=lsh|spans|pcm — stage-level attribution of the hot operator
-    // families: each listed sub-plan times through the noop sink, median
-    // of DECOMP_TRIALS (default 3), so the expensive stage inside a
-    // composed entry is identified by measurement, not guesswork.
-    if (sys.env.contains("DECOMP")) {
-      val docs = graft.Tables.documents(spark, sfDir)
-      import graft.operators._
-      val trials = sys.env.get("DECOMP_TRIALS").map(_.toInt).getOrElse(3)
-      // Spark-job counter: the iterative operators' cost is partly DRIVER
-      // jobs (eager checkpoints, convergence probes) that no plan shows —
-      // count them per trial so job-count claims are measured.
-      val jobCounter = new java.util.concurrent.atomic.AtomicInteger(0)
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-            jobCounter.incrementAndGet()
-        })
-      def med(label: String)(df: => DataFrame): Unit = {
-        var jobs = 0
-        val ts = (1 to trials).map { _ =>
-          System.gc()
-          val j0 = jobCounter.get()
-          val t0 = System.nanoTime()
-          df.write.format("noop").mode("overwrite").save()
-          val dt = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(300) // let the async listener bus drain
-          jobs = jobCounter.get() - j0
-          dt
-        }.sorted
-        val m = if (ts.size % 2 == 1) ts(ts.size / 2)
-                else (ts(ts.size / 2 - 1) + ts(ts.size / 2)) / 2
-        println(f"[decomp] $label%-28s median=$m%6.2f s  jobs=$jobs  (${ts.map(t => f"$t%.2f").mkString(" ")})")
-      }
-      sys.env("DECOMP") match {
-        case "lsh" =>
-          def sh = TextDedup.shingleHashTable(docs, "doc_id", "text", 3)
-          med("shingleHashTable")(sh)
-          med("sizes(groupBy doc)")(sh.groupBy("doc_id").agg(count(lit(1)).as("sz")))
-          med("bandedKeys")(TextDedup.bandedKeys(sh, 128, 32))
-          med("lshCandidates")(TextDedup.lshCandidatesFromHashes(sh, 128, 32))
-          med("minhashLshPairs(full)")(TextDedup.minhashLshPairs(
-            docs, "doc_id", "text", 3, 128, 32, 0.8))
-          med("dedupClusters(pairs)")(Clustering.dedupClusters(
-            TextDedup.minhashLshPairs(docs, "doc_id", "text", 3, 128, 32, 0.8),
-            "doc_a", "doc_b"))
-        case "spans" =>
-          med("repeatedSpans(full)")(TextDedup.repeatedSpans(
-            docs, "doc_id", "text", 15))
-          med("removeRepeatedSpans")(TextDedup.removeRepeatedSpans(
-            docs, "doc_id", "text", 15))
-        case "pcm" =>
-          med("syntheticPcm")(Multimodal.syntheticPcm(docs, "doc_id"))
-          med("audioFrameEnergy")(Multimodal.audioFrameEnergy(
-            Multimodal.syntheticPcm(docs, "doc_id"), "doc_id", "payload", 64))
-          med("perceptualHash")(Multimodal.perceptualHash(
-            Multimodal.syntheticPcm(docs, "doc_id"), "doc_id", "payload", 62))
-        case "pcm2" =>
-          val pcm = Multimodal.syntheticPcm(docs, "doc_id")
-          med("phash nBits=8")(Multimodal.perceptualHash(pcm, "doc_id", "payload", 8))
-          med("phash nBits=31")(Multimodal.perceptualHash(pcm, "doc_id", "payload", 31))
-          med("phash nBits=62")(Multimodal.perceptualHash(pcm, "doc_id", "payload", 62))
-          med("hex only")(pcm.select(col("doc_id"), hex(col("payload")).as("hx")))
-        case "pcm3" =>
-          // split planning cost from execution cost for the unrolled phash
-          val pcm = Multimodal.syntheticPcm(docs, "doc_id")
-          val ph = Multimodal.perceptualHash(pcm, "doc_id", "payload", 62)
-          val tp0 = System.nanoTime()
-          val exec = ph.queryExecution.executedPlan
-          println(f"[decomp] phash planning: ${(System.nanoTime() - tp0) / 1e9}%.2f s")
-          for (i <- 1 to 3) {
-            val t0 = System.nanoTime()
-            exec.execute().foreachPartition(
-              (_: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => ())
-            println(f"[decomp] phash execute#$i: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-          }
-        case "cc" =>
-          // r15: attribute the CC entries' job costs. (a) why does the
-          // stars edges checkpoint cost ~2.2 s warm when the propagation
-          // mirror costs ~0.15 s? (b) what does one tiny round-job cost?
-          val pairs = TextDedup.minhashLshPairs(
-            docs, "doc_id", "text", 3, 128, 32, 0.8)
-          def ckTime(label: String)(df: => DataFrame): Unit = {
-            var jobs = 0
-            var nparts = 0
-            val ts = (1 to trials).map { _ =>
-              System.gc()
-              val j0 = jobCounter.get()
-              val t0 = System.nanoTime()
-              val ck = df.localCheckpoint(true)
-              val dt = (System.nanoTime() - t0) / 1e9
-              Thread.sleep(200)
-              jobs = jobCounter.get() - j0
-              nparts = ck.rdd.getNumPartitions
-              ck.rdd.unpersist(false)
-              dt
-            }.sorted
-            println(f"[decomp] ck $label%-34s median=${ts(ts.size / 2)}%6.2f s jobs=$jobs parts=$nparts (${ts.map(t => f"$t%.2f").mkString(" ")})")
-          }
-          for ((l, d) <- Seq(
-            "mirror" -> pairs.select(explode(array(
-                struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-                struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-              .select(col("e.src").as("src"), col("e.dst").as("dst")),
-            "starsBase" -> pairs.select(least(col("doc_a"), col("doc_b")).as("src"),
-                greatest(col("doc_a"), col("doc_b")).as("dst"))
-              .filter(col("src") =!= col("dst"))))
-            println(s"[decomp] plan $l root = ${d.queryExecution.executedPlan.getClass.getSimpleName}")
-          if (sys.env.contains("CCPLAN")) {
-            val base = pairs.select(least(col("doc_a"), col("doc_b")).as("src"),
-                greatest(col("doc_a"), col("doc_b")).as("dst"))
-              .filter(col("src") =!= col("dst"))
-            val qe = base.queryExecution
-            val ck = base.localCheckpoint(true)
-            println("[decomp] === starsBase plan AFTER checkpoint ===")
-            println(qe.executedPlan.toString.take(4000))
-            println(s"[decomp] ck parts=${ck.rdd.getNumPartitions}")
-            spark.stop(); return
-          }
-          med("lsh pairs (noop)")(pairs)
-          ckTime("mirror explode (propagation)")(
-            pairs.select(explode(array(
-                struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-                struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-              .select(col("e.src").as("src"), col("e.dst").as("dst")))
-          val starsBase = pairs.select(least(col("doc_a"), col("doc_b")).as("src"),
-              greatest(col("doc_a"), col("doc_b")).as("dst"))
-            .filter(col("src") =!= col("dst"))
-          ckTime("stars base (no distinct/observe)")(starsBase)
-          ckTime("stars base + distinct")(starsBase.distinct())
-          ckTime("stars base + observe")(
-            starsBase.observe(org.apache.spark.sql.Observation(),
-              count(lit(1)).as("n")))
-          ckTime("stars base + distinct + observe")(
-            starsBase.distinct().observe(org.apache.spark.sql.Observation(),
-              count(lit(1)).as("n")))
-        case "obs" =>
-          // sanity probe: does an Observation attached below an EAGER
-          // localCheckpoint fire during the checkpoint job? (the planned
-          // CC convergence-check fusion depends on it)
-          val obs = org.apache.spark.sql.Observation()
-          val df = spark.range(1000).toDF("x")
-            .observe(obs, count(when(col("x") % 2 === 0, 1)).as("c"))
-          val ck = df.localCheckpoint(true)
-          println(s"[decomp] obs value = ${obs.get("c")} (expect 500), ck rows = ${ck.count()}")
-        case other => println(s"[decomp] unknown family: $other")
-      }
-      spark.stop(); return
-    }
-    // JOBS=all|q1,q2 — per-entry Spark-job and wall-clock census (one
-    // noop-sink run each after one warmup of the first entry), sorted by
-    // job count. Finds the driver-job-bound tail entries (r15 verdict #8):
-    // at sf0.1 an entry's cost is ≈ jobs × fixed per-job overhead, so the
-    // census ranks by the thing that actually matters.
-    if (sys.env.contains("JOBS")) {
-      val jobCounter = new java.util.concurrent.atomic.AtomicInteger(0)
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-            jobCounter.incrementAndGet()
-        })
-      val sel = sys.env("JOBS")
-      val names =
-        if (sel == "all") graft.Queries.all.map(_.name)
-        else sel.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      def once(name: String): (Int, Double) = {
-        System.gc()
-        val j0 = jobCounter.get()
-        val t0 = System.nanoTime()
-        graft.SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(200)
-        (jobCounter.get() - j0, dt)
-      }
-      once(names.head) // warmup
-      val rows = names.flatMap { n =>
-        try Some((n, once(n)))
-        catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[jobs] $n failed: ${e.getMessage}"); None }
-      }
-      for ((n, (j, t)) <- rows.sortBy(-_._2._1))
-        println(f"[jobs] $n%-40s jobs=$j%3d  $t%6.2f s")
       spark.stop(); return
     }
     // PLANS=q1,q2 PLANDIR=plans/r14 PLANSUFFIX=before — dump each entry's

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.{Queries, SparkEntry, Tables}
+import graft.{PhaseTimer, Queries, SparkEntry, Tables}
 
 /** Dev probe: the maintained-index upsert trio at scale with the publish
   * cost DECOMPOSED — standing-base ensure (cold once per corpus, then
@@ -54,7 +54,7 @@ object SwapProbe {
       println(f"[swap-probe] $label: $sec%.2f s")
       r
     }
-    def phases(prefix: String): Queries.PhaseTimer = new Queries.PhaseTimer {
+    def phases(prefix: String): PhaseTimer = new PhaseTimer {
       def apply[A](label: String)(f: => A): A = timed(s"${prefix}_$label")(f)
     }
     def read(label: String)(df: org.apache.spark.sql.DataFrame): Unit = {

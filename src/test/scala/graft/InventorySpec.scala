@@ -30,4 +30,14 @@ class InventorySpec extends AnyFunSuite {
       "ann_ivf_refined_assign", "dedup_embedding_srp"),
       s"rows-only set changed: $rowsOnly — update this spec AND SURVEY §2")
   }
+
+  test("bench exclusions and verify-slice tail name declared queries") {
+    // Bench silently ignores a stale exclusion, and VerifySlice throws
+    // on one at SparkEntry.queries(name) — catch both here instead.
+    val names = Queries.all.map(_.name).toSet
+    val staleExcluded = Bench.exclude -- names
+    assert(staleExcluded.isEmpty, s"Bench excludes unknown entries: $staleExcluded")
+    val staleTail = VerifySlice.tailEntries.filterNot(names)
+    assert(staleTail.isEmpty, s"VerifySlice tail has unknown entries: $staleTail")
+  }
 }

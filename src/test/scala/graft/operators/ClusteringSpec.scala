@@ -62,6 +62,22 @@ class ClusteringSpec extends SparkSpec {
     assert(got.size == 41 && got.values.toSet == Set(0L))
   }
 
+  test("propagation throws when a chain outruns maxIter") {
+    val chain = (0L until 40L).map(i => (i, i + 1)).toDF("a", "b")
+    val e = intercept[IllegalStateException](
+      Clustering.connectedComponents(chain, "a", "b", maxIter = 2))
+    assert(e.getMessage.contains("connectedComponents") &&
+      e.getMessage.contains("maxIter = 2"), e.getMessage)
+  }
+
+  test("stars throws when a chain outruns maxIter") {
+    val chain = (0L until 63L).map(i => (i, i + 1)).toDF("a", "b")
+    val e = intercept[IllegalStateException](
+      Clustering.connectedComponentsStars(chain, "a", "b", maxIter = 1))
+    assert(e.getMessage.contains("connectedComponentsStars") &&
+      e.getMessage.contains("maxIter = 1"), e.getMessage)
+  }
+
   test("both variants handle an empty pair relation") {
     // r14: stars' initial-emptiness probe rides an Observation on the
     // edge checkpoint; propagation's first round must see changed = 0.
