@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Throughput benchmark over the operator inventory at
   * SPARK_GRAFT_SF_DIR (default sf0.1). Prints ONE JSON line:
   * {"metric":"total","value":sec,"unit":"sec","queries":{name:sec,...},"sf":dir}
@@ -38,7 +36,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Codec pin (zstd): the sf100 spill regime needs it (halves spill
     // bytes; lz4 killed the shingle family on local scratch —
     // BENCH_SF100_SPILL.json), and the in-memory regime is insensitive —
@@ -52,14 +49,7 @@ object Bench {
     // codec set before it can corrupt either.
     require(Set("lz4", "zstd", "snappy", "lzf").contains(codec),
       s"SPARK_GRAFT_CODEC must be one of lz4/zstd/snappy/lzf, got: $codec")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.io.compression.codec", codec)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Mains.session("spark.io.compression.codec" -> codec)
 
     def run(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)
@@ -68,9 +58,7 @@ object Bench {
     run("q1_pricing_agg") // warmup, untimed
 
     // Dev aid: SPARK_GRAFT_ONLY=q1,q2 benches a subset (same timing path).
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val names = Queries.all.map(_.name).filterNot(exclude)
-      .filter(n => only.forall(_.contains(n)))
+    val names = Queries.all.map(_.name).filterNot(exclude).filter(Mains.keep)
     // Single-sample wall clocks at sf0.1 carry ±35% machine noise (SURVEY
     // §6) — report the per-query MEDIAN over ≥3 trials so a 2x comparison
     // against the baseline is actually measurable.

@@ -1025,28 +1025,29 @@ object Queries {
     new org.apache.hadoop.fs.Path(
       s.conf.get("spark.sql.warehouse.dir"), name.toLowerCase + ".txt")
 
-  /** The stamped fingerprint, or None when absent/unreadable (a build
-    * that crashed mid-stamp reads as stale and triggers a rebuild).
+  /** Runs `build` and then stamps `fp` under `name`. The fingerprint is
+    * taken BEFORE the build, so a corpus rewritten mid-build stamps stale
+    * (the next ensure rebuilds) rather than fresh.
     */
-  private def stampedFingerprint(s: SparkSession, name: String): Option[Long] = {
-    val p = fprintPath(s, name)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    try {
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        try Some(new String(in.readAllBytes(), "UTF-8").trim.toLong)
-        finally in.close()
-      }
-    } catch { case _: Exception => None }
+  private def stampedBuild[T](s: SparkSession, name: String, fp: => Long)
+                             (build: => T): T = {
+    val stamp = fp
+    val out = build
+    graft.sources.MetaFiles.replace(s, fprintPath(s, name), stamp.toString)
+    out
   }
 
-  private def stampFingerprint(s: SparkSession, name: String, fp: Long): Unit = {
-    val p = fprintPath(s, name)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(fp.toString.getBytes("UTF-8")) finally out.close()
-  }
+  /** The one stamp check of every standing-state ensure: `fresh` when
+    * the stamp `name` holds `fp` and the tables are `present` (registered,
+    * or adopted from disk — checked only after the stamp matched, since
+    * only a fresh corpus is worth adopting); otherwise [[stampedBuild]].
+    * A missing or unparsable stamp reads as stale.
+    */
+  private def ensureStamped[T](s: SparkSession, name: String, fp: => Long)
+                              (present: => Boolean)(fresh: => T)(build: => T): T =
+    if (graft.sources.MetaFiles.read(s, fprintPath(s, name))
+          .flatMap(_.trim.toLongOption).contains(fp) && present) fresh
+    else stampedBuild(s, name, fp)(build)
 
   private def dedupFprintName(d: String): String =
     "dedup_fprint_" + d.replaceAll("[^A-Za-z0-9]", "_")
@@ -1075,9 +1076,6 @@ object Queries {
   }
 
   private def buildDedupIndex(s: SparkSession, d: String): Unit = {
-    // Fingerprint BEFORE reading, so a corpus rewritten mid-build is
-    // stamped stale (the next ensure rebuilds) rather than fresh.
-    val fp = corpusFingerprint(s, d)
     val pairs = TextDedup.minhashLshPairs(Tables.documents(s, d), "doc_id",
       "text", n = 3, numPerm = 128, bands = 32, threshold = 0.8)
     graft.sources.ParquetSink.writeBucketedSnapshot(pairs,
@@ -1087,7 +1085,6 @@ object Queries {
       .select("doc_id", "cluster_id")
     graft.sources.ParquetSink.writeBucketedSnapshot(clusters,
       dedupClustersTable(d), Seq("doc_id"), buckets = 16)
-    stampFingerprint(s, dedupFprintName(d), fp)
   }
 
   /** Builds the index when it is absent OR its stamped corpus
@@ -1099,11 +1096,10 @@ object Queries {
     def present(t: String, cols: Seq[String]) =
       s.catalog.tableExists(t) ||
         graft.sources.ParquetSink.adoptBucketedTable(s, t, cols, cols, 16)
-    val fresh =
-      stampedFingerprint(s, dedupFprintName(d)).contains(corpusFingerprint(s, d)) &&
+    ensureStamped(s, dedupFprintName(d), corpusFingerprint(s, d))(
       present(dedupPairsTable(d), Seq("doc_a")) &&
-      present(dedupClustersTable(d), Seq("doc_id"))
-    if (!fresh) buildDedupIndex(s, d)
+        present(dedupClustersTable(d), Seq("doc_id")))(())(
+      buildDedupIndex(s, d))
   }
 
   /** Standing index for `dedup_cluster_index_upsert` (pairs + banded
@@ -1150,18 +1146,11 @@ object Queries {
     */
   private def ensurePublishedVersion(s: SparkSession, v2Tbls: Seq[String],
       fprintName: String, fp: => Long)(apply: => DataFrame)
-      (read: => DataFrame): DataFrame = {
-    val fresh = stampedFingerprint(s, fprintName).contains(fp) &&
-      v2Tbls.forall(t => s.catalog.tableExists(t) ||
-        graft.sources.ParquetSink.adoptPublishedVersion(s, t))
-    if (fresh) read
-    else {
-      val stamp = fp
-      val out = apply // publishes eagerly (collects + swap inside)
-      stampFingerprint(s, fprintName, stamp)
-      out
-    }
-  }
+      (read: => DataFrame): DataFrame =
+    ensureStamped(s, fprintName, fp)(v2Tbls.forall(t =>
+        s.catalog.tableExists(t) ||
+          graft.sources.ParquetSink.adoptPublishedVersion(s, t)))(read)(
+      apply) // publishes eagerly (collects + swap inside)
 
   /** `ann_ivf_index_upsert`'s APPLY body (standing base ensured by the
     * caller): carry-over parts → partition-location-swap publish →
@@ -1374,11 +1363,9 @@ object Queries {
       s.catalog.tableExists(t) ||
         graft.sources.ParquetSink.adoptPartitionedTable(s, t, partCol,
           "BIGINT")
-    val fresh = stampedFingerprint(s, fprintName).contains(salted) &&
+    ensureStamped(s, fprintName, salted)(
       present(pairsTbl, "pa_part") && present(lshTbl, "dk_part") &&
-      present(clusTbl, "dc_part")
-    if (!fresh) {
-      val fp = salted
+        present(clusTbl, "dc_part"))(()) {
       val p = lit(parts)
       // rebuilding the bases retires their published versions first
       // (the ownership ledger refuses to overwrite referenced files);
@@ -1411,7 +1398,6 @@ object Queries {
           .select("doc_id", "cluster_id")
           .withColumn("dc_part", pmod(col("doc_id"), p)),
         clusTbl, "dc_part", Seq("doc_id"))
-      stampFingerprint(s, fprintName, fp)
     }
   }
 
@@ -5573,7 +5559,8 @@ object Queries {
       // write→read round trip lossless end-to-end; the four dedup
       // reports then price as reads of these tables.
       (s, d) => {
-        buildDedupIndex(s, d)
+        stampedBuild(s, dedupFprintName(d), corpusFingerprint(s, d))(
+          buildDedupIndex(s, d))
         s.table(dedupClustersTable(d))
       },
       Some(s"""WITH RECURSIVE pr AS (${jaccardPairsSql(0.8)}),
@@ -5747,16 +5734,11 @@ object Queries {
                                  (build: => DataFrame): Unit = {
     // fresh-JVM adoption, as in ensurePartitionedIndex: re-register the
     // on-disk bucketed table instead of rebuilding a fresh index
-    val fresh = stampedFingerprint(s, tbl + "_fprint").contains(fp) &&
-      (s.catalog.tableExists(tbl) ||
+    ensureStamped(s, tbl + "_fprint", fp)(s.catalog.tableExists(tbl) ||
         graft.sources.ParquetSink.adoptBucketedTable(s, tbl, bucketCols,
-          bucketCols, 16))
-    if (!fresh) {
-      val stamp = fp
+          bucketCols, 16))(())(
       graft.sources.ParquetSink.writeBucketedSnapshot(build, tbl,
-        bucketCols, buckets = 16)
-      stampFingerprint(s, tbl + "_fprint", stamp)
-    }
+        bucketCols, buckets = 16))
   }
 
   /** [[ensureBucketedIndex]]'s twin for standing tables maintained by
@@ -5775,22 +5757,16 @@ object Queries {
                                     (build: => DataFrame): Unit = {
     // the salt versions the LAYOUT+DIFF-SHAPE era: a stamp written by
     // the bucketed-layout (or old diff) build of the same corpus must
-    // read as stale, not fresh
-    def salted = fp ^ 0x50415254L
-    // a fresh JVM forgets the catalog entry while the table's data and
-    // stamp persist — ADOPT the on-disk table instead of rebuilding the
-    // corpus-sized index (stamp checked first: only a fresh corpus is
-    // worth adopting)
-    val fresh = stampedFingerprint(s, tbl + "_fprint").contains(salted) &&
-      (s.catalog.tableExists(tbl) ||
+    // read as stale, not fresh. A fresh JVM forgets the catalog entry
+    // while the table's data and stamp persist — ADOPT the on-disk table
+    // instead of rebuilding the corpus-sized index.
+    ensureStamped(s, tbl + "_fprint", fp ^ 0x50415254L)(
+      s.catalog.tableExists(tbl) ||
         graft.sources.ParquetSink.adoptPartitionedTable(s, tbl, partCol,
-          "BIGINT"))
-    if (!fresh) {
-      val stamp = salted
+          "BIGINT"))(()) {
       dependents.foreach(graft.sources.ParquetSink.dropIndexVersion(s, _))
       graft.sources.ParquetSink.writePartitionedSnapshot(build, tbl,
         partCol, sortCols)
-      stampFingerprint(s, tbl + "_fprint", stamp)
     }
   }
 

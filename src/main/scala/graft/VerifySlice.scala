@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.expr
 
 /** Deterministic hash-slice oracle gate for the heavy tail — the entries
@@ -53,14 +52,7 @@ object VerifySlice {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Mains.session()
     val sliceDir = s"$outDir/slicedata"
     new java.io.File(sliceDir).mkdirs()
     for ((t, idCol) <- sliced)
@@ -84,41 +76,10 @@ object VerifySlice {
       }
       if (!Files.isSymbolicLink(link)) Files.createSymbolicLink(link, target)
     }
-    val only: Set[String] =
-      sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-        .getOrElse(Set.empty)
-    def keep(name: String): Boolean = only.isEmpty || only(name)
-    def q0(s: String): String = "\"" + s + "\"" // names are identifier-safe
-    // Attempted manifest BEFORE the loop (the Verify convention): a
-    // crashed entry scores FAIL, a not-in-subset entry scores skip —
-    // without this, a subset smoke run mis-flags every other tail entry.
-    Files.writeString(Paths.get(s"$outDir/attempted.json"),
-      tailEntries.filter(keep).sorted.map(q0).mkString("[", ",", "]"))
-    for (name <- tailEntries if keep(name)) {
-      val t0 = System.nanoTime()
-      try {
-        SparkEntry.queries(name)(spark, sliceDir).coalesce(1)
-          .write.mode("overwrite").parquet(s"$outDir/$name")
-        println(f"[slice] $name ok in ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      } catch { case e: Throwable =>
-        System.err.println(s"[slice] $name failed: ${e.getMessage}")
-      }
-    }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // All tail oracles, not just the SPARK_GRAFT_ONLY subset: a resumed
     // run that recomputes the missing outputs still scores the full set.
-    val json = SparkEntry.oracleSql
-      .filter(kv => tailEntries.contains(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Verify.dump(spark, sliceDir, outDir, tailEntries.filter(Mains.keep),
+      tailEntries)
     spark.stop()
   }
 }

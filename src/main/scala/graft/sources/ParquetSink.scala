@@ -251,7 +251,9 @@ object ParquetSink {
     * silently dangling that version — the ownership rule snapshot table
     * formats get from manifest refcounts. The ledger is a FILE (not
     * catalog state) so the guard survives the in-memory catalog's
-    * per-JVM lifetime.
+    * per-JVM lifetime; it is replaced whole by [[MetaFiles.replace]], so
+    * a crash never leaves a torn ledger that fails to pin a live
+    * directory.
     */
   private def refsPath(spark: org.apache.spark.sql.SparkSession,
                        tableName: String): org.apache.hadoop.fs.Path =
@@ -261,14 +263,16 @@ object ParquetSink {
 
   private def writeRefs(spark: org.apache.spark.sql.SparkSession,
                         tableName: String,
-                        dirs: Iterable[org.apache.hadoop.fs.Path]): Unit = {
-    val p = refsPath(spark, tableName)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(dirs.map(d => qualified(spark, d).toString).toSeq.sorted
-      .mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-  }
+                        dirs: Iterable[org.apache.hadoop.fs.Path]): Unit =
+    MetaFiles.replace(spark, refsPath(spark, tableName),
+      dirs.map(d => qualified(spark, d).toString).toSeq.sorted.mkString("\n"))
+
+  /** Lines of one refs ledger, or None when it does not exist (a
+    * compacted version owns every partition and legitimately has none).
+    */
+  private def readLedger(spark: org.apache.spark.sql.SparkSession,
+                         p: org.apache.hadoop.fs.Path): Option[Seq[String]] =
+    MetaFiles.read(spark, p).map(_.split("\n").toSeq.filter(_.nonEmpty))
 
   private def qualified(spark: org.apache.spark.sql.SparkSession,
                         p: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.Path =
@@ -292,11 +296,8 @@ object ParquetSink {
       .filter(st => !st.isDirectory && st.getPath.getName.endsWith("__refs.txt"))
       .filterNot(st => ownRefs.contains(st.getPath.getName))
       .foreach { st =>
-        val in = fs.open(st.getPath)
-        val lines = try new String(in.readAllBytes(), "UTF-8").split("\n")
-                    finally in.close()
-        val hit = lines.exists(l => l.nonEmpty &&
-          (l == target || l.startsWith(target + "/") || target.startsWith(l + "/")))
+        val hit = readLedger(spark, st.getPath).getOrElse(Nil).exists(l =>
+          l == target || l.startsWith(target + "/") || target.startsWith(l + "/"))
         if (hit) {
           val version = st.getPath.getName.stripSuffix("__refs.txt")
           throw new IllegalStateException(
@@ -319,14 +320,16 @@ object ParquetSink {
   }
 
   /** Single-writer publish lock: `warehouse/<v2 table>__publish.lock`,
-    * taken with an atomic create-if-absent before any publish state is
-    * read. Two concurrent publishers of one version name would race the
-    * generation scan and the `__stage` table/ledger names — the second
-    * acquirer is REFUSED instead (the single-writer-per-index contract
-    * of any snapshot-format commit, now detected rather than assumed).
-    * A publisher that dies mid-run leaves its lock behind: recovery is
-    * explicit — delete the lock file, or [[dropIndexVersion]], which
-    * clears it along with the version.
+    * a [[MetaFiles.withLock]] that refuses at once, taken before any
+    * publish state is read. Two concurrent publishers of one version
+    * name would race the generation scan and the `__stage` table/ledger
+    * names — the second acquirer is REFUSED instead (the
+    * single-writer-per-index contract of any snapshot-format commit, now
+    * detected rather than assumed), whether it runs in another thread of
+    * this JVM or in another process. A publisher that dies mid-run
+    * leaves its lock behind: recovery is explicit — delete the lock file,
+    * [[breakStalePublishLock]], or [[dropIndexVersion]], which clears it
+    * along with the version.
     */
   private def publishLockPath(spark: org.apache.spark.sql.SparkSession,
                               v2Table: String): org.apache.hadoop.fs.Path =
@@ -334,27 +337,15 @@ object ParquetSink {
       spark.conf.get("spark.sql.warehouse.dir"),
       v2Table.toLowerCase + "__publish.lock")
 
-  private def acquirePublishLock(spark: org.apache.spark.sql.SparkSession,
-                                 v2Table: String): org.apache.hadoop.fs.Path = {
+  private def withPublishLock[T](spark: org.apache.spark.sql.SparkSession,
+                                 v2Table: String)(body: => T): T = {
     val p = publishLockPath(spark, v2Table)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(p.getParent)
-    // create(overwrite = false) is the CAS: exactly one concurrent
-    // caller wins on any Hadoop filesystem
-    val out = try fs.create(p, false)
-    catch {
-      case e: java.io.IOException =>
-        throw new IllegalStateException(
-          s"cannot acquire the publish lock for '$v2Table' ($p): a " +
-          "concurrent publish appears to be in progress (publishes are " +
-          "single-writer per index). If the prior publisher crashed, " +
-          "delete the lock file (or dropIndexVersion the version) and " +
-          s"rerun. Underlying: ${e.getMessage}")
-    }
-    try out.write((s"pid=${ProcessHandle.current().pid()} " +
-      s"ts=${System.currentTimeMillis()}").getBytes("UTF-8"))
-    finally out.close()
-    p
+    MetaFiles.withLock(spark, p, 0, e =>
+      s"cannot acquire the publish lock for '$v2Table' ($p): a " +
+      "concurrent publish appears to be in progress (publishes are " +
+      "single-writer per index). If the prior publisher crashed, " +
+      "delete the lock file (or dropIndexVersion the version) and " +
+      s"rerun. Underlying: ${e.getMessage}")(body)
   }
 
   /** Existing generation numbers of `v2Table`'s delta/root directories
@@ -404,13 +395,14 @@ object ParquetSink {
     * `v2Table`, rename staging) is the LAST step, so a failure
     * mid-publish leaves the previous version's files and ledger intact
     * (rerun to recover — the staging name is reclaimed). Single-writer
-    * per index is ENFORCED, not assumed: a warehouse lock file taken
-    * with an atomic create-if-absent refuses a second concurrent
-    * publisher (see [[acquirePublishLock]]); a crashed publisher's lock
-    * is cleared by deleting the file or [[dropIndexVersion]]. The
-    * commit also persists a per-version partition MANIFEST, so the
-    * published version survives JVM restarts via
-    * [[adoptPublishedVersion]] instead of needing a republish.
+    * per index is ENFORCED, not assumed: the publish lock refuses a
+    * second concurrent publisher (see [[withPublishLock]]); a crashed
+    * publisher's lock is cleared by deleting the file or
+    * [[dropIndexVersion]]. The commit also persists a per-version
+    * partition MANIFEST, so the published version survives JVM restarts
+    * via [[adoptPublishedVersion]] instead of needing a republish. Every
+    * metadata write of the commit (ledgers, manifest) and the lock go
+    * through [[MetaFiles]].
     *
     * @param baseTable the standing index ([[writePartitionedSnapshot]]
     *                  layout, or a previously published version —
@@ -432,11 +424,8 @@ object ParquetSink {
                            timer: graft.PhaseTimer = graft.NoTimer): Unit = {
     require(baseTable.toLowerCase != v2Table.toLowerCase,
       "publish target must differ from the base table")
-    val lock = acquirePublishLock(spark, v2Table)
-    try publishPartitionSwapLocked(spark, baseTable, v2Table, partCol,
-      affected, deltaRows, sortCols, timer)
-    finally lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(lock, false)
+    withPublishLock(spark, v2Table)(publishPartitionSwapLocked(spark,
+      baseTable, v2Table, partCol, affected, deltaRows, sortCols, timer))
   }
 
   private def publishPartitionSwapLocked(
@@ -534,10 +523,10 @@ object ParquetSink {
     * equivalent of reopening a snapshot format's table metadata file
     * (the reference gets this durability from Iceberg's persisted
     * manifests: /root/reference/glue/sbin/keyspaces/
-    * CQLReplicator.scala:1249-1462). Committed via temp-file + rename
-    * (the SnapshotStore `_MANIFEST` discipline) so readers never see a
-    * torn map; a crash between delete and rename leaves NO manifest,
-    * which reads as "not adoptable" and falls back to republish.
+    * CQLReplicator.scala:1249-1462). Committed by [[MetaFiles.replace]]
+    * (the SnapshotStore `_MANIFEST` path) so readers never see a torn
+    * or missing map: a crash mid-commit leaves the previous manifest in
+    * place, plus a `.__tmp` file fsck reports.
     */
   private def manifestPath(spark: org.apache.spark.sql.SparkSession,
                            tableName: String): org.apache.hadoop.fs.Path =
@@ -550,9 +539,6 @@ object ParquetSink {
                                    partCol: String, partColTypeSql: String,
                                    dataCols: Seq[org.apache.spark.sql.types.StructField],
                                    parts: Map[String, org.apache.hadoop.fs.Path]): Unit = {
-    val p = manifestPath(spark, v2Table)
-    val tmp = new org.apache.hadoop.fs.Path(p.getParent, p.getName + ".__tmp")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // partition values hide behind the same %XX escaping the hive dir
     // names use (covers tab/newline/quote), locations are qualified URIs
     val lines = Seq(
@@ -565,11 +551,7 @@ object ParquetSink {
       org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
         .escapePathName(v) + "\t" + qualified(spark, loc).toString
     }
-    val out = fs.create(tmp, true)
-    try out.write(lines.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    fs.delete(p, false)
-    fs.rename(tmp, p)
+    MetaFiles.replace(spark, manifestPath(spark, v2Table), lines.mkString("\n"))
   }
 
   /** Parsed form of a version manifest: (generation, partCol,
@@ -583,14 +565,9 @@ object ParquetSink {
     * that is "republish" — adopt — or a finding — fsck).
     */
   private def readVersionManifest(spark: org.apache.spark.sql.SparkSession,
-      v2Table: String): Option[scala.util.Try[ParsedManifest]] = {
-    val p = manifestPath(spark, v2Table)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return None
-    Some(scala.util.Try {
-      val in = fs.open(p)
-      val lines = try new String(in.readAllBytes(), "UTF-8").split("\n", -1)
-                  finally in.close()
+      v2Table: String): Option[scala.util.Try[ParsedManifest]] =
+    MetaFiles.read(spark, manifestPath(spark, v2Table)).map(text => scala.util.Try {
+      val lines = text.split("\n", -1)
       require(lines.head == "graft-swap-manifest v1",
         s"unknown manifest header: ${lines.head}")
       def field(i: Int, key: String): String = {
@@ -610,7 +587,6 @@ object ParquetSink {
       }.toSeq
       (gen, partCol, partColType, cols, parts)
     })
-  }
 
   /** Re-registers a swap-published version from its persisted MANIFEST
     * alone — the fresh-JVM recovery [[adoptPartitionedTable]] cannot
@@ -626,7 +602,7 @@ object ParquetSink {
     * publishes behave identically (spec-proven).
     *
     * Concurrency: adoption takes NO lock. The manifest is replaced
-    * atomically (temp + rename), so an adopt racing a publish sees
+    * atomically ([[MetaFiles.replace]]), so an adopt racing a publish sees
     * either the previous version's complete map or the new one; a
     * reader adopting while the publish's GC deletes a superseded
     * generation can transiently get `false` (vanished-dir refusal) —
@@ -800,10 +776,8 @@ object ParquetSink {
         adoptPublishedVersion(spark, v2Table),
       s"compactPublishedVersion('$v2Table'): no such live version (not " +
       "registered this JVM and no adoptable manifest)")
-    val lock = acquirePublishLock(spark, v2Table)
-    try compactPublishedVersionLocked(spark, v2Table, partCol, sortCols, timer)
-    finally lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(lock, false)
+    withPublishLock(spark, v2Table)(
+      compactPublishedVersionLocked(spark, v2Table, partCol, sortCols, timer))
   }
 
   private def compactPublishedVersionLocked(
@@ -868,7 +842,7 @@ object ParquetSink {
     * returns true only when its last filesystem modification is at
     * least `maxAgeMs` old; a younger lock (a publish presumed live) is
     * left in place (false), as is an absent one. Modification time is
-    * the authority — the pid/ts payload [[acquirePublishLock]] writes
+    * the authority — the pid/ts payload [[MetaFiles.withLock]] writes
     * is informational only (a pid means nothing across hosts). Pick a
     * threshold comfortably above the family's longest observed publish;
     * a publisher alive-but-stalled past it loses its lock, the same
@@ -885,22 +859,6 @@ object ParquetSink {
         fs.getFileStatus(p).getModificationTime
       age >= maxAgeMs && fs.delete(p, false)
     }.getOrElse(false) // vanished between probe and stat = already freed
-  }
-
-  /** Lines of a table's refs ledger, or None when no ledger exists (a
-    * compacted version owns every partition and legitimately has none).
-    */
-  private def readRefs(spark: org.apache.spark.sql.SparkSession,
-                       tableName: String): Option[Seq[String]] = {
-    val p = refsPath(spark, tableName)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val lines = try new String(in.readAllBytes(), "UTF-8").split("\n")
-                  finally in.close()
-      Some(lines.toSeq.filter(_.nonEmpty))
-    }
   }
 
   /** True when any live ledger (any version's, including `owner`'s own if
@@ -1004,7 +962,7 @@ object ParquetSink {
         val partQ = parts.map { case (v, loc) =>
           v -> qualified(spark, loc).toString }
         val foreign = partQ.filterNot { case (_, q) => isOwn(q) }
-        val refs = readRefs(spark, v2Table).getOrElse(Nil)
+        val refs = readLedger(spark, refsPath(spark, v2Table)).getOrElse(Nil)
         def pinned(q: String) =
           refs.exists(r => q == r || q.startsWith(r + "/"))
         foreign.foreach { case (v, q) =>
@@ -1057,8 +1015,7 @@ object ParquetSink {
     if (fs.exists(refsPath(spark, v2Table + "__stage")))
       report("warn", "stage-leftover",
         s"staging ledger ${refsPath(spark, v2Table + "__stage")}")
-    val mf = manifestPath(spark, v2Table)
-    val mfTmp = new org.apache.hadoop.fs.Path(mf.getParent, mf.getName + ".__tmp")
+    val mfTmp = MetaFiles.tmpPath(manifestPath(spark, v2Table))
     if (fs.exists(mfTmp))
       report("warn", "manifest-tmp-leftover", mfTmp.toString)
     val lock = publishLockPath(spark, v2Table)
@@ -1092,8 +1049,7 @@ object ParquetSink {
       case Some(scala.util.Success(m)) => m
       case _ => return false
     }
-    val lock = acquirePublishLock(spark, v2Table)
-    try {
+    withPublishLock(spark, v2Table) {
       val (_, _, _, _, parts) = parsed
       val ownPrefixes = generations(spark, v2Table).flatMap(g => Seq(
         qualified(spark, tableLocation(spark, s"${v2Table}_delta_g$g")).toString,
@@ -1109,8 +1065,7 @@ object ParquetSink {
           .delete(rp, false)
       } else writeRefs(spark, v2Table, foreign)
       true
-    } finally lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(lock, false)
+    }
   }
 
   /** Warehouse-wide [[fsckPublishedVersion]]: every version with a
@@ -1157,7 +1112,7 @@ object ParquetSink {
     fs.delete(refsPath(spark, v2Table + "__stage"), false)
     val mf = manifestPath(spark, v2Table)
     fs.delete(mf, false)
-    fs.delete(new org.apache.hadoop.fs.Path(mf.getParent, mf.getName + ".__tmp"), false)
+    fs.delete(MetaFiles.tmpPath(mf), false)
     // a lock left by a crashed publisher: dropping the version IS the
     // documented recovery, so clear it here
     fs.delete(publishLockPath(spark, v2Table), false)

@@ -36,8 +36,8 @@ object SnapshotStore {
   // ------------------------------------------------------------- manifest
 
   /** The per-table commit manifest: one `<id>\t<dirName>` line per live
-    * snapshot, re-written whole and swapped in with an atomic
-    * rename-overwrite on every commit. Readers resolve ids and data
+    * snapshot, re-written whole and swapped in atomically by
+    * [[MetaFiles.replace]] on every commit. Readers resolve ids and data
     * directories from ONE manifest read, a maintenance rewrite is
     * invisible until its commit, and every directory a committed
     * manifest references stays on disk until [[vacuum]] — so a reader
@@ -49,94 +49,33 @@ object SnapshotStore {
   private def manifestPath(root: String, table: String) =
     new Path(s"${tableDir(root, table)}/_MANIFEST")
 
-  // All manifest IO goes through FileContext: its local implementation is
-  // raw (no sidecar .crc files that a FileSystem-created file would leave
-  // behind for the rename to orphan) and its rename supports the atomic
-  // OVERWRITE pointer swap plain FileSystem.rename refuses.
-  private def manifestFc(spark: SparkSession, root: String, table: String) =
-    org.apache.hadoop.fs.FileContext.getFileContext(
-      manifestPath(root, table).toUri, spark.sparkContext.hadoopConfiguration)
-
   private def readManifest(spark: SparkSession, root: String,
-                           table: String): Option[Map[Long, String]] = {
-    val fc = manifestFc(spark, root, table)
-    val p = manifestPath(root, table)
-    if (!fc.util.exists(p)) None
-    else {
-      val in = fc.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      Some(text.linesIterator.filter(_.nonEmpty).map { line =>
+                           table: String): Option[Map[Long, String]] =
+    MetaFiles.read(spark, manifestPath(root, table)).map(
+      _.linesIterator.filter(_.nonEmpty).map { line =>
         val Array(id, dir) = line.split('\t')
         id.toLong -> dir
       }.toMap)
-    }
-  }
 
-  /** Serializes manifest read-modify-commit sections across committers.
-    * Without it, compact republishing id 5 while the replication loop
-    * lands id 6 would each rewrite the whole manifest from their own
-    * stale read and the last writer would silently drop the other's
-    * snapshot.
-    *
-    * Two layers: a per-(root, table) JVM monitor — EXACT for the common
-    * deployment where every committer of a table (streaming sink +
-    * maintenance) runs in one driver JVM — plus an exclusive-create lock
-    * file as the cross-process advisory (create-if-absent is atomic on
-    * HDFS-compatible stores; the local RawLocalFileSystem's non-atomic
-    * create is exactly why the JVM monitor is the first layer). A
-    * crashed holder leaves the lock file behind; acquisition times out
-    * with the path in the error so the operator can remove it.
+  /** Serializes manifest read-modify-commit sections across committers
+    * ([[MetaFiles.withLock]], waiting up to 60 s). Without it, compact
+    * republishing id 5 while the replication loop lands id 6 would each
+    * rewrite the whole manifest from their own stale read and the last
+    * writer would silently drop the other's snapshot.
     */
-  private val tableMonitors =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
   private def withManifestLock[T](spark: SparkSession, root: String,
-                                  table: String, timeoutMs: Long = 60000)
-                                 (body: => T): T = {
-    val monitor = tableMonitors.computeIfAbsent(
-      tableDir(root, table), _ => new Object)
-    monitor.synchronized {
-      val fc = manifestFc(spark, root, table)
-      val lock = new Path(s"${tableDir(root, table)}/._MANIFEST.lock")
-      val deadline = System.nanoTime() + timeoutMs * 1000000L
-      var acquired = false
-      while (!acquired) {
-        try {
-          val out = fc.create(lock,
-            java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE),
-            org.apache.hadoop.fs.Options.CreateOpts.createParent())
-          out.close()
-          acquired = true
-        } catch {
-          case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-               _: java.nio.file.FileAlreadyExistsException =>
-            if (System.nanoTime() > deadline)
-              throw new IllegalStateException(
-                s"could not acquire $lock within ${timeoutMs}ms — another " +
-                  "committer is running, or a crashed one left the lock behind")
-            Thread.sleep(50)
-        }
-      }
-      try body finally fc.delete(lock, false)
-    }
+                                  table: String)(body: => T): T = {
+    val lock = new Path(s"${tableDir(root, table)}/._MANIFEST.lock")
+    val waitMs = 60000L
+    MetaFiles.withLock(spark, lock, waitMs, _ =>
+      s"could not acquire $lock within ${waitMs}ms — another " +
+        "committer is running, or a crashed one left the lock behind")(body)
   }
 
   private def commitManifest(spark: SparkSession, root: String, table: String,
-                             entries: Map[Long, String]): Unit = {
-    val fc = manifestFc(spark, root, table)
-    val dst = manifestPath(root, table)
-    val tmp = new Path(s"${tableDir(root, table)}/._MANIFEST.tmp")
-    val out = fc.create(tmp, java.util.EnumSet.of(
-      org.apache.hadoop.fs.CreateFlag.CREATE,
-      org.apache.hadoop.fs.CreateFlag.OVERWRITE),
-      org.apache.hadoop.fs.Options.CreateOpts.createParent())
-    try out.write(entries.toSeq.sortBy(_._1)
-      .map { case (id, dir) => s"$id\t$dir" }.mkString("", "\n", "\n")
-      .getBytes("UTF-8"))
-    finally out.close()
-    fc.rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
+                             entries: Map[Long, String]): Unit =
+    MetaFiles.replace(spark, manifestPath(root, table), entries.toSeq.sortBy(_._1)
+      .map { case (id, dir) => s"$id\t$dir" }.mkString("", "\n", "\n"))
 
   /** Live (id → data dir name) entries: the manifest when present, else
     * the legacy directory listing (only parseable `snap=<long>` names;

@@ -96,12 +96,7 @@ object Probe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Mains.session()
 
     if (sys.env.contains("SCALEGEN")) {
       // Persistent scale-up dir: SCALEGEN="10:/root/repo/target/sf1"

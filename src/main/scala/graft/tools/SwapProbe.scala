@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.{PhaseTimer, Queries, SparkEntry, Tables}
@@ -30,20 +29,13 @@ object SwapProbe {
   def main(args: Array[String]): Unit = {
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "target/sf100")
     val out = sys.env.getOrElse("SWAP_PROBE_OUT", "/tmp/swap_probe.json")
-    val s = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_CODEC", "zstd"))
+    val s = graft.Mains.session(
+      "spark.io.compression.codec" -> sys.env.getOrElse("SPARK_GRAFT_CODEC", "zstd"),
       // own warehouse NEXT TO the replica: the probe's corpus-sized
       // standing tables must not pollute the repo warehouse the bench
       // and verify mains run against (adoption makes them durable here)
-      .config("spark.sql.warehouse.dir",
+      "spark.sql.warehouse.dir" ->
         sys.env.getOrElse("SWAP_PROBE_WAREHOUSE", "target/sf100_wh"))
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
 
     val results = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     def timed[A](label: String)(f: => A): A = {

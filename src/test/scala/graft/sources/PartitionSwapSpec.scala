@@ -407,6 +407,46 @@ class PartitionSwapSpec extends SparkSpec {
     assert(!fs.exists(lock))
   }
 
+  test("publish lock: two publishers of one version in one JVM, one refused") {
+    val s = spark
+    import s.implicits._
+    reclaim("pswap_v2c")
+    mkBase("pswap_base_c")
+    val delta = Seq((9L, "i", 20L)).toDF("id", "payload", "bucket")
+    val start = new java.util.concurrent.CyclicBarrier(2)
+    val refused = new java.util.concurrent.CountDownLatch(1)
+    // the lock holder waits in its first phase until the other publisher
+    // has been refused, so the two publishes always overlap
+    val holdUntilRefused = new graft.PhaseTimer {
+      def apply[A](label: String)(f: => A): A = {
+        refused.await(30, java.util.concurrent.TimeUnit.SECONDS); f
+      }
+    }
+    val outcomes = new java.util.concurrent.ConcurrentLinkedQueue[Either[Throwable, Unit]]()
+    val threads = (1 to 2).map { _ =>
+      new Thread(() => {
+        start.await()
+        outcomes.add(
+          try Right(ParquetSink.publishPartitionSwap(spark, "pswap_base_c",
+            "pswap_v2c", "bucket", Set("20"), delta, timer = holdUntilRefused))
+          catch { case e: Throwable => refused.countDown(); Left(e) })
+      })
+    }
+    threads.foreach(_.start()); threads.foreach(_.join())
+    val (failed, ok) = outcomes.toArray.toSeq
+      .map(_.asInstanceOf[Either[Throwable, Unit]]).partition(_.isLeft)
+    assert(ok.size == 1 && failed.size == 1, outcomes)
+    val ex = failed.head.swap.toOption.get
+    assert(ex.isInstanceOf[IllegalStateException] &&
+      ex.getMessage.contains("publish lock for 'pswap_v2c'"), ex)
+    assert(asSet("pswap_v2c") ===
+      baseRows.toSet -- Set((4L, "d", 20L), (5L, "e", 20L)) + ((9L, "i", 20L)))
+    val lock = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir"), "pswap_v2c__publish.lock")
+    assert(!lock.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(lock))
+    reclaim("pswap_v2c")
+  }
+
   test("published v2 root exists on disk (no FileStreamSink probe noise)") {
     val s = spark
     import s.implicits._
