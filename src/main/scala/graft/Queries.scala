@@ -1112,9 +1112,11 @@ object Queries {
     */
   /** Partition count of the dedup standing tables' carry-over layout:
     * ~10k docs per partition (next power of two, min 16) — i.e.
-    * partition ≈ one comfortable parquet file at realistic doc sizes,
-    * the same sizing rule `writeSizeControlled` applies to files. The
-    * count GROWS with the corpus, which is what keeps the swap publish
+    * partition ≈ one comfortable parquet file at realistic doc sizes.
+    * Unlike `writeSizeControlled`, whose file count AQE picks from runtime
+    * shuffle bytes, this count is a function of the row count: the layout
+    * and the pmod computations over it must agree. The count GROWS with
+    * the corpus, which is what keeps the swap publish
     * delta-bounded: a fixed count would eventually be swamped by any
     * ingest batch (at 8M docs a ~400-doc batch touches all 16 of a
     * fixed-16 layout and none of the carry-over survives; at 10k

@@ -1,9 +1,12 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.classic.{DataFrame => ClassicDataFrame}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.RebalancePartitions
+import org.apache.spark.sql.classic.{DataFrame => ClassicDataFrame, Dataset, SparkSession => ClassicSparkSession}
 
-/** Lineage-rebase helper for iterative operators (r15).
+/** DataFrame helpers that need `org.apache.spark.sql` internals.
+  *
+  * [[rebase]] — lineage rebase for iterative operators (r15).
   *
   * `connectedComponentsStars` must re-wrap each round's localCheckpoint in
   * a FRESH logical relation: the checkpoint's own `LogicalRDD` keeps the
@@ -20,11 +23,34 @@ import org.apache.spark.sql.classic.{DataFrame => ClassicDataFrame}
   * checkpoint's InternalRow RDD (`queryExecution.toRdd` — the cached
   * blocks themselves, no recompute for a checkpointed plan) straight back
   * to `internalCreateDataFrame`: fresh lineage, zero per-row conversion.
+  *
+  * [[rebalance]] — the plan node behind `ParquetSink.writeSizeControlled`.
   */
 object DataFrameUtils {
-  def rebase(df: DataFrame): DataFrame = {
+  def rebase(df: DataFrame): DataFrame = rebase(df, df.sparkSession)
+
+  /** [[rebase]] onto `session`: the fresh relation belongs to `session`,
+    * so what is planned over it follows `session`'s conf. A streaming
+    * `foreachBatch` uses it to plan its write outside the stream's own
+    * session, which runs a stateful query with AQE switched off.
+    */
+  def rebase(df: DataFrame, session: SparkSession): DataFrame = {
     val classic = df.asInstanceOf[ClassicDataFrame]
-    classic.sparkSession.internalCreateDataFrame(
+    session.asInstanceOf[ClassicSparkSession].internalCreateDataFrame(
       classic.queryExecution.toRdd, classic.schema)
+  }
+
+  /** `df` behind a `RebalancePartitions` with no partition expressions and
+    * `advisoryBytes` as its per-node advisory partition size: the planned
+    * round-robin exchange (`REBALANCE_PARTITIONS_BY_NONE`) is coalesced
+    * and split by AQE toward `advisoryBytes` from the shuffle's own map
+    * output sizes, so the partition count comes from the bytes the query
+    * actually produced, in the same execution. The public API only exposes
+    * the node through the `REBALANCE` hint, which takes no advisory size.
+    */
+  def rebalance(df: DataFrame, advisoryBytes: Long): DataFrame = {
+    val classic = df.asInstanceOf[ClassicDataFrame]
+    Dataset.ofRows(classic.sparkSession, RebalancePartitions(Nil,
+      classic.queryExecution.logical, None, Some(advisoryBytes)))
   }
 }

@@ -10,12 +10,16 @@ import org.apache.spark.sql.functions._
   */
 object ParquetSink {
 
-  /** Estimated on-disk size of `df`'s output. Prefers Catalyst's logical
+  /** Estimated on-disk size of `df`'s output, for the file counts of
+    * [[writeSorted]] and [[writeZOrdered]]. Prefers Catalyst's logical
     * statistics (free — propagated from file sizes through operators);
     * falls back to row-count x sampled average row width when the plan has
     * no usable estimate. The reference samples one row and multiplies
-    * (parquet/CQLReplicator.scala:712-718); plan stats are strictly better
-    * and cost nothing.
+    * (parquet/CQLReplicator.scala:712-718). Plan stats are only as good as
+    * the plan: without CBO a join estimates as the PRODUCT of its
+    * children, so a small diff over joined snapshots can estimate as
+    * gigabytes. Callers of those two writers with joined inputs should
+    * pass `numFiles`.
     */
   def estimateBytes(df: DataFrame): Long = {
     val fromStats = df.queryExecution.optimizedPlan.stats.sizeInBytes
@@ -41,21 +45,20 @@ object ParquetSink {
   def targetPartitions(df: DataFrame, targetFileBytes: Long): Int =
     math.max(1, math.ceil(estimateBytes(df).toDouble / targetFileBytes).toInt)
 
-  /** Writes `df` as parquet with size-controlled files. coalesce (not
-    * repartition) when shrinking: it folds partitions without a shuffle.
-    * Growing the file count needs a real repartition — round-robin keeps
-    * sizes even.
+  /** Writes `df` as parquet with size-controlled files: one rebalance
+    * exchange whose advisory partition size is `targetFileBytes`, so AQE
+    * coalesces small output into few files and splits large output toward
+    * the target from the shuffle's runtime bytes (shuffle bytes, not
+    * parquet bytes: files land near, not at, the target). The input runs
+    * once, inside the write; there is no driver-side size estimate. With
+    * `spark.sql.adaptive.enabled=false` nothing sizes the exchange and the
+    * write lands up to `spark.sql.shuffle.partitions` files.
     */
   def writeSizeControlled(df: DataFrame, path: String,
                           targetFileBytes: Long = 128L << 20,
-                          mode: SaveMode = SaveMode.Overwrite): Unit = {
-    val n = targetPartitions(df, targetFileBytes)
-    val current = df.rdd.getNumPartitions
-    val sized = if (n < current) df.coalesce(n)
-                else if (n > current) df.repartition(n)
-                else df
-    sized.write.mode(mode).parquet(path)
-  }
+                          mode: SaveMode = SaveMode.Overwrite): Unit =
+    org.apache.spark.sql.graft.DataFrameUtils.rebalance(df, targetFileBytes)
+      .write.mode(mode).parquet(path)
 
   /** Size-controlled write with rows globally ordered by `sortCols`:
     * range-partitioned across files, sorted within them. Parquet keeps

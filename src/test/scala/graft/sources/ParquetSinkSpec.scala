@@ -1,13 +1,124 @@
 package graft.sources
 
 import java.nio.file.Files
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{REBALANCE_PARTITIONS_BY_NONE, ShuffleExchangeLike}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.{SparkSpec, Tables}
 import graft.operators.{Cdc, Skew, TextDedup}
 
-class ParquetSinkSpec extends SparkSpec {
+class ParquetSinkSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+
+  private def parquetFiles(dir: String): Seq[java.io.File] =
+    new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet")).toSeq
+
+  /** Runs `body` and returns the file-scan records read by the jobs it
+    * starts on this thread (matched by a local property, since other
+    * suites share the session) and the executed plans of the queries
+    * whose logical plan mentions `marker`. The listener bus is async: a
+    * tagged sentinel job drains it, its end event arriving after every
+    * event `body` caused.
+    */
+  private def observe(marker: String)(body: => Unit): (Long, Seq[QueryExecution]) = {
+    val sc = spark.sparkContext
+    val key = "graft.spec.observe"
+    val tag = java.util.UUID.randomUUID().toString
+    val stages = ConcurrentHashMap.newKeySet[Int]()
+    val records = new AtomicLong
+    val sentinelJob = new AtomicLong(-1)
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(key)) match {
+          case Some(`tag`) => e.stageIds.foreach(stages.add)
+          case Some(t) if t == tag + "-sentinel" => sentinelJob.set(e.jobId)
+          case _ =>
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          records.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == sentinelJob.get) drained.countDown()
+    }
+    val queries = new ConcurrentLinkedQueue[QueryExecution]()
+    val qel = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.logical.toString.contains(marker)) queries.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    sc.addSparkListener(listener)
+    spark.listenerManager.register(qel)
+    try {
+      sc.setLocalProperty(key, tag)
+      try body finally sc.setLocalProperty(key, tag + "-sentinel")
+      sc.parallelize(1 to 1, 1).count()
+      assert(drained.await(30, TimeUnit.SECONDS), "listener bus drain timed out")
+    } finally {
+      sc.setLocalProperty(key, null)
+      spark.listenerManager.unregister(qel)
+      sc.removeSparkListener(listener)
+    }
+    (records.get, queries.asScala.toSeq)
+  }
+
+  test("writeSizeControlled sizes a joined diff from runtime bytes and runs it once") {
+    val spark0 = spark
+    import spark0.implicits._
+    val root = Files.createTempDirectory("graft-sink-cdc").toString
+    val prev = (0L until 3000L).map(k => (k, k % 97, s"row-$k")).toDF("pk", "ts", "v")
+    val curr = (100L until 3100L).map(k => (k, k % 89, s"row-$k")).toDF("pk", "ts", "v")
+    SnapshotStore.write(prev, root, "t", 1L)
+    SnapshotStore.write(curr, root, "t", 2L)
+    val changes = SnapshotStore.changes(spark, root, "t", 1L, 2L, Seq("pk"))
+    val target = 4L << 20
+    // the premise: without CBO the three-join union estimates as the
+    // product of its snapshots, far above the target
+    val estimate = changes.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(estimate >= BigInt(target) * 100, s"estimate $estimate")
+    val (once, _) = observe(root) {
+      changes.write.format("noop").mode("overwrite").save()
+    }
+    val dir = s"$root/delta"
+    val (read, queries) = observe(dir) {
+      ParquetSink.writeSizeControlled(changes, dir, target)
+    }
+    val files = parquetFiles(dir).map(_.length)
+    assert(files.size == 1, s"a delta far below the target lands as one file: $files")
+    assert(once > 0 && read == once,
+      s"the write read $read input records, one evaluation reads $once")
+    assert(queries.size == 1, s"queries over the input: ${queries.size}")
+    val rebalances = collect(queries.head.executedPlan) {
+      case e: ShuffleExchangeLike if e.shuffleOrigin == REBALANCE_PARTITIONS_BY_NONE => e
+    }
+    assert(rebalances.size == 1, queries.head.executedPlan.toString)
+    assert(spark.read.parquet(dir).count() == changes.count())
+  }
+
+  test("writeSizeControlled splits an input several times the target into near-target files") {
+    val base = Files.createTempDirectory("graft-sink-split").toString
+    val target = 1L << 20
+    spark.range(0, 60000, 1, 16)
+      .select(col("id"), sha2(col("id").cast("string"), 256).as("h"))
+      .write.parquet(s"$base/in")
+    val in = spark.read.parquet(s"$base/in")
+    ParquetSink.writeSizeControlled(in, s"$base/out", target)
+    val sizes = parquetFiles(s"$base/out").map(_.length)
+    assert(sizes.size > 1 && sizes.forall(_ < 2 * target),
+      s"file sizes $sizes: AQE no longer honours the rebalance's advisory " +
+        "partition size (optAdvisoryPartitionSize); on such a Spark restore " +
+        "writeSizeControlled's estimate-plus-coalesce body " +
+        "(targetPartitions, then coalesce or repartition)")
+    assert(spark.read.parquet(s"$base/out").count() == 60000L)
+  }
 
   test("writeSizeControlled produces roughly target-sized files") {
     val orders = Tables.orders(spark, sfDir)

@@ -178,6 +178,12 @@ class EventPipelinesSpec extends AnyFunSuite with SparkSpec {
     } finally q.stop()
     val dirs = new java.io.File(out).listFiles().filter(_.isDirectory).map(_.getName).sorted
     assert(dirs.length == 2, dirs.toSeq)
+    // each batch is far below targetFileBytes: one file per batch
+    for (d <- dirs) {
+      val files = new java.io.File(s"$out/$d").listFiles().map(_.getName)
+        .filter(_.endsWith(".parquet"))
+      assert(files.length == 1, s"$d: ${files.toSeq}")
+    }
     // replaying all deltas in epoch order and keeping the last write per
     // key reconstructs the batch answer — replication-log semantics
     val replayed = dirs.zipWithIndex.flatMap { case (d, i) =>
