@@ -904,10 +904,6 @@ object Queries {
 
   // --------------------------------------------- LLM-training-data pipeline
 
-  /** DuckDB cosine with the exact evaluation-order shape of [[Ann.cosine]]
-    * (elementwise double products summed left-to-right, then divided by
-    * each norm in turn) so doubles match bit-for-bit before rounding.
-    */
   /** DuckDB rendering of TextAnalysis.qualityScore (same IEEE order). */
   private def qualityScoreSql(textCol: String): String =
     s"""ROUND(0.5 * LEAST(1.0, CAST(len(string_split($textCol, ' ')) AS DOUBLE) / 200.0)
@@ -944,6 +940,10 @@ object Queries {
   private def pqSample(emb: DataFrame): DataFrame =
     emb.filter(col("vec_id") % 25 === 0 && col("vec_id") < 25 * 256)
 
+  /** DuckDB cosine with the exact evaluation-order shape of [[Ann.cosine]]
+    * (elementwise double products summed left-to-right, then divided by
+    * each norm in turn) so doubles match bit-for-bit before rounding.
+    */
   private def cosSql(a: String, b: String): String =
     s"""(list_sum(list_transform(list_zip($a, $b), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
        | / sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
@@ -1102,14 +1102,6 @@ object Queries {
       buildDedupIndex(s, d))
   }
 
-  /** Standing index for `dedup_cluster_index_upsert` (pairs + banded
-    * keys + membership of the PREV snapshot), built once per corpus and
-    * fingerprint-stamped like [[ensureDedupIndex]]. In production the
-    * standing index simply EXISTS (yesterday's output); building it
-    * inside the upsert's timed body priced a full rebuild into every
-    * measurement of the delta-sized operator (r7 benched 10.97 s of
-    * which ~2/3 was this setup).
-    */
   /** Partition count of the dedup standing tables' carry-over layout:
     * ~10k docs per partition (next power of two, min 16) — i.e.
     * partition ≈ one comfortable parquet file at realistic doc sizes.
@@ -1353,6 +1345,14 @@ object Queries {
       dedupUpsertApply(s, pairsTbl, lshTbl, clusTbl, prev, curr, nParts))(
       s.table(clusTbl + "_v2").select("doc_id", "cluster_id"))
 
+  /** Standing index for `dedup_cluster_index_upsert` (pairs + banded
+    * keys + membership of the PREV snapshot), built once per corpus and
+    * fingerprint-stamped like [[ensureDedupIndex]]. In production the
+    * standing index simply EXISTS (yesterday's output); building it
+    * inside the upsert's timed body priced a full rebuild into every
+    * measurement of the delta-sized operator (r7 benched 10.97 s of
+    * which ~2/3 was this setup).
+    */
   private[graft] def ensureUpsertBaseIndex(s: SparkSession, d: String,
       prev: DataFrame, pairsTbl: String, lshTbl: String,
       clusTbl: String, parts: Int): Unit = {
@@ -3171,8 +3171,8 @@ object Queries {
 
   private val curation: Seq[Q] = Seq(
     Q("dedup_clusters",
-      // Near-dup PAIRS -> duplicate CLUSTERS: connected components (min-
-      // label propagation + pointer jumping, log-diameter rounds) over the
+      // Near-dup PAIRS -> duplicate CLUSTERS: connected components
+      // (large-star/small-star, O(log² n) rounds on any graph) over the
       // exact-verified LSH pairs, canonical survivor flagged. The oracle
       // recomputes the transitive closure with a recursive CTE.
       (s, d) => Clustering.dedupClusters(
@@ -3975,18 +3975,14 @@ object Queries {
 
   private val roundFive: Seq[Q] = Seq(
     Q("dedup_clusters_largestar",
-      // The SAME duplicate-cluster output as dedup_clusters, computed by
-      // alternating large-star/small-star rounds (Kiveris et al. SoCC'14)
-      // instead of min-label propagation: convergence is O(log² n) on ANY
-      // graph shape — including long chains where propagation pays
-      // diameter rounds — and a mega-hub sheds its whole neighbourhood in
-      // one round. Shared oracle with dedup_clusters (recursive-CTE
-      // transitive closure): two independent algorithms, one answer.
-      // dedupPairs = false (r15): minhashLshPairs emits one row per
-      // unordered pair (unique by its verification groupBy) already in
-      // doc_a < doc_b orientation, so the loop-entry distinct() exchange
-      // is a no-op — skipping it is row-identical (oracle-gated here).
-      (s, d) => Clustering.connectedComponentsStars(
+      // Twin of dedup_clusters kept because perfbench's pinned entry
+      // list names it: the same connected-components call and the same
+      // output, differing only in dedupPairs = false. minhashLshPairs
+      // emits one row per unordered pair (unique by its verification
+      // groupBy) already in doc_a < doc_b orientation, so the loop-entry
+      // distinct() exchange is a no-op — skipping it is row-identical
+      // (oracle-gated here, shared oracle with dedup_clusters).
+      (s, d) => Clustering.connectedComponents(
           TextDedup.minhashLshPairs(Tables.documents(s, d), "doc_id", "text",
             n = 3, numPerm = 128, bands = 32, threshold = 0.8),
           "doc_a", "doc_b", dedupPairs = false)

@@ -8,17 +8,18 @@ import org.apache.spark.sql.classic.{DataFrame => ClassicDataFrame, Dataset, Spa
   *
   * [[rebase]] — lineage rebase for iterative operators (r15).
   *
-  * `connectedComponentsStars` must re-wrap each round's localCheckpoint in
-  * a FRESH logical relation: the checkpoint's own `LogicalRDD` keeps the
-  * original plan's inferred constraints, which reference attributes the
-  * checkpoint no longer outputs, and re-joining/unioning over it trips
-  * Catalyst's constraint rewrite ("key not found: src#N").
+  * `Clustering.connectedComponents` must re-wrap each round's
+  * localCheckpoint in a FRESH logical relation: the checkpoint's own
+  * `LogicalRDD` keeps the original plan's inferred constraints, which
+  * reference attributes the checkpoint no longer outputs, and
+  * re-joining/unioning over it trips Catalyst's constraint rewrite
+  * ("key not found: src#N").
   *
   * The r14 form — `spark.createDataFrame(ck.rdd, ck.schema)` — was correct
   * but paid a DOUBLE row conversion on every downstream read: `ck.rdd`
   * deserializes InternalRow → external Row, and `createDataFrame` wraps a
   * converter back Row → InternalRow, so every reference to the rebased
-  * relation (three per stars round) re-ran both conversions over the edge
+  * relation (three per round) re-ran both conversions over the edge
   * relation. This shim lives in `org.apache.spark.sql` so it can hand the
   * checkpoint's InternalRow RDD (`queryExecution.toRdd` — the cached
   * blocks themselves, no recompute for a checkpointed plan) straight back

@@ -260,10 +260,6 @@ object GraftExpressions {
   def floatVecPairProducts(a: Column): Column =
     ExpressionUtils.column(FloatVecPairProducts(ExpressionUtils.expression(a)))
 
-  /** DEFLATE/INFLATE as codegen'd StaticInvoke expressions — the codec
-    * stays a plain JVM method but the call site lives inside whole-stage
-    * codegen (no UDF serialization, no codegen break).
-    */
   /** Z-order bit interleave of two non-negative longs (low 32 bits each;
     * a takes even bit positions). Codegen'd StaticInvoke — the curve math
     * stays a plain JVM method inside whole-stage codegen.
@@ -274,6 +270,10 @@ object GraftExpressions {
       Seq(ExpressionUtils.expression(a), ExpressionUtils.expression(b)),
       Seq(LongType, LongType)))
 
+  /** DEFLATE/INFLATE as codegen'd StaticInvoke expressions — the codec
+    * stays a plain JVM method but the call site lives inside whole-stage
+    * codegen (no UDF serialization, no codegen break).
+    */
   def deflate(bin: Column): Column =
     ExpressionUtils.column(org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke(
       graft.operators.GraftCodec.getClass, BinaryType, "deflate",

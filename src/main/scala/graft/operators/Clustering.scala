@@ -8,154 +8,38 @@ import org.apache.spark.sql.functions._
   * CLUSTERS with one canonical survivor per cluster, which is what a
   * dedup pipeline actually acts on at 100 TB.
   *
-  * Algorithm: iterated min-label propagation with pointer jumping
-  * (label <- min over neighbours' labels and the label's own label),
-  * O(log(diameter)) rounds. Every round is two shuffle joins + one
-  * aggregate — all declarative, AQE-optimized; the driver only decides
-  * WHEN to stop (a count per round), it never touches row data. Dedup
-  * graphs are unions of small cliques, so convergence is 1-2 rounds in
-  * practice; maxIter bounds adversarial chains, and a loop that reaches
-  * it unconverged throws rather than return partial labels.
+  * Algorithm: alternating LARGE-STAR / SMALL-STAR rounds (Kiveris et
+  * al., "Connected Components in MapReduce and Beyond", SoCC'14). Its
+  * convergence guarantee is structural, not diameter-bound: each round
+  * strictly shrinks a potential function and the pair terminates in
+  * O(log² n) rounds on ANY graph, including long chains whose node ids
+  * arrive in random order and kNN graphs whose components are not
+  * cliques. Every round is declarative (groupBy + min + join) with an
+  * eager localCheckpoint truncating lineage; the driver only decides
+  * WHEN to stop (a row count per round), it never touches row data.
+  * `maxIter` bounds the loop, and a loop that reaches it unconverged
+  * throws rather than return partial labels.
   */
 object Clustering {
 
-  /** (node, component) for every node in `pairs`, component = min node id
-    * reachable. `pairs` columns: (aCol, bCol), one row per undirected edge.
-    */
-  def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-                          maxIter: Int = 16): DataFrame = {
-    // Undirected edge list, both directions; self-loops are harmless.
-    // Eager localCheckpoint TRUNCATES LINEAGE: the edge relation is tiny
-    // relative to the corpus (only near-dup docs appear) while its
-    // upstream plan (e.g. the whole LSH pipeline) is huge — without the
-    // cut, every iteration's logical plan embeds the full upstream tree
-    // and each round re-pays optimizer + codegen over it. Same pattern
-    // per iteration: constant-size plans, constant-depth lineage (the
-    // GraphX/ML iterative-algorithm discipline).
-    val sc = pairs.sparkSession.sparkContext
-    // Checkpoint with block tracking so superseded rounds' cached RDDs
-    // free DETERMINISTICALLY (the ContextCleaner would eventually GC
-    // them, but a long-lived driver clustering repeatedly shouldn't
-    // accumulate block-manager entries until then). The returned labels'
-    // blocks stay cached for the caller's consumption.
-    def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val ck = df.localCheckpoint(true)
-      (ck, sc.getPersistentRDDs.keySet.toSet -- before)
-    }
-    def unpersistIds(ids: Set[Int]): Unit =
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-    // Mirror through explode(array(struct..)) rather than union-of-two-
-    // selects: one generator evaluates the (expensive) pair upstream — the
-    // LSH pipeline — exactly once, where the union's branches would each
-    // re-run it; that previously forced an extra intermediate checkpoint
-    // of the un-mirrored pairs (r14 optimization: one materialization job
-    // at loop entry instead of two).
-    val (edges, edgeIds) = checkpointTracked(
-      pairs.select(explode(array(
-          struct(col(aCol).as("src"), col(bCol).as("dst")),
-          struct(col(bCol).as("src"), col(aCol).as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst")))
-    // Size-gated broadcast of the label side of both per-round joins
-    // (r15). The label relation — one row per node — is never larger than
-    // the mirrored edge relation, whose MATERIALIZED size the block
-    // manager reports exactly now that it is checkpointed. The static
-    // planner sees checkpointed relations as unknown-size and plans
-    // sort-merge, so every round paid two O(E)+O(V) exchange stage jobs
-    // that AQE only converts to broadcast AFTER materializing them; the
-    // hint (guide §3.1: broadcast the side you KNOW is small) removes
-    // those stages up front. The gate is the session's own
-    // autoBroadcastJoinThreshold, so a 100 TB edge relation keeps the
-    // shuffle plan and nothing is tuned to local mode.
-    val labelsFit = Scans.fitsBroadcast(pairs.sparkSession,
-      Scans.materializedBytes(sc, edgeIds))
-    def maybeBcast(df: DataFrame): DataFrame =
-      if (labelsFit) broadcast(df) else df
-    // labels0 is NOT checkpointed (r15): round 0 consumes the min-of-
-    // neighbours initialization inline. Its groupBy exchange is shared by
-    // every reference inside round 0's single query (ReuseExchange), so
-    // folding it removes one blocking materialization (and its driver
-    // jobs) per call without adding a shuffle; from round 1 on, `labels`
-    // is the previous round's checkpointed output exactly as before.
-    var labels: DataFrame = edges.groupBy(col("src").as("node"))
-      .agg(min(col("dst")).as("mind"))
-      .select(col("node"), least(col("node"), col("mind")).as("comp"))
-    var labelIds: Set[Int] = Set.empty
-    var iter = 0
-    var changed = 0L
-    var converged = false
-    while (iter < maxIter && !converged) {
-      // One round = min over {own label} ∪ {neighbours' labels} ∪
-      // {label's own label} (pointer jumping), expressed as a UNION into
-      // a single min-aggregate rather than candidate relations joined
-      // back onto labels (r14 optimization: the join-back passes and the
-      // neighbour pre-aggregate fold into the one groupBy — map-side
-      // partial min keeps the shuffle at the same O(E) bytes, and two
-      // label-set passes per round disappear). The self row (exactly one
-      // per node — labels is unique by node) carries the previous label
-      // through the aggregate so the convergence check needs no probe:
-      // an Observation counts changed rows DURING the round's checkpoint
-      // job (spec-gated in ClusteringSpec's long-chain test).
-      val neighbour = edges
-        .join(maybeBcast(labels.withColumnRenamed("node", "dst2")),
-          col("dst") === col("dst2"))
-        .select(col("src").as("node"), col("comp"), lit(0).as("self"))
-      val pointer = labels.as("l")
-        .join(maybeBcast(labels.as("p")), col("l.comp") === col("p.node"))
-        .select(col("l.node").as("node"), col("p.comp").as("comp"),
-          lit(0).as("self"))
-      val obs = org.apache.spark.sql.Observation()
-      val (next, nextIds) = checkpointTracked(labels
-        .select(col("node"), col("comp"), lit(1).as("self"))
-        .unionByName(neighbour).unionByName(pointer)
-        .groupBy("node")
-        .agg(min(col("comp")).as("comp"),
-          max(when(col("self") === 1, col("comp"))).as("prev"))
-        .observe(obs, count(when(col("comp") =!= col("prev"), 1)).as("changed")))
-      changed = Scans.observed(obs, s"cc round $iter convergence")("changed")
-        .asInstanceOf[Long]
-      unpersistIds(labelIds) // superseded round's blocks
-      labels = next.select("node", "comp")
-      labelIds = nextIds
-      converged = changed == 0
-      iter += 1
-    }
-    unpersistIds(edgeIds)
-    if (!converged) {
-      unpersistIds(labelIds)
-      throw notConverged("connectedComponents", maxIter, changed)
-    }
-    labels.select(col("node").as("doc_id"), col("comp").as("cluster_id"))
-  }
-
-  /** Connected components by alternating LARGE-STAR / SMALL-STAR rounds
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC'14) — the other canonical distributed-CC formulation, kept
-    * alongside [[connectedComponents]] because its convergence guarantee
-    * is structural, not diameter-bound: each round strictly shrinks the
-    * potential function and the pair terminates in O(log² n) rounds on
-    * ANY graph, including the long-chain adversarial shapes where plain
-    * min-label propagation needs diameter rounds.
+  /** (doc_id, cluster_id = min node id reachable) for every node that
+    * appears in `pairs`, including a node whose only pair is a
+    * self-loop. `pairs` columns: (aCol, bCol), one row per undirected
+    * edge in either orientation; duplicates are harmless.
     *
-    * Both operations are one groupBy over the edge relation:
+    * Both stars are one groupBy over the edge relation:
     *  - large-star: for every node u, connect every STRICTLY GREATER
     *    neighbour v > u to m = min(N(u) ∪ u) — high-degree nodes shed
     *    their big neighbourhoods onto the minimum in a single round,
-    *    which is exactly the skew case (a mega-cluster's hub) where
-    *    propagation pays per-hop.
+    *    which is exactly the skew case (a mega-cluster's hub).
     *  - small-star: for every node u, connect all neighbours ≤ u
     *    (and u itself) to the minimum — flattens the partial trees.
     *
     * The edge relation only ever SHRINKS to the forest edges
     * (node → component min), so per-round cost is bounded by the initial
-    * near-dup edge list; like the propagation variant, every round is
-    * declarative (groupBy + min + explode) with an eager localCheckpoint
-    * truncating lineage. Fixpoint = both stars produce no new edge
-    * (checked with one tiny except-count per round). Returns the same
-    * (doc_id, cluster_id = min reachable node) relation as
-    * [[connectedComponents]].
-    */
-  /** @param dedupPairs pass false when `pairs` is PROVABLY one row per
+    * near-dup edge list. Fixpoint = a round produces the same edge set.
+    *
+    * @param dedupPairs pass false when `pairs` is PROVABLY one row per
     *   undirected edge in canonical (aCol < bCol) orientation — e.g.
     *   minhashLshPairs output, unique by its verification groupBy with
     *   doc_a < doc_b from candidate generation — to skip the initial
@@ -163,21 +47,27 @@ object Clustering {
     *   is already distinct, so the relation entering the loop is
     *   row-identical either way.
     */
-  def connectedComponentsStars(pairs: DataFrame, aCol: String, bCol: String,
-                               maxIter: Int = 32,
-                               dedupPairs: Boolean = true): DataFrame = {
+  def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
+                          maxIter: Int = 32,
+                          dedupPairs: Boolean = true): DataFrame = {
     val spark = pairs.sparkSession
     val sc = spark.sparkContext
-    // Checkpoint, then rebase the DataFrame on the cached RDD with a
-    // FRESH logical relation: a bare localCheckpoint keeps the original
-    // plan's inferred constraints, which reference attributes the
-    // checkpoint no longer outputs — re-wrapping the next round's
-    // union/join over that relation trips Catalyst's constraint rewrite
-    // ("key not found: src#N"). r15: the rebase hands the checkpoint's
-    // InternalRow RDD straight to a fresh relation
-    // (DataFrameUtils.rebase) — the r14 createDataFrame(ck.rdd, schema)
-    // form paid an InternalRow→Row→InternalRow double conversion on
-    // EVERY downstream read of every round's edges (three per round).
+    // Eager localCheckpoint TRUNCATES LINEAGE: the edge relation is tiny
+    // relative to the corpus (only near-dup docs appear) while its
+    // upstream plan (e.g. the whole LSH pipeline) is huge — without the
+    // cut, every round's logical plan embeds the full upstream tree and
+    // re-pays optimizer + codegen over it.
+    // The checkpoint is then rebased on a FRESH logical relation: a bare
+    // localCheckpoint keeps the original plan's inferred constraints,
+    // which reference attributes the checkpoint no longer outputs —
+    // re-wrapping the next round's union/join over that relation trips
+    // Catalyst's constraint rewrite ("key not found: src#N").
+    // DataFrameUtils.rebase hands the checkpoint's InternalRow RDD
+    // straight to the fresh relation, with no per-row conversion.
+    // Block tracking frees superseded rounds' cached RDDs
+    // DETERMINISTICALLY (the ContextCleaner would eventually GC them, but
+    // a long-lived driver clustering repeatedly shouldn't accumulate
+    // block-manager entries until then).
     def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) = {
       val before = sc.getPersistentRDDs.keySet.toSet
       val ck = df.localCheckpoint(true)
@@ -186,17 +76,17 @@ object Clustering {
     }
     def unpersistIds(ids: Set[Int]): Unit =
       ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-    // Size-gated broadcast of each star's per-node-min side (r15, guide
-    // §3.1 — broadcast the side you KNOW is small): `mins` is one
-    // (node, min) row per node, never more than twice the canonical edge
-    // relation whose exact materialized size the block manager reports
-    // after the initial checkpoint. The static planner sees the
-    // checkpoint-rebased relations as unknown-size and plans sort-merge,
-    // paying an O(E) exchange + sort per star that AQE only converts
-    // AFTER materializing; the hint removes those stages up front. Gate =
-    // the session's own autoBroadcastJoinThreshold against 2× the
-    // measured edge bytes (the |V| ≤ 2|E| bound), so at scale the
-    // shuffle plan is kept untuned.
+    // Size-gated broadcast of each star's per-node-min side (broadcast
+    // the side you KNOW is small): `mins` is one (node, min) row per
+    // node, never more than twice the canonical edge relation whose
+    // exact materialized size the block manager reports after the
+    // initial checkpoint. The static planner sees the checkpoint-rebased
+    // relations as unknown-size and plans sort-merge, paying an O(E)
+    // exchange + sort per star that AQE only converts AFTER
+    // materializing; the hint removes those stages up front. Gate = the
+    // session's own autoBroadcastJoinThreshold against 2× the measured
+    // edge bytes (the |V| ≤ 2|E| bound), so at scale the shuffle plan is
+    // kept untuned.
     var minsFit = false
     def maybeBcast(df: DataFrame): DataFrame =
       if (minsFit) broadcast(df) else df
@@ -219,12 +109,12 @@ object Clustering {
         .select(least(col("dst"), col("m")).as("src"),
           greatest(col("dst"), col("m")).as("dst"))
         .filter(col("src") =!= col("dst"))
-      // No dedup here (r14): the only consumer is smallStar, whose min
+      // No dedup here: the only consumer is smallStar, whose min
       // aggregate is duplicate-insensitive and whose output carries the
       // round's distinct() — and largeStar emits at most one row per
       // directed (u, v>u) input pair, so skipping the dedup cannot blow
-      // the relation up. One exchange per round removed; the fixpoint
-      // probe still compares DISTINCT edge sets (smallStar's output).
+      // the relation up. The fixpoint probe still compares DISTINCT edge
+      // sets (smallStar's output).
     }
     def smallStar(e: DataFrame): DataFrame = {
       val hiLo = e.select(greatest(col("src"), col("dst")).as("u"),
@@ -239,13 +129,16 @@ object Clustering {
         .filter(col("src") =!= col("dst"))
       viaNbr.unionByName(viaSelf).distinct()
     }
-    // Initial emptiness rides an Observation on the same checkpoint job
-    // (r14: the old edges.isEmpty probe was one more driver job).
+    // The initial edges KEEP self-loops, so a node whose only pair is a
+    // self-loop is in the node set the final labelling reads; largeStar
+    // drops them (v > u), so the loop's relations never carry one. The
+    // first round then differs from the initial edges whenever a
+    // self-loop was present, which costs at most one extra round.
+    // Initial emptiness rides an Observation on the same checkpoint job.
     val initObs = org.apache.spark.sql.Observation()
     val canonical = pairs
       .select(least(col(aCol), col(bCol)).as("src"),
         greatest(col(aCol), col(bCol)).as("dst"))
-      .filter(col("src") =!= col("dst"))
     var (edges, edgeIds) = checkpointTracked(
       (if (dedupPairs) canonical.distinct() else canonical)
         .observe(initObs, count(lit(1)).as("n")))
@@ -253,40 +146,35 @@ object Clustering {
       2L * Scans.materializedBytes(sc, edgeIds))
     // Nodes with no surviving edge after a star round are their own
     // component OR have already been attached to their min; the final
-    // labelling needs the INITIAL node set so singleton-ified nodes stay
-    // covered (every original node appears in the output, matching
-    // connectedComponents' contract). r15: derive it lazily from the
-    // initial checkpointed edges inside the final labelling job instead
-    // of materializing a second checkpoint at loop entry — same
-    // union+distinct work, one blocking driver job fewer per call. The
-    // initial edge blocks are protected from the loop's unpersist and
-    // released after the labels checkpoint.
+    // labelling needs the INITIAL node set so every node in `pairs`
+    // stays covered. It is derived lazily from the initial checkpointed
+    // edges inside the final labelling job instead of materializing a
+    // second checkpoint at loop entry — same union+distinct work, one
+    // blocking driver job fewer per call. The initial edge blocks are
+    // protected from the loop's unpersist and released after the labels
+    // checkpoint.
     val edges0 = edges
     val edges0Ids = edgeIds
     var iter = 0
-    var prevCount = Scans.observed(initObs, "stars initial edge count")("n")
+    var prevCount = Scans.observed(initObs, "cc initial edge count")("n")
       .asInstanceOf[Long]
     var changed = 0L
     var converged = prevCount == 0
     while (iter < maxIter && !converged) {
-      // Each round's checkpoint job also observes its output row count
-      // (r15): both sides of the fixpoint comparison are DISTINCT edge
-      // sets, so differing counts prove the sets differ and the round is
-      // not converged — the symmetric-difference probe job only runs when
-      // the counts match (typically the final round), removing one driver
-      // job + one co-grouping pass from every non-final round.
+      // Each round's checkpoint job also observes its output row count:
+      // both sides of the fixpoint comparison are DISTINCT edge sets, so
+      // differing counts prove the sets differ and the round is not
+      // converged — the symmetric-difference probe job only runs when the
+      // counts match (typically the final round).
       val roundObs = org.apache.spark.sql.Observation()
       val (next, nextIds) = checkpointTracked(smallStar(largeStar(edges))
         .observe(roundObs, count(lit(1)).as("n")))
-      val nextCount = Scans.observed(roundObs, s"stars round $iter edge count")("n")
+      val nextCount = Scans.observed(roundObs, s"cc round $iter edge count")("n")
         .asInstanceOf[Long]
-      // Fixpoint = identical edge SETS (both sides are distinct() by
-      // construction): ONE symmetric-difference probe — union with ±1
-      // weights, grouped sum ≠ 0 ⟺ an edge on exactly one side — in
-      // place of the former two left-anti probes (r14: one driver job
-      // and one co-grouping pass per round instead of two join probes;
-      // joins would sort or broadcast, the weighted union is a plain
-      // partial-aggregated count shuffle). Safe against the exceptAll
+      // Fixpoint = identical edge SETS: ONE symmetric-difference probe —
+      // union with ±1 weights, grouped sum ≠ 0 ⟺ an edge on exactly one
+      // side — a plain partial-aggregated count shuffle where joins would
+      // sort or broadcast. Safe against the exceptAll
       // constraint-propagation trap because both sides are rebased
       // checkpoints with fresh lineage (see checkpointTracked above).
       // `changed` is a lower bound on the edges that differ: the count
@@ -307,7 +195,7 @@ object Clustering {
     }
     if (!converged) {
       unpersistIds(edgeIds ++ edges0Ids)
-      throw notConverged("connectedComponentsStars", maxIter, changed)
+      throw notConverged(maxIter, changed)
     }
     // At fixpoint the edge relation IS the star forest: every non-root
     // appears exactly once as (component min, node). Nodes absent from
@@ -328,9 +216,8 @@ object Clustering {
     labels
   }
 
-  private def notConverged(algorithm: String, maxIter: Int,
-                           changed: Long): IllegalStateException =
-    new IllegalStateException(s"$algorithm did not converge within " +
+  private def notConverged(maxIter: Int, changed: Long): IllegalStateException =
+    new IllegalStateException("connectedComponents did not converge within " +
       s"maxIter = $maxIter rounds (last round's changed count: $changed)")
 
   /** Duplicate clusters from near-dup pairs: every clustered doc with its

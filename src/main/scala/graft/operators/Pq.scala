@@ -72,13 +72,6 @@ object Pq {
         col("best.code").as("code"), round(col("best.d"), 4).as("dist"))
   }
 
-  /** ADC top-k over PQ codes: approximate distance(q, x) = Σ_s
-    * LUT[q][s][code_x[s]]. The LUT (queries × codebook) broadcasts; the
-    * code relation joins it map-side, and the per-(query, vector) sum
-    * accumulates in decimal (order-independent across subspaces). Top-k
-    * per query via the bounded-heap TopKPerGroup operator — the shuffle
-    * after the sum carries ≤ k rows per query per partition.
-    */
   /** IVF residuals: each vector minus its assigned centroid — what IVFADC
     * (Jégou PAMI'11 §IV; the FAISS IVFPQ index) quantizes instead of the
     * raw vectors, because residuals concentrate near the origin and the
@@ -148,6 +141,13 @@ object Pq {
         round(col("adc_exact").cast("double"), 4).as("adc"))
   }
 
+  /** ADC top-k over PQ codes: approximate distance(q, x) = Σ_s
+    * LUT[q][s][code_x[s]]. The LUT (queries × codebook) broadcasts; the
+    * code relation joins it map-side, and the per-(query, vector) sum
+    * accumulates in decimal (order-independent across subspaces). Top-k
+    * per query via the bounded-heap TopKPerGroup operator — the shuffle
+    * after the sum carries ≤ k rows per query per partition.
+    */
   def adcTopK(codes: DataFrame, codebook: DataFrame, queries: DataFrame,
               idCol: String, vecCol: String, subDim: Int, k: Int): DataFrame = {
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))

@@ -87,15 +87,17 @@ object Scans {
 
   /** Bounded read of an [[org.apache.spark.sql.Observation]] whose
     * metrics were published by an EAGER localCheckpoint rather than a
-    * caller-run action (the CC loops' fused convergence counts, the
+    * caller-run action (the CC loop's per-round edge counts, the
     * kmeans candidate counts). That publish relies on Spark-internal
     * behavior — eager checkpoint executing under `withAction` — probed
     * and spec-gated on this Spark version; if an upgrade changes the
     * wrapping, the metrics never arrive and a bare `get()` would hang
     * the operator FOREVER (r14 advice). By the time callers read, the
-    * checkpoint action has already completed, so the metrics future is
-    * normally already resolved; the deadline only fires in the
-    * broken-contract case, as a pointed error instead of a hang.
+    * checkpoint action has completed; Spark resolves the metrics future
+    * from its listener bus, so it may still be pending for moments after
+    * the checkpoint returns (ScansSpec pins that it resolves with no
+    * further action). The deadline only fires in the broken-contract
+    * case, as a pointed error instead of a hang.
     */
   def observed(obs: org.apache.spark.sql.Observation, what: => String,
                deadlineSec: Int = 600): Map[String, Any] =
@@ -111,7 +113,7 @@ object Scans {
             s"$deadlineSec s of the checkpoint action completing — the " +
             "eager-localCheckpoint metrics-publish contract no longer " +
             "holds on this Spark version; revert the fused convergence " +
-            "reads to driver-side count probes.")
+            "reads to driver-side count() probes.")
     }
 
   /** Exact materialized byte size of already-cached/checkpointed RDDs, from

@@ -383,18 +383,6 @@ object TextAnalysis {
         col("tok"), col("c_st"), col("lift_ppm"))
   }
 
-  /** Out-of-vocabulary rate per document against the corpus' own top-V
-    * vocabulary — the tokenizer-coverage check run before committing a
-    * corpus to a fixed vocab. Vocabulary = the vocabSize most frequent
-    * tokens (count desc, token asc tie-break); each document reports its
-    * token total, OOV occurrences, and OOV rate in ppm (exact integer
-    * div).
-    *
-    * Plan: token counts aggregate once; the vocab is a top-V window over
-    * the vocabulary-sized count relation and broadcasts back as a
-    * semi-join side; per-doc totals are one groupBy. No shuffle carries
-    * more than the token explode already did.
-    */
   /** The top-V vocabulary as a first-class artifact (rank, token, corpus
     * frequency, document frequency) — what a tokenizer trainer or the
     * [[oovRate]] gate consumes. One token-count aggregate, then
@@ -445,6 +433,18 @@ object TextAnalysis {
       .select(col("rank"), col("pair"), col("pair_count"))
   }
 
+  /** Out-of-vocabulary rate per document against the corpus' own top-V
+    * vocabulary — the tokenizer-coverage check run before committing a
+    * corpus to a fixed vocab. Vocabulary = the vocabSize most frequent
+    * tokens (count desc, token asc tie-break); each document reports its
+    * token total, OOV occurrences, and OOV rate in ppm (exact integer
+    * div).
+    *
+    * Plan: token counts aggregate once; the vocab is a top-V window over
+    * the vocabulary-sized count relation and broadcasts back as a
+    * semi-join side; per-doc totals are one groupBy. No shuffle carries
+    * more than the token explode already did.
+    */
   def oovRate(docs: DataFrame, idCol: String, textCol: String,
               vocabSize: Int): DataFrame = {
     val toks = docs.select(col(idCol).as("doc_id"),

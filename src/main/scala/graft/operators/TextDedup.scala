@@ -337,11 +337,6 @@ object TextDedup {
       .select(col("doc_id"),
         array((0 until numPerm).map(i => col(s"m$i")): _*).as("sig"))
 
-  /** LSH candidate pairs (doc_a < doc_b, distinct) from a (doc_id, h)
-    * shingle-hash relation: band keys via the typed aggregate, bucket
-    * equi-join on (band, key). Exposed for the streaming form's spec and
-    * for callers that verify candidates their own way.
-    */
   /** The banded key relation (doc_id, band, bh) — one row per LSH band
     * per document. THIS is the materializable LSH index: written once
     * bucketed on (band, bh) (ParquetSink.writeLshIndex), every future
@@ -354,6 +349,11 @@ object TextDedup {
         .minhashBandKeys(col("h"), numPerm, bands).as("bk"))
       .select(col("doc_id"), posexplode(col("bk")).as(Seq("band", "bh")))
 
+  /** LSH candidate pairs (doc_a < doc_b, distinct) from a (doc_id, h)
+    * shingle-hash relation: band keys via the typed aggregate, bucket
+    * equi-join on (band, key). Exposed for the streaming form's spec and
+    * for callers that verify candidates their own way.
+    */
   def lshCandidatesFromHashes(sh: DataFrame, numPerm: Int,
                               bands: Int): DataFrame = {
     val banded = bandedKeys(sh, numPerm, bands)

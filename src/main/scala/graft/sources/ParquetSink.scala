@@ -124,12 +124,6 @@ object ParquetSink {
       .write.mode(mode).parquet(path)
   }
 
-  /** Persists a CDC snapshot bucketed (and sorted) by its primary key.
-    * Both snapshots of a diff written this way co-locate equal PKs in
-    * equal bucket ids, so Cdc.inserts/deletes/updates plan as bucket-local
-    * sort-merge joins — no shuffle of the 100 TB sides (SURVEY §3).
-    * Bucketed tables require the table catalog, hence saveAsTable.
-    */
   /** Persists a banded LSH key relation (TextDedup.bandedKeys) bucketed
     * and sorted on (band, bh) — the PRECOMPUTED LSH INDEX the incremental
     * dedup path reads. A daily ingest batch's candidate equi-join on
@@ -147,6 +141,12 @@ object ParquetSink {
       .saveAsTable(tableName)
   }
 
+  /** Persists a CDC snapshot bucketed (and sorted) by its primary key.
+    * Both snapshots of a diff written this way co-locate equal PKs in
+    * equal bucket ids, so Cdc.inserts/deletes/updates plan as bucket-local
+    * sort-merge joins — no shuffle of the 100 TB sides (SURVEY §3).
+    * Bucketed tables require the table catalog, hence saveAsTable.
+    */
   def writeBucketedSnapshot(df: DataFrame, tableName: String,
                             pkCols: Seq[String], buckets: Int,
                             mode: SaveMode = SaveMode.Overwrite): Unit = {

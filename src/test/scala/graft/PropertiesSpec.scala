@@ -160,30 +160,25 @@ class PropertiesSpec extends SparkSpec {
   test("connectedComponents matches a union-find reference on random graphs") {
     val spark0 = spark
     import spark0.implicits._
-    val edgeGen = Gen.zip(Gen.choose(0L, 30L), Gen.choose(0L, 30L))
-      .suchThat { case (a, b) => a != b }
-      .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
-    for (seed <- 0 until 3) {
-      val edges = samples(edgeGen, 25 + 5 * seed).distinct
-      if (edges.nonEmpty) {
-        val got = graft.operators.Clustering
-          .connectedComponents(edges.toDF("a", "b"), "a", "b")
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        // reference union-find with min-label roots
-        val parent = scala.collection.mutable.Map.empty[Long, Long]
-        def find(x: Long): Long = {
-          val p = parent.getOrElse(x, x)
-          if (p == x) x else { val r = find(p); parent(x) = r; r }
-        }
-        edges.foreach { case (a, b) =>
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        }
-        val expect = edges.flatMap(e => Seq(e._1, e._2)).distinct
-          .map(n => n -> find(n)).toMap
-        assert(got == expect, s"seed $seed")
-      }
-    }
+    // Sparse ids in random order, so label order is unrelated to the
+    // graph's shape: paths, random trees, and random multigraphs with
+    // duplicate edges and self-loops.
+    val ids = Gen.choose(2, 40)
+      .flatMap(n => Gen.listOfN(n, Gen.choose(0L, 999999L))).map(_.distinct)
+    val path = ids.map(v => v.zip(v.tail))
+    val tree = ids.flatMap(v => Gen.sequence[List[(Long, Long)], (Long, Long)](
+      v.indices.tail.map(i => Gen.choose(0, i - 1).map(j => (v(j), v(i))))))
+    val random = ids.flatMap(v =>
+      Gen.listOfN(v.size, Gen.zip(Gen.oneOf(v), Gen.oneOf(v))))
+    // every sample in one call over disjoint id ranges: the union's
+    // components are the samples' components
+    val edges = samples(Gen.oneOf(path, tree, random), 24).zipWithIndex
+      .flatMap { case (g, i) =>
+        g.map { case (a, b) => (a + i * 1000000L, b + i * 1000000L) } }
+    val got = graft.operators.Clustering
+      .connectedComponents(edges.toDF("a", "b"), "a", "b")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == UnionFind.components(edges))
   }
 
   test("cqlLiteral text quoting survives embedded quotes (spec unescape)") {

@@ -44,4 +44,22 @@ class ScansSpec extends SparkSpec {
     assert(shuffleWidth(Scans.spreadByKeyWide(ids, col("id"))) ===
       spark.conf.get("spark.sql.shuffle.partitions").toInt)
   }
+
+  test("an Observation on an eager localCheckpoint completes without another action") {
+    // Clustering.connectedComponents reads every round's edge count this
+    // way: the checkpoint job publishes the metrics, no probe job runs.
+    // Spark completes the future from its listener bus after the job, so
+    // it may still be pending the instant localCheckpoint returns; it
+    // must arrive within a short deadline with no further action.
+    val obs = org.apache.spark.sql.Observation()
+    val ck = spark.range(1000).filter(col("id") % 3 === 0)
+      .observe(obs, count(lit(1)).as("n"))
+      .localCheckpoint(true)
+    assert(Scans.observed(obs, "spec checkpoint", deadlineSec = 5)("n") == 334L)
+    assert(ck.count() == 334L)
+    // metrics that never arrive fail with a message naming the revert
+    val e = intercept[IllegalStateException](Scans.observed(
+      org.apache.spark.sql.Observation(), "an unrun query", deadlineSec = 1))
+    assert(e.getMessage.contains("driver-side count() probes"), e.getMessage)
+  }
 }
