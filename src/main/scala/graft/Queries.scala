@@ -3976,16 +3976,12 @@ object Queries {
   private val roundFive: Seq[Q] = Seq(
     Q("dedup_clusters_largestar",
       // Twin of dedup_clusters kept because perfbench's pinned entry
-      // list names it: the same connected-components call and the same
-      // output, differing only in dedupPairs = false. minhashLshPairs
-      // emits one row per unordered pair (unique by its verification
-      // groupBy) already in doc_a < doc_b orientation, so the loop-entry
-      // distinct() exchange is a no-op — skipping it is row-identical
-      // (oracle-gated here, shared oracle with dedup_clusters).
+      // list names it: the identical connected-components call and
+      // output (oracle-gated here, shared oracle with dedup_clusters).
       (s, d) => Clustering.connectedComponents(
           TextDedup.minhashLshPairs(Tables.documents(s, d), "doc_id", "text",
             n = 3, numPerm = 128, bands = 32, threshold = 0.8),
-          "doc_a", "doc_b", dedupPairs = false)
+          "doc_a", "doc_b")
         .withColumn("keep", (col("doc_id") === col("cluster_id")).cast("boolean")),
       Some(s"""WITH RECURSIVE pr AS (${jaccardPairsSql(0.8)}),
         |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pr

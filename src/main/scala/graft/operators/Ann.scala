@@ -347,7 +347,6 @@ object Ann {
     // r15: every candidate checkpoint also observes its row count, so the
     // post-loop `nCand` read is a driver-side scalar instead of one more
     // count job over the relation.
-    val sc = spark.sparkContext
     def ckCounted(df: DataFrame): (DataFrame, Long) = {
       val o = org.apache.spark.sql.Observation()
       val ck = df.observe(o, count(lit(1)).as("n")).localCheckpoint(true)
@@ -373,14 +372,13 @@ object Ann {
       // blocks. The checkpoint is (vec_id, d) — 16 bytes/row — and is
       // released as soon as the round's candidate set is materialized.
       val costObs = org.apache.spark.sql.Observation()
-      val beforeIds = sc.getPersistentRDDs.keySet.toSet
       val scored = ivfAssign(v, cents, "vec_id", "v", "centroid_id", "cv")
         .select(col("vec_id"), greatest(lit(0.0), lit(1.0) - col("cosine")).as("d"))
         .observe(costObs,
           sum(col("d").cast(org.apache.spark.sql.types.DecimalType(38, 12)))
             .cast("double").as("cost"))
         .localCheckpoint(true)
-      val scoredIds = sc.getPersistentRDDs.keySet.toSet -- beforeIds
+      val scoredRdds = Scans.persistedRdds(scored)
       // a null sum (empty corpus) reads as exhausted — the padding below
       // covers it (the former head().getDouble raised on that input)
       val cost =
@@ -405,8 +403,7 @@ object Ann {
         candDf = ck
         nCandCur = n
       }
-      scoredIds.foreach(id =>
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
+      scoredRdds.foreach(_.unpersist(false))
     }
     // pad deterministically if sampling came up short of k
     val nCand = nCandCur

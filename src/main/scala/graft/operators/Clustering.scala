@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -16,9 +17,9 @@ import org.apache.spark.sql.functions._
   * arrive in random order and kNN graphs whose components are not
   * cliques. Every round is declarative (groupBy + min + join) with an
   * eager localCheckpoint truncating lineage; the driver only decides
-  * WHEN to stop (a row count per round), it never touches row data.
-  * `maxIter` bounds the loop, and a loop that reaches it unconverged
-  * throws rather than return partial labels.
+  * WHEN to stop (one star-forest violator count per round), it never
+  * touches row data. `maxIter` bounds the loop, and a loop that reaches
+  * it unconverged throws rather than return partial labels.
   */
 object Clustering {
 
@@ -37,19 +38,15 @@ object Clustering {
     *
     * The edge relation only ever SHRINKS to the forest edges
     * (node → component min), so per-round cost is bounded by the initial
-    * near-dup edge list. Fixpoint = a round produces the same edge set.
-    *
-    * @param dedupPairs pass false when `pairs` is PROVABLY one row per
-    *   undirected edge in canonical (aCol < bCol) orientation — e.g.
-    *   minhashLshPairs output, unique by its verification groupBy with
-    *   doc_a < doc_b from candidate generation — to skip the initial
-    *   distinct()'s exchange; the canonicalized projection of such input
-    *   is already distinct, so the relation entering the loop is
-    *   row-identical either way.
+    * near-dup edge list. The loop stops after the first round whose
+    * edges form a star forest: every `dst` appears once and no `src`
+    * appears as a `dst`. Each star is then a whole component rooted at
+    * its minimum — both stars preserve connectivity — and one more round
+    * would map the forest onto itself, so the test is exact.
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-                          maxIter: Int = 32,
-                          dedupPairs: Boolean = true): DataFrame = {
+                          maxIter: Int = 32): DataFrame = {
+    require(maxIter > 0, "maxIter must be positive")
     val spark = pairs.sparkSession
     val sc = spark.sparkContext
     // Eager localCheckpoint TRUNCATES LINEAGE: the edge relation is tiny
@@ -68,14 +65,12 @@ object Clustering {
     // DETERMINISTICALLY (the ContextCleaner would eventually GC them, but
     // a long-lived driver clustering repeatedly shouldn't accumulate
     // block-manager entries until then).
-    def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet.toSet
+    def checkpointTracked(df: DataFrame): (DataFrame, Seq[RDD[_]]) = {
       val ck = df.localCheckpoint(true)
       (org.apache.spark.sql.graft.DataFrameUtils.rebase(ck),
-        sc.getPersistentRDDs.keySet.toSet -- before)
+        Scans.persistedRdds(ck))
     }
-    def unpersistIds(ids: Set[Int]): Unit =
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
+    def release(rdds: Seq[RDD[_]]): Unit = rdds.foreach(_.unpersist(false))
     // Size-gated broadcast of each star's per-node-min side (broadcast
     // the side you KNOW is small): `mins` is one (node, min) row per
     // node, never more than twice the canonical edge relation whose
@@ -113,8 +108,7 @@ object Clustering {
       // aggregate is duplicate-insensitive and whose output carries the
       // round's distinct() — and largeStar emits at most one row per
       // directed (u, v>u) input pair, so skipping the dedup cannot blow
-      // the relation up. The fixpoint probe still compares DISTINCT edge
-      // sets (smallStar's output).
+      // the relation up.
     }
     def smallStar(e: DataFrame): DataFrame = {
       val hiLo = e.select(greatest(col("src"), col("dst")).as("u"),
@@ -129,82 +123,51 @@ object Clustering {
         .filter(col("src") =!= col("dst"))
       viaNbr.unionByName(viaSelf).distinct()
     }
-    // The initial edges KEEP self-loops, so a node whose only pair is a
-    // self-loop is in the node set the final labelling reads; largeStar
-    // drops them (v > u), so the loop's relations never carry one. The
-    // first round then differs from the initial edges whenever a
-    // self-loop was present, which costs at most one extra round.
-    // Initial emptiness rides an Observation on the same checkpoint job.
-    val initObs = org.apache.spark.sql.Observation()
-    val canonical = pairs
+    // Nodes that break the star-forest shape of a round's (distinct,
+    // canonical src < dst) edges: a `dst` with two parents, or a `dst`
+    // that is also a `src`. One grouped count; 0 ⟺ star forest.
+    def starViolators(e: DataFrame): Long =
+      e.select(col("dst").as("node"), lit(1).as("in"), lit(0).as("out"))
+        .unionByName(e.select(col("src").as("node"), lit(0).as("in"),
+          lit(1).as("out")))
+        .groupBy("node").agg(sum(col("in")).as("in"), max(col("out")).as("out"))
+        .filter(col("in") > 1 || (col("in") === 1 && col("out") === 1))
+        .count()
+    // The initial edges keep self-loops and duplicate pairs: the final
+    // labelling reads its node set from them, so a node whose only pair
+    // is a self-loop stays covered. largeStar drops self-loops (v > u)
+    // and round 1's small-star distinct() drops duplicates, so no
+    // round's edges carry either. They are protected from the loop's
+    // release and freed after the labels checkpoint.
+    val (edges0, edges0Rdds) = checkpointTracked(pairs
       .select(least(col(aCol), col(bCol)).as("src"),
-        greatest(col(aCol), col(bCol)).as("dst"))
-    var (edges, edgeIds) = checkpointTracked(
-      (if (dedupPairs) canonical.distinct() else canonical)
-        .observe(initObs, count(lit(1)).as("n")))
+        greatest(col(aCol), col(bCol)).as("dst")))
     minsFit = Scans.fitsBroadcast(spark,
-      2L * Scans.materializedBytes(sc, edgeIds))
-    // Nodes with no surviving edge after a star round are their own
-    // component OR have already been attached to their min; the final
-    // labelling needs the INITIAL node set so every node in `pairs`
-    // stays covered. It is derived lazily from the initial checkpointed
-    // edges inside the final labelling job instead of materializing a
-    // second checkpoint at loop entry — same union+distinct work, one
-    // blocking driver job fewer per call. The initial edge blocks are
-    // protected from the loop's unpersist and released after the labels
-    // checkpoint.
-    val edges0 = edges
-    val edges0Ids = edgeIds
+      2L * Scans.materializedBytes(sc, edges0Rdds))
+    var edges = edges0
+    var edgeRdds = Seq.empty[RDD[_]]
+    var violators = -1L
     var iter = 0
-    var prevCount = Scans.observed(initObs, "cc initial edge count")("n")
-      .asInstanceOf[Long]
-    var changed = 0L
-    var converged = prevCount == 0
-    while (iter < maxIter && !converged) {
-      // Each round's checkpoint job also observes its output row count:
-      // both sides of the fixpoint comparison are DISTINCT edge sets, so
-      // differing counts prove the sets differ and the round is not
-      // converged — the symmetric-difference probe job only runs when the
-      // counts match (typically the final round).
-      val roundObs = org.apache.spark.sql.Observation()
-      val (next, nextIds) = checkpointTracked(smallStar(largeStar(edges))
-        .observe(roundObs, count(lit(1)).as("n")))
-      val nextCount = Scans.observed(roundObs, s"cc round $iter edge count")("n")
-        .asInstanceOf[Long]
-      // Fixpoint = identical edge SETS: ONE symmetric-difference probe —
-      // union with ±1 weights, grouped sum ≠ 0 ⟺ an edge on exactly one
-      // side — a plain partial-aggregated count shuffle where joins would
-      // sort or broadcast. Safe against the exceptAll
-      // constraint-propagation trap because both sides are rebased
-      // checkpoints with fresh lineage (see checkpointTracked above).
-      // `changed` is a lower bound on the edges that differ: the count
-      // delta, or the probe's one witness.
-      changed =
-        if (nextCount != prevCount) math.abs(nextCount - prevCount)
-        else next.select(col("src"), col("dst"), lit(1).as("w"))
-          .unionByName(edges.select(col("src"), col("dst"), lit(-1).as("w")))
-          .groupBy("src", "dst").agg(sum(col("w")).as("d"))
-          .filter(col("d") =!= 0)
-          .limit(1).count()
-      unpersistIds(edgeIds -- edges0Ids)
+    while (iter < maxIter && violators != 0) {
+      val (next, nextRdds) = checkpointTracked(smallStar(largeStar(edges)))
+      release(edgeRdds)
       edges = next
-      edgeIds = nextIds
-      prevCount = nextCount
-      converged = changed == 0
+      edgeRdds = nextRdds
+      violators = starViolators(edges)
       iter += 1
     }
-    if (!converged) {
-      unpersistIds(edgeIds ++ edges0Ids)
-      throw notConverged(maxIter, changed)
+    if (violators != 0) {
+      release(edgeRdds ++ edges0Rdds)
+      throw notConverged(maxIter, violators)
     }
-    // At fixpoint the edge relation IS the star forest: every non-root
-    // appears exactly once as (component min, node). Nodes absent from
-    // the dst side are component roots labelling themselves. Checkpoint
-    // the labels BEFORE releasing the edge/node blocks they derive from
-    // (the caller consumes labels after this frame returns).
+    // Every non-root appears exactly once in the star forest as
+    // (component min, node). Nodes absent from the dst side are
+    // component roots labelling themselves. Checkpoint the labels BEFORE
+    // releasing the edge blocks they derive from (the caller consumes
+    // labels after this frame returns).
     val nodes = edges0.select(col("src").as("node"))
       .unionByName(edges0.select(col("dst").as("node"))).distinct()
-    // the fixpoint forest never exceeds the initial edge relation, so the
+    // the star forest never exceeds the initial edge relation, so the
     // same size gate covers broadcasting it under the left join
     val (labels, _) = checkpointTracked(nodes
       .join(maybeBcast(
@@ -212,13 +175,14 @@ object Clustering {
         Seq("node"), "left")
       .select(col("node").as("doc_id"),
         coalesce(col("comp"), col("node")).as("cluster_id")))
-    unpersistIds(edgeIds ++ edges0Ids)
+    release(edgeRdds ++ edges0Rdds)
     labels
   }
 
-  private def notConverged(maxIter: Int, changed: Long): IllegalStateException =
+  private def notConverged(maxIter: Int, violators: Long): IllegalStateException =
     new IllegalStateException("connectedComponents did not converge within " +
-      s"maxIter = $maxIter rounds (last round's changed count: $changed)")
+      s"maxIter = $maxIter rounds (last round's star-forest violators: " +
+      s"$violators nodes)")
 
   /** Duplicate clusters from near-dup pairs: every clustered doc with its
     * cluster id (= min doc id in the cluster) and a keep flag on the

@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.spark.SparkContext
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** Scan-parallelism plumbing shared by operators and query bodies (r14
   * optimization round).
@@ -87,17 +89,17 @@ object Scans {
 
   /** Bounded read of an [[org.apache.spark.sql.Observation]] whose
     * metrics were published by an EAGER localCheckpoint rather than a
-    * caller-run action (the CC loop's per-round edge counts, the
-    * kmeans candidate counts). That publish relies on Spark-internal
-    * behavior — eager checkpoint executing under `withAction` — probed
-    * and spec-gated on this Spark version; if an upgrade changes the
-    * wrapping, the metrics never arrive and a bare `get()` would hang
-    * the operator FOREVER (r14 advice). By the time callers read, the
-    * checkpoint action has completed; Spark resolves the metrics future
-    * from its listener bus, so it may still be pending for moments after
-    * the checkpoint returns (ScansSpec pins that it resolves with no
-    * further action). The deadline only fires in the broken-contract
-    * case, as a pointed error instead of a hang.
+    * caller-run action (the kmeans candidate counts and round costs in
+    * `Ann.initCentroids`, the only reader). That publish relies on
+    * Spark-internal behavior — eager checkpoint executing under
+    * `withAction` — probed and spec-gated on this Spark version; if an
+    * upgrade changes the wrapping, the metrics never arrive and a bare
+    * `get()` would hang the operator FOREVER (r14 advice). By the time
+    * callers read, the checkpoint action has completed; Spark resolves
+    * the metrics future from its listener bus, so it may still be pending
+    * for moments after the checkpoint returns (ScansSpec pins that it
+    * resolves with no further action). The deadline only fires in the
+    * broken-contract case, as a pointed error instead of a hang.
     */
   def observed(obs: org.apache.spark.sql.Observation, what: => String,
                deadlineSec: Int = 600): Map[String, Any] =
@@ -112,19 +114,36 @@ object Scans {
           s"Observation metrics for <$what> did not arrive within " +
             s"$deadlineSec s of the checkpoint action completing — the " +
             "eager-localCheckpoint metrics-publish contract no longer " +
-            "holds on this Spark version; revert the fused convergence " +
+            "holds on this Spark version; revert the fused Observation " +
             "reads to driver-side count() probes.")
     }
 
+  /** The persisted RDDs in `df`'s own lineage: for an eager
+    * `localCheckpoint`, the checkpointed RDD that holds its blocks. Read
+    * from the Dataset itself rather than diffed from the context-wide
+    * `getPersistentRDDs` before and after the checkpoint, so an RDD that
+    * another thread persists in that window is never taken (and later
+    * unpersisted) as this caller's. The walk stops at the first persisted
+    * RDD on each path; a checkpoint truncates the lineage there anyway.
+    */
+  def persistedRdds(df: Dataset[_]): Seq[RDD[_]] = {
+    def walk(rdd: RDD[_]): Seq[RDD[_]] =
+      if (rdd.getStorageLevel != StorageLevel.NONE) Seq(rdd)
+      else rdd.dependencies.flatMap(d => walk(d.rdd))
+    walk(df.queryExecution.toRdd).distinct
+  }
+
   /** Exact materialized byte size of already-cached/checkpointed RDDs, from
     * the block manager's storage report (driver-side metadata, no job).
-    * `ids` are the RDD ids a `localCheckpoint(true)` registered — e.g. the
-    * tracked set Clustering's checkpointTracked returns. Returns 0 when
-    * nothing is found (empty relation or already unpersisted).
+    * `rdds` are the ones a `localCheckpoint(true)` registered, as
+    * [[persistedRdds]] finds them. Returns 0 when nothing is found (empty
+    * relation or already unpersisted).
     */
-  def materializedBytes(sc: SparkContext, ids: Set[Int]): Long =
+  def materializedBytes(sc: SparkContext, rdds: Seq[RDD[_]]): Long = {
+    val ids = rdds.map(_.id).toSet
     sc.getRDDStorageInfo.filter(i => ids.contains(i.id))
       .map(i => i.memSize + i.diskSize).sum
+  }
 
   /** Would a relation of `bytes` qualify for a broadcast join under the
     * session's own `spark.sql.autoBroadcastJoinThreshold`? Used to hint

@@ -53,18 +53,17 @@ class ClusteringSpec extends SparkSpec {
   }
 
   test("propagation converges on a long chain with the fused changed-count") {
-    // Each round's edge count is read from an Observation collected
-    // during the round's checkpoint job; a count that under- or
-    // over-reports would terminate early (wrong labels) or run to
-    // maxIter. A 40-edge chain needs several rounds, so exact labels
-    // prove the fused count gates the loop.
+    // Each round ends with the star-forest violator count; a count that
+    // under- or over-reports would terminate early (wrong labels) or run
+    // to maxIter. A 40-edge chain needs several rounds, so exact labels
+    // prove the test gates the loop.
     val chain = (0L until 40L).map(i => (i, i + 1)).toDF("a", "b")
     val got = labels(Clustering.connectedComponents(chain, "a", "b"))
     assert(got.size == 41 && got.values.toSet == Set(0L))
   }
 
   test("propagation throws when a chain outruns maxIter") {
-    // the 40-edge ordered chain needs 7 rounds
+    // the 40-edge ordered chain needs 6 rounds
     val chain = (0L until 40L).map(i => (i, i + 1)).toDF("a", "b")
     val e = intercept[IllegalStateException](
       Clustering.connectedComponents(chain, "a", "b", maxIter = 2))
@@ -73,6 +72,7 @@ class ClusteringSpec extends SparkSpec {
   }
 
   test("stars throws when a chain outruns maxIter") {
+    // the 63-edge ordered chain needs 6 rounds
     val chain = (0L until 63L).map(i => (i, i + 1)).toDF("a", "b")
     val e = intercept[IllegalStateException](
       Clustering.connectedComponents(chain, "a", "b", maxIter = 1))
@@ -81,12 +81,9 @@ class ClusteringSpec extends SparkSpec {
   }
 
   test("both variants handle an empty pair relation") {
-    // the initial-emptiness probe rides an Observation on the edge
-    // checkpoint; no round runs
+    // one round over the empty relation: no edges, no violators
     val empty = Seq.empty[(Long, Long)].toDF("a", "b")
     assert(labels(Clustering.connectedComponents(empty, "a", "b")).isEmpty)
-    assert(labels(Clustering.connectedComponents(empty, "a", "b",
-      dedupPairs = false)).isEmpty)
   }
 
   test("stars output is identical across partitionings") {
@@ -115,6 +112,39 @@ class ClusteringSpec extends SparkSpec {
       assert(got.map(r => r._1 -> r._2).toMap == UnionFind.components(edges))
       assert(got.filter(_._3).map(_._1).toSeq == Seq(ids.min))
     }
+
+  test("the loop stops at the first round whose edges form a star forest") {
+    // Two cliques: round 1 maps each onto the star rooted at its min, so
+    // one round suffices; confirming a fixpoint would need a second.
+    def clique(ids: Seq[Long]) =
+      for (a <- ids; b <- ids if a < b) yield (a, b)
+    val edges = new scala.util.Random(11)
+      .shuffle(clique(1L to 5L) ++ clique(10L to 13L))
+    assert(labels(Clustering.connectedComponents(
+      edges.toDF("a", "b"), "a", "b", maxIter = 1)) ==
+      UnionFind.components(edges))
+  }
+
+  test("concurrent calls in one session keep their own checkpoint blocks") {
+    // Each call releases the checkpoints it made; one taken from another
+    // thread's call would fail that call's next read. A different
+    // shuffle per thread keeps the threads' rounds out of step.
+    val paths = (1 to 3).map { t =>
+      val ids = new scala.util.Random(t)
+        .shuffle((0L until 1000000L by 7919L).take(200).toVector)
+      ids.sliding(2).map(p => (p(0), p(1))).toSeq
+    }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+    try {
+      val runs = paths.map(edges => pool.submit(
+        new java.util.concurrent.Callable[Seq[Boolean]] {
+          def call(): Seq[Boolean] = (1 to 3).map(_ =>
+            labels(Clustering.connectedComponents(edges.toDF("a", "b"),
+              "a", "b")) == UnionFind.components(edges))
+        }))
+      assert(runs.flatMap(_.get()).forall(identity))
+    } finally pool.shutdown()
+  }
 
   test("a node whose only pair is a self-loop is labelled with itself") {
     val edges = Seq((5L, 5L), (1L, 2L), (9L, 9L), (9L, 9L))

@@ -46,7 +46,7 @@ class ScansSpec extends SparkSpec {
   }
 
   test("an Observation on an eager localCheckpoint completes without another action") {
-    // Clustering.connectedComponents reads every round's edge count this
+    // Ann.initCentroids reads its candidate counts and round costs this
     // way: the checkpoint job publishes the metrics, no probe job runs.
     // Spark completes the future from its listener bus after the job, so
     // it may still be pending the instant localCheckpoint returns; it
@@ -61,5 +61,18 @@ class ScansSpec extends SparkSpec {
     val e = intercept[IllegalStateException](Scans.observed(
       org.apache.spark.sql.Observation(), "an unrun query", deadlineSec = 1))
     assert(e.getMessage.contains("driver-side count() probes"), e.getMessage)
+  }
+
+  test("persistedRdds takes an eager checkpoint's RDD from its own lineage") {
+    val sc = spark.sparkContext
+    val other = sc.parallelize(1 to 10).cache()
+    other.count()
+    val ck = spark.range(1000).filter(col("id") % 3 === 0).localCheckpoint(true)
+    val rdds = Scans.persistedRdds(ck)
+    assert(rdds.size == 1, rdds)
+    assert(rdds.head.id != other.id && sc.getPersistentRDDs.contains(rdds.head.id))
+    assert(Scans.materializedBytes(sc, rdds) > 0)
+    rdds.foreach(_.unpersist(true))
+    other.unpersist(true)
   }
 }
