@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** What the command-line mains (`Verify`, `VerifySlice`, `Bench`,
-  * `tools.Probe`, `tools.SwapProbe`) share: one local session builder and
-  * one parser of the `SPARK_GRAFT_ONLY` subset filter.
+  * `tools.Probe`) share: one local session builder and one parser of the
+  * `SPARK_GRAFT_ONLY` subset filter.
   */
 private[graft] object Mains {
 

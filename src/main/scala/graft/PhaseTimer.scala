@@ -3,10 +3,9 @@ package graft
 /** The library's one timing hook, threaded through the maintenance
   * APPLY bodies and the publish machinery: the production entries run
   * them un-timed ([[NoTimer]] — zero overhead, the phases inline away).
-  * Two timed implementations drive the SAME bodies: the benchmark's
+  * One timed implementation drives the SAME bodies: the benchmark's
   * traced run (`graft.perfbench.Tracer`, which turns each phase into a
-  * span with its Spark jobs attributed) and `graft.tools.SwapProbe` (a
-  * wall-clock timer per phase at sf100). One code path, so attribution
+  * span with its Spark jobs attributed). One code path, so attribution
   * can never drift from what the entries ship.
   */
 trait PhaseTimer {

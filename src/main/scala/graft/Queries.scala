@@ -1119,7 +1119,7 @@ object Queries {
     * Deterministic per corpus (a function of the row count), consistent
     * between the ensure-build layout and the entry's pmod computations.
     */
-  private[graft] def dedupUpsertParts(n: Long): Int = {
+  private def dedupUpsertParts(n: Long): Int = {
     val target = math.max(16L, n / 10000L)
     var pw = 16
     while (pw < target && pw < (1 << 20)) pw <<= 1
@@ -1180,7 +1180,7 @@ object Queries {
     * consumes them directly instead of re-running the corpus diff and
     * assignment probes a second time.
     */
-  private[graft] def knnUpsertApply(s: SparkSession, ivfBase: String,
+  private def knnUpsertApply(s: SparkSession, ivfBase: String,
       edgeBase: String, prev: DataFrame, curr: DataFrame, cents: DataFrame,
       t: PhaseTimer = NoTimer, outTbl: Option[String] = None): DataFrame = {
     val (affSet, recomputed) = t("parts_compute") {
@@ -1207,7 +1207,7 @@ object Queries {
     * (pairs / banded keys / membership) → membership version read.
     * See the entry's comment for the affected-set derivations.
     */
-  private[graft] def dedupUpsertApply(s: SparkSession, pairsTbl: String,
+  private def dedupUpsertApply(s: SparkSession, pairsTbl: String,
       lshTbl: String, clusTbl: String, prev: DataFrame, curr: DataFrame,
       nParts: Int, t: PhaseTimer = NoTimer,
       from: String = "", to: String = "_v2"): DataFrame = {
@@ -1353,7 +1353,7 @@ object Queries {
     * measurement of the delta-sized operator (r7 benched 10.97 s of
     * which ~2/3 was this setup).
     */
-  private[graft] def ensureUpsertBaseIndex(s: SparkSession, d: String,
+  private def ensureUpsertBaseIndex(s: SparkSession, d: String,
       prev: DataFrame, pairsTbl: String, lshTbl: String,
       clusTbl: String, parts: Int): Unit = {
     val fprintName = "dedup_upsert_fprint_" + d.replaceAll("[^A-Za-z0-9]", "_")
@@ -5584,7 +5584,6 @@ object Queries {
       // matches and the published version is alive (or adoptable from
       // its persisted manifest after a JVM restart), the entry READS it
       // instead of re-running maintenance — the production contract.
-      // graft.tools.SwapProbe still prices the raw apply.
       (s, d) => {
         val (prev, curr, cents) = upsertEmbCorpora(s, d)
         val tbl = ensureIvfUpsertBase(s, d, prev, cents)
@@ -5624,8 +5623,7 @@ object Queries {
       // swap-published membership ≡ rebuild row-for-row.
       // Adopt-preference over all three published versions; standing
       // index (verified pairs, banded keys, membership) ensure-built
-      // ONCE per corpus — the benched body prices the steady-state
-      // read, SwapProbe prices the raw delta apply.
+      // ONCE per corpus — the benched body prices the steady-state read.
       (s, d) => {
         val (prev, curr, pairsTbl, lshTbl, clusTbl, nParts) =
           dedupUpsertCtx(s, d)
@@ -5683,7 +5681,7 @@ object Queries {
     * and `knn_graph_index_upsert` exercise the SAME diff and compose
     * into one maintained-index story.
     */
-  private[graft] def upsertEmbCorpora(s: SparkSession, d: String)
+  private def upsertEmbCorpora(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame) = {
     val emb = Tables.embeddings(s, d)
     // INGEST-BATCH-SIZED diff: the touched classes are three residues of
@@ -5708,7 +5706,7 @@ object Queries {
     * Mirrored verbatim by the oracles' `GREATEST(1, 16 * CAST(FLOOR(
     * SQRT(COUNT(*))) AS BIGINT))` subquery.
     */
-  private[graft] def upsertDiffModulus(n: Long): Long =
+  private def upsertDiffModulus(n: Long): Long =
     math.max(1L, 16L * math.floor(math.sqrt(n.toDouble)).toLong)
 
   /** The diff-modulus subquery shared by every upsert oracle. */
@@ -5817,7 +5815,7 @@ object Queries {
     * so the benched upsert bodies price the delta apply, not the base
     * build. Returns the table name.
     */
-  private[graft] def ensureIvfUpsertBase(s: SparkSession, d: String,
+  private def ensureIvfUpsertBase(s: SparkSession, d: String,
                                   prev: DataFrame, cents: DataFrame): String = {
     val tbl = "ivf_upsert_base_" + d.replaceAll("[^A-Za-z0-9]", "_")
     // v3 (the chained entry's second hop) references v2's delta dirs, so
@@ -5850,7 +5848,7 @@ object Queries {
     * key [[graft.operators.Ann.knnEdgeIndexUpsert]] anti-joins on, so
     * unaffected buckets stream out of the base table without a shuffle.
     */
-  private[graft] def ensureKnnUpsertBase(s: SparkSession, d: String,
+  private def ensureKnnUpsertBase(s: SparkSession, d: String,
                                   prev: DataFrame, cents: DataFrame): String = {
     val tbl = "knn_edge_upsert_base_" + d.replaceAll("[^A-Za-z0-9]", "_")
     ensurePartitionedIndex(s, tbl, tableFingerprint(s, d, "embeddings.parquet"),

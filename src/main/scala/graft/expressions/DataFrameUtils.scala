@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.RebalancePartitions
 import org.apache.spark.sql.classic.{DataFrame => ClassicDataFrame, Dataset, SparkSession => ClassicSparkSession}
@@ -26,6 +27,9 @@ import org.apache.spark.sql.classic.{DataFrame => ClassicDataFrame, Dataset, Spa
   * to `internalCreateDataFrame`: fresh lineage, zero per-row conversion.
   *
   * [[rebalance]] — the plan node behind `ParquetSink.writeSizeControlled`.
+  *
+  * [[release]] — frees an iterative operator's superseded local
+  * checkpoints without the WARN `RDD.unpersist` logs for each one.
   */
 object DataFrameUtils {
   def rebase(df: DataFrame): DataFrame = rebase(df, df.sparkSession)
@@ -54,4 +58,18 @@ object DataFrameUtils {
     Dataset.ofRows(classic.sparkSession, RebalancePartitions(Nil,
       classic.queryExecution.logical, None, Some(advisoryBytes)))
   }
+
+  /** Drops the cached blocks of `rdds` without blocking. An iterative
+    * operator calls it on the local checkpoints it has superseded (their
+    * lineage is truncated on purpose, and nothing reads them again).
+    * `RDD.unpersist` logs "RDD N was locally checkpointed, its lineage has
+    * been truncated…" at WARN for every such RDD and then calls
+    * `SparkContext.unpersistRDD`, which is `private[spark]`; this calls
+    * it directly, so the caller's log shows no warning for a release that
+    * is intended. The RDD objects keep their storage level, which no
+    * caller reads after the release. If `unpersistRDD` changes, revert to
+    * `rdds.foreach(_.unpersist(false))`.
+    */
+  def release(rdds: Seq[RDD[_]]): Unit =
+    rdds.foreach(r => r.context.unpersistRDD(r.id, blocking = false))
 }

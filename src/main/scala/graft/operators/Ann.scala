@@ -403,7 +403,7 @@ object Ann {
         candDf = ck
         nCandCur = n
       }
-      scoredRdds.foreach(_.unpersist(false))
+      org.apache.spark.sql.graft.DataFrameUtils.release(scoredRdds)
     }
     // pad deterministically if sampling came up short of k
     val nCand = nCandCur
@@ -724,62 +724,22 @@ object Ann {
                          centroids: DataFrame, idCol: String, vecCol: String,
                          centroidIdCol: String, centroidVecCol: String,
                          k: Int): DataFrame = {
-    val (affected, recomputed) = knnEdgeIndexUpsertParts(base, currIdx,
-      prevEmb, currEmb, centroids, idCol, vecCol, centroidIdCol,
-      centroidVecCol, k)
+    val affected = affectedBuckets(prevEmb, currEmb, centroids, idCol,
+      vecCol, centroidIdCol, centroidVecCol, eager = true).affected
+    val recomputed = knnEdgeRecompute(
+      currIdx.join(broadcast(affected), Seq("centroid_id"), "left_semi"), k)
     base.join(broadcast(affected), Seq("centroid_id"), "left_anti")
       .select("query_id", "neighbor_id", "rank", "cosine", "centroid_id")
       .unionByName(recomputed)
   }
 
-  /** [[knnEdgeIndexUpsert]] split at its carry-over boundary — the form
-    * the DELTA-COST PUBLISH consumes: returns (affected centroid ids,
-    * recomputed edges of exactly those buckets) so the caller can
-    * rewrite only affected partitions and reference every other
-    * bucket's files in place
-    * ([[graft.sources.ParquetSink.publishPartitionSwap]]), instead of
-    * re-unioning the corpus-sized carry-over just to rewrite it. The
-    * union form above is parts-equivalent by construction, so the
-    * existing oracle and poisoned-bucket spec gate both.
-    */
-  def knnEdgeIndexUpsertParts(base: DataFrame, currIdx: DataFrame,
-                              prevEmb: DataFrame, currEmb: DataFrame,
-                              centroids: DataFrame, idCol: String,
-                              vecCol: String, centroidIdCol: String,
-                              centroidVecCol: String, k: Int,
-                              eagerCheckpoint: Boolean = true)
-      : (DataFrame, DataFrame) = {
-    // ONE pass over the corpus-sized diff ([[ivfIndexUpsertParts]]'s
-    // discipline); the probes below are delta-sized off the cut
-    val touched = localCut(touchedDiff(prevEmb, currEmb, idCol, vecCol,
-      eagerCheckpoint), eagerCheckpoint)
-    val incoming = touched.filter(col("nv").isNotNull)
-      .select(col("vec_id"), col("nv").as("v"))
-    val leaving = touched.filter(col("pv").isNotNull)
-      .select(col("vec_id"), col("pv").as("v"))
-    // every bucket a changed id maps into under its OLD or NEW vector —
-    // both probes delta-sized against the broadcast frozen set; cut so
-    // the swap publish's driver-side partition list and the carry-over
-    // anti-join both read the tiny cached set
-    val affected = localCut(
-      ivfAssign(leaving, centroids, "vec_id", "v",
-          centroidIdCol, centroidVecCol).select("centroid_id")
-        .unionByName(ivfAssign(incoming, centroids, "vec_id", "v",
-          centroidIdCol, centroidVecCol).select("centroid_id"))
-        .distinct(),
-      eagerCheckpoint)
-    val bucketRows = currIdx
-      .join(broadcast(affected), Seq("centroid_id"), "left_semi")
-    (affected, knnEdgeRecompute(bucketRows, k))
-  }
-
   /** Recomputes the kNN edges of a set of buckets from their member
     * rows `(vec_id, v, centroid_id)` — the recompute tail of
-    * [[knnEdgeIndexUpsertParts]], exposed so a caller already holding
-    * the affected buckets' rows (e.g. [[ivfIndexUpsertParts]]'s
-    * affectedRows, which ARE exactly those rows since both parts forms
-    * derive the same affected set) can skip a second snapshot-diff
-    * pass. Bucket-local self-join + bounded-heap top-k.
+    * [[knnEdgeIndexUpsert]], exposed so a caller already holding the
+    * affected buckets' rows (e.g. [[ivfIndexUpsertParts]]'s
+    * affectedRows, which ARE exactly those rows since both derive the
+    * same affected set) can skip a second snapshot-diff pass.
+    * Bucket-local self-join + bounded-heap top-k.
     */
   def knnEdgeRecompute(bucketRows: DataFrame, k: Int): DataFrame = {
     val scored = bucketRows
@@ -957,13 +917,13 @@ object Ann {
   def ivfIndexUpsert(base: DataFrame, prevEmb: DataFrame, currEmb: DataFrame,
                      centroids: DataFrame, idCol: String, vecCol: String,
                      centroidIdCol: String, centroidVecCol: String): DataFrame = {
-    // Composed from the parts split (the knnEdgeIndexUpsert pattern), so
-    // the entry's rebuild oracle gates BOTH forms: carry-over is exact
-    // because a removed row's stored assignment equals the deterministic
-    // re-assignment of its old vector at the frozen centroids (scaladoc
-    // assumption 2) — i.e. every removed/changed row lies inside an
-    // affected bucket, making (base − affected buckets) ∪ affectedRows
-    // ≡ (base − removed) ∪ freshly-assigned incoming.
+    // Composed from the parts split, so the entry's rebuild oracle gates
+    // BOTH forms: carry-over is exact because a removed row's stored
+    // assignment equals the deterministic re-assignment of its old vector
+    // at the frozen centroids (scaladoc assumption 2) — i.e. every
+    // removed/changed row lies inside an affected bucket, making
+    // (base − affected buckets) ∪ affectedRows ≡ (base − removed) ∪
+    // freshly-assigned incoming.
     val (affected, affectedRows) = ivfIndexUpsertParts(base, prevEmb,
       currEmb, centroids, idCol, vecCol, centroidIdCol, centroidVecCol)
     base.join(broadcast(affected), Seq("centroid_id"), "left_anti")
@@ -1043,35 +1003,60 @@ object Ann {
                           centroidIdCol: String, centroidVecCol: String,
                           eagerCheckpoint: Boolean = true)
       : (DataFrame, DataFrame) = {
-    // ONE pass over the corpus-sized diff; everything below is
-    // delta-sized off the cut
+    val diff = affectedBuckets(prevEmb, currEmb, centroids, idCol, vecCol,
+      centroidIdCol, centroidVecCol, eagerCheckpoint)
+    val removed = diff.leaving.select("vec_id")
+    val incomingAssigned = diff.incoming
+      .join(diff.incomingAssign.select("vec_id", "centroid_id"), "vec_id")
+      .select(col("vec_id"), col("v"), col("centroid_id"))
+    val affectedRows = base
+      .join(broadcast(diff.affected), Seq("centroid_id"), "left_semi")
+      .join(broadcast(removed), Seq("vec_id"), "left_anti")
+      .select(col("vec_id"), col("v"), col("centroid_id"))
+      .unionByName(incomingAssigned)
+    (diff.affected, affectedRows)
+  }
+
+  /** An embedding snapshot diff at frozen centroids: the touched rows'
+    * NEW vectors (`incoming`, vec_id + v), their OLD vectors (`leaving`),
+    * the incoming rows' assignment (`incomingAssign`, [[ivfAssign]]'s
+    * output) and the `affected` centroid ids — every bucket a changed
+    * id maps into under its old OR new vector.
+    */
+  private case class AffectedBuckets(incoming: DataFrame,
+      leaving: DataFrame, incomingAssign: DataFrame, affected: DataFrame)
+
+  /** The one derivation of [[AffectedBuckets]], shared by
+    * [[ivfIndexUpsertParts]] and [[knnEdgeIndexUpsert]]: ONE pass over
+    * the corpus-sized diff behind a cut; everything after it is
+    * delta-sized.
+    */
+  private def affectedBuckets(prevEmb: DataFrame, currEmb: DataFrame,
+                              centroids: DataFrame, idCol: String,
+                              vecCol: String, centroidIdCol: String,
+                              centroidVecCol: String,
+                              eager: Boolean): AffectedBuckets = {
     val touched = localCut(touchedDiff(prevEmb, currEmb, idCol, vecCol,
-      eagerCheckpoint), eagerCheckpoint)
+      eager), eager)
     val incoming = touched.filter(col("nv").isNotNull)
       .select(col("vec_id"), col("nv").as("v"))
     val leaving = touched.filter(col("pv").isNotNull)
       .select(col("vec_id"), col("pv").as("v"))
-    val removed = leaving.select("vec_id")
     // one incoming-assignment plan feeds both consumers (the affected
     // set and the fresh rows), so the physical planner's exchange reuse
     // sees identical subtrees instead of two re-derivations
     val incomingAssign = ivfAssign(incoming, centroids, "vec_id", "v",
       centroidIdCol, centroidVecCol)
+    // both probes are delta-sized against the broadcast frozen set; cut
+    // so the swap publish's driver-side partition list and the
+    // carry-over anti-join both read the tiny cached set
     val affected = localCut(
       ivfAssign(leaving, centroids, "vec_id", "v",
           centroidIdCol, centroidVecCol).select("centroid_id")
         .unionByName(incomingAssign.select("centroid_id"))
         .distinct(),
-      eagerCheckpoint)
-    val incomingAssigned = incoming
-      .join(incomingAssign.select("vec_id", "centroid_id"), "vec_id")
-      .select(col("vec_id"), col("v"), col("centroid_id"))
-    val affectedRows = base
-      .join(broadcast(affected), Seq("centroid_id"), "left_semi")
-      .join(broadcast(removed), Seq("vec_id"), "left_anti")
-      .select(col("vec_id"), col("v"), col("centroid_id"))
-      .unionByName(incomingAssigned)
-    (affected, affectedRows)
+      eager)
+    AffectedBuckets(incoming, leaving, incomingAssign, affected)
   }
 
   /** Top principal component by POWER ITERATION — the distributed

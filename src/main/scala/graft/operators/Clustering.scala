@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.DataFrameUtils.release
 
 /** Connected components over a pair relation — the step that turns
   * near-duplicate PAIRS (from LSH / embedding bucketing) into duplicate
@@ -70,7 +71,6 @@ object Clustering {
       (org.apache.spark.sql.graft.DataFrameUtils.rebase(ck),
         Scans.persistedRdds(ck))
     }
-    def release(rdds: Seq[RDD[_]]): Unit = rdds.foreach(_.unpersist(false))
     // Size-gated broadcast of each star's per-node-min side (broadcast
     // the side you KNOW is small): `mins` is one (node, min) row per
     // node, never more than twice the canonical edge relation whose

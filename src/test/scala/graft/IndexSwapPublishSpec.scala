@@ -2,6 +2,10 @@ package graft
 
 import java.net.URI
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+import graft.operators.Ann
 import graft.sources.ParquetSink
 
 /** The PartitionSwapSpec byte-stability proof, extended to the REAL
@@ -191,5 +195,91 @@ class IndexSwapPublishSpec extends SparkSpec {
     assert(pairsV2Files.nonEmpty &&
       pairsV2Files.forall(f => new URI(f).getPath.startsWith(pairsBaseLoc) ||
         f.contains("_delta")))
+  }
+
+  /** An embedding snapshot of the sf corpus: ids ≡ `del` mod 97 absent,
+    * ids ≡ `rev` mod 97 with their vector reversed.
+    */
+  private def snap(del: Int, rev: Int): DataFrame =
+    Tables.embeddings(spark, sfDir).filter(col("vec_id") % 97 =!= del)
+      .withColumn("embedding", when(col("vec_id") % 97 === rev,
+        reverse(col("embedding"))).otherwise(col("embedding")))
+
+  private val snaps = Seq((3, 2), (7, 19), (5, 11), (13, 17))
+
+  /** Builds `base`, the centroid-partitioned IVF index of the first
+    * snapshot at frozen centroids, and publishes v2, v3 and v4 from it,
+    * each hop from the prior version through `ivfUpsertApply`. Returns
+    * the centroids.
+    */
+  private def ivfChain(base: String): DataFrame = {
+    Seq("_v4", "_v3", "_v2").foreach(v =>
+      ParquetSink.dropIndexVersion(spark, base + v))
+    val t0 = snap(3, 2)
+    val cents = t0.filter(col("vec_id") % 25 === 0)
+    ParquetSink.writePartitionedSnapshot(
+      t0.select(col("vec_id"), col("embedding").as("v"))
+        .join(Ann.ivfAssign(t0, cents, "vec_id", "embedding", "vec_id",
+          "embedding").select("vec_id", "centroid_id"), "vec_id"),
+      base, "centroid_id", Seq("vec_id"))
+    ivfHops(base, cents, from = 1)
+    cents
+  }
+
+  /** Hops `from`…3 of [[ivfChain]]: hop i publishes v(i+1) from v(i). */
+  private def ivfHops(base: String, cents: DataFrame, from: Int): Unit =
+    for (i <- from to 3) {
+      val (pd, pr) = snaps(i - 1)
+      val (cd, cr) = snaps(i)
+      Queries.ivfUpsertApply(spark, if (i == 1) base else s"${base}_v$i",
+        snap(pd, pr), snap(cd, cr), cents, outTbl = Some(s"${base}_v${i + 1}"))
+    }
+
+  private def asSet(df: DataFrame): Set[(Long, Long)] =
+    df.select(col("vec_id").cast("long"), col("centroid_id").cast("long"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  test("a 3-hop chained IVF v4 equals one hop of the combined diff, and " +
+       "re-publishing v3 and v4 leaves the same version directories") {
+    val base = "ivf_chain4_base"
+    val cents = ivfChain(base)
+    val oneHop = Ann.ivfIndexUpsert(spark.table(base), snap(3, 2),
+      snap(13, 17), cents, "vec_id", "embedding", "vec_id", "embedding")
+    assert(asSet(spark.table(base + "_v4")) === asSet(oneHop))
+
+    val wh = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir"))
+    val fs = wh.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def versionDirs: Set[String] = fs.listStatus(wh).iterator
+      .map(_.getPath.getName)
+      .filter(n => n.startsWith(base + "_v3") || n.startsWith(base + "_v4"))
+      .toSet
+    val dirs = versionDirs
+    assert(dirs.nonEmpty)
+    ParquetSink.dropIndexVersion(spark, base + "_v4")
+    ParquetSink.dropIndexVersion(spark, base + "_v3")
+    ivfHops(base, cents, from = 2)
+    assert(versionDirs === dirs, "generation GC leaked version directories")
+    assert(asSet(spark.table(base + "_v4")) === asSet(oneHop))
+    Seq("_v4", "_v3", "_v2").foreach(v =>
+      ParquetSink.dropIndexVersion(spark, base + v))
+  }
+
+  test("a compacted IVF v4 keeps its rows when v3 drops; it and the " +
+       "kNN-edge v2 fsck without errors") {
+    val base = "ivf_chain4c_base"
+    ivfChain(base)
+    val v4 = base + "_v4"
+    val want = asSet(spark.table(v4))
+    ParquetSink.compactPublishedVersion(spark, v4, "centroid_id", Seq("vec_id"))
+    ParquetSink.dropIndexVersion(spark, base + "_v3")
+    assert(asSet(spark.table(v4)) === want)
+    def errors(tbl: String) = ParquetSink.fsckPublishedVersion(spark, tbl)
+      .filter(col("severity") === "error").collect().toSeq
+    assert(errors(v4).isEmpty, errors(v4).toString)
+    SparkEntry.queries("knn_graph_index_upsert")(spark, sfDir).count()
+    val edgeV2 = s"knn_edge_upsert_base_${sfx}_v2"
+    assert(errors(edgeV2).isEmpty, errors(edgeV2).toString)
+    Seq("_v4", "_v2").foreach(v => ParquetSink.dropIndexVersion(spark, base + v))
   }
 }

@@ -156,4 +156,43 @@ class ClusteringSpec extends SparkSpec {
     assert(labels(Clustering.connectedComponents(
       Seq((7L, 7L)).toDF("a", "b"), "a", "b")) == Map(7L -> 7L))
   }
+
+  test("released checkpoints leave the context without Spark's unpersist WARN") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val warned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("checkpoint-release-capture", null,
+        null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        val msg = e.getMessage.getFormattedMessage
+        if (msg.contains("was locally checkpointed")) warned.add(msg)
+      }
+    }
+    capture.start()
+    val root = LogManager.getRootLogger.asInstanceOf[CoreLogger]
+    root.addAppender(capture)
+    val sc = spark.sparkContext
+    try {
+      // a shuffled path takes several rounds, each releasing the last
+      val ids = new scala.util.Random(4)
+        .shuffle((0L until 1000000L by 7919L).take(40).toVector)
+      val edges = ids.sliding(2).map(p => (p(0), p(1))).toSeq
+      val before = sc.getPersistentRDDs.keySet
+      val out = Clustering.connectedComponents(edges.toDF("a", "b"), "a", "b")
+      val kept = sc.getPersistentRDDs.keySet -- before
+      assert(labels(out) == UnionFind.components(edges))
+      assert(warned.isEmpty, s"released checkpoints logged: $warned")
+      // every checkpoint the call made is gone except the labels it returns
+      assert(kept == Scans.persistedRdds(out).map(_.id).toSet)
+      // the capture does see the WARN that RDD.unpersist logs
+      Scans.persistedRdds(spark.range(3).toDF().localCheckpoint(true))
+        .foreach(_.unpersist(false))
+      assert(!warned.isEmpty)
+    } finally {
+      root.removeAppender(capture)
+      capture.stop()
+    }
+  }
 }
