@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CatalogUtils
 
 /** Parquet target support, re-expressing the reference's size-controlled
   * file output (glue/sbin/parquet/CQLReplicator.scala:698-740
@@ -164,25 +165,30 @@ object ParquetSink {
     * affected partitions' directories and the new version references
     * every other partition's files IN PLACE ([[publishPartitionSwap]]),
     * where a bucketed `saveAsTable` could only republish by rewriting
-    * the whole corpus-sized relation. The pre-shuffle on the partition
-    * key gives each partition one output file instead of one per task
-    * that touches it.
+    * the whole corpus-sized relation.
     */
   def writePartitionedSnapshot(df: DataFrame, tableName: String,
                                partCol: String,
                                sortCols: Seq[String] = Nil): Unit = {
     dropWithLocation(df, tableName)
-    df.repartition(col(partCol))
-      .sortWithinPartitions((partCol +: sortCols).map(col): _*)
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy(partCol)
-      .format("parquet")
-      .saveAsTable(tableName)
+    partitionedWriter(df, partCol, sortCols).format("parquet").saveAsTable(tableName)
   }
 
+  /** The partitioned, sorted write of this sink's partitioned layouts
+    * (standing snapshots, publish deltas, compactions): the pre-shuffle
+    * on the partition key gives each partition one output file instead
+    * of one per task that touches it, sorted by `partCol` then `sortCols`.
+    */
+  private def partitionedWriter(df: DataFrame, partCol: String,
+                                sortCols: Seq[String]) =
+    df.repartition(col(partCol))
+      .sortWithinPartitions((partCol +: sortCols).map(col): _*)
+      .write.mode(SaveMode.Overwrite).partitionBy(partCol)
+
   /** The `partCol=value → directory` map of one partitioned PATH root
-    * (hive-style dir names, %XX-unescaped) — the resolution for delta
-    * directories, which live outside any catalog.
+    * (hive-style dir names, %XX-unescaped) — the resolution for the
+    * generation directories a commit writes, which live outside any
+    * catalog.
     */
   private def partitionDirs(spark: org.apache.spark.sql.SparkSession,
                             root: org.apache.hadoop.fs.Path,
@@ -192,8 +198,7 @@ object ParquetSink {
     else fs.listStatus(root).iterator
       .filter(st => st.isDirectory && st.getPath.getName.startsWith(partCol + "="))
       .map { st =>
-        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .unescapePathName(st.getPath.getName.stripPrefix(partCol + "=")) ->
+        CatalogUtils.unescapePathName(st.getPath.getName.stripPrefix(partCol + "=")) ->
           st.getPath
       }
       .toMap
@@ -211,21 +216,17 @@ object ParquetSink {
                          tableName: String,
                          partCol: String): Map[String, org.apache.hadoop.fs.Path] = {
     val fromCatalog = scala.util.Try {
-      spark.sessionState.catalog
-        .listPartitions(org.apache.spark.sql.catalyst.TableIdentifier(tableName))
-        .flatMap { p =>
-          p.spec.collectFirst {
-            case (k, v) if k.equalsIgnoreCase(partCol) =>
-              v -> new org.apache.hadoop.fs.Path(p.location)
-          }
-        }.toMap
+      CatalogUtils.partitions(spark, tableName).flatMap { case (spec, loc) =>
+        spec.collectFirst {
+          case (k, v) if k.equalsIgnoreCase(partCol) =>
+            v -> new org.apache.hadoop.fs.Path(loc)
+        }
+      }.toMap
     }.getOrElse(Map.empty[String, org.apache.hadoop.fs.Path])
     if (fromCatalog.nonEmpty) fromCatalog
     else {
       val loc = scala.util.Try(new org.apache.hadoop.fs.Path(
-        spark.sessionState.catalog
-          .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(tableName))
-          .location)).getOrElse(tableLocation(spark, tableName))
+        CatalogUtils.location(spark, tableName))).getOrElse(tableLocation(spark, tableName))
       partitionDirs(spark, loc, partCol)
     }
   }
@@ -264,11 +265,18 @@ object ParquetSink {
       spark.conf.get("spark.sql.warehouse.dir"),
       tableName.toLowerCase + "__refs.txt")
 
+  /** Writes `tableName`'s ledger pinning `dirs`; an empty set DELETES
+    * the ledger (a version that references nothing foreign, such as a
+    * compacted one, has no ledger rather than an empty one).
+    */
   private def writeRefs(spark: org.apache.spark.sql.SparkSession,
                         tableName: String,
-                        dirs: Iterable[org.apache.hadoop.fs.Path]): Unit =
-    MetaFiles.replace(spark, refsPath(spark, tableName),
+                        dirs: Iterable[org.apache.hadoop.fs.Path]): Unit = {
+    val p = refsPath(spark, tableName)
+    if (dirs.isEmpty) p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, false)
+    else MetaFiles.replace(spark, p,
       dirs.map(d => qualified(spark, d).toString).toSeq.sorted.mkString("\n"))
+  }
 
   /** Lines of one refs ledger, or None when it does not exist (a
     * compacted version owns every partition and legitimately has none).
@@ -311,16 +319,15 @@ object ParquetSink {
       }
   }
 
-  /** Best-effort guarded delete: skips (returns false) when a live
-    * version references the directory, deletes and returns true otherwise.
+  /** True when any live ledger (any version's, including `owner`'s own if
+    * `owner` is None) pins `dir` — the boolean face of [[guardReferenced]]
+    * for GC and reporting rather than refusing.
     */
-  private def deleteUnlessReferenced(spark: org.apache.spark.sql.SparkSession,
-                                     dir: org.apache.hadoop.fs.Path,
-                                     owner: Option[String]): Boolean = {
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try { guardReferenced(spark, dir, owner); fs.delete(dir, true); true }
-    catch { case _: IllegalStateException => false }
-  }
+  private def isReferenced(spark: org.apache.spark.sql.SparkSession,
+                           dir: org.apache.hadoop.fs.Path,
+                           owner: Option[String]): Boolean =
+    try { guardReferenced(spark, dir, owner); false }
+    catch { case _: IllegalStateException => true }
 
   /** Single-writer publish lock: `warehouse/<v2 table>__publish.lock`,
     * a [[MetaFiles.withLock]] that refuses at once, taken before any
@@ -378,6 +385,28 @@ object ParquetSink {
     }
   }
 
+  /** The two directories generation `g` of `v2Table` may own: its delta
+    * directory and its root.
+    */
+  private def generationDirs(spark: org.apache.spark.sql.SparkSession,
+                             v2Table: String, g: Int): Seq[org.apache.hadoop.fs.Path] =
+    Seq(tableLocation(spark, s"${v2Table}_delta_g$g"), tableLocation(spark, s"${v2Table}_g$g"))
+
+  /** The ownership rule: a qualified location is `v2Table`'s OWN when it
+    * lies under any of its generation directories (any generation: a
+    * republish can still reference an older own delta); every other
+    * location is FOREIGN and must be pinned by its ledger. The commit,
+    * [[fsckPublishedVersion]] and [[repairVersionLedger]] all decide
+    * with this one rule, so a committed ledger is exactly what a repair
+    * rebuilds from the manifest.
+    */
+  private def ownedBy(spark: org.apache.spark.sql.SparkSession,
+                      v2Table: String): String => Boolean = {
+    val roots = generations(spark, v2Table)
+      .flatMap(generationDirs(spark, v2Table, _)).map(qualified(spark, _).toString)
+    q => roots.exists(r => q == r || q.startsWith(r + "/"))
+  }
+
   /** Publishes the NEW VERSION of a maintained, partitioned standing
     * index at DELTA cost — the partition-location swap: only the
     * affected partitions' rows are written (to a fresh delta directory);
@@ -392,20 +421,27 @@ object ParquetSink {
     * what snapshot table formats do with manifest swaps: a new table
     * version referencing unchanged data files in place.
     *
-    * Crash/republish discipline: each publish writes into fresh
-    * GENERATION-numbered delta/root directories and registers the full
-    * partition map on a STAGING table; the catalog re-point (drop old
-    * `v2Table`, rename staging) is the LAST step, so a failure
-    * mid-publish leaves the previous version's files and ledger intact
-    * (rerun to recover — the staging name is reclaimed). Single-writer
-    * per index is ENFORCED, not assumed: the publish lock refuses a
-    * second concurrent publisher (see [[withPublishLock]]); a crashed
+    * Crash/republish discipline: every version commit — this publish
+    * and [[compactPublishedVersion]] — runs one step order
+    * ([[commitVersion]]): (1) partitioned sorted write into a fresh
+    * GENERATION-numbered directory, (2) resolve the partition map, (3)
+    * register it on a STAGING table, (4) write the staging ledger, (5)
+    * re-point the name (drop the old `v2Table`, rename the staging
+    * table), (6) write the version MANIFEST, (7) write the version
+    * ledger, or delete it when nothing foreign is referenced, (8) drop
+    * the staging ledger, (9) GC the superseded generations. A failure
+    * before (5) leaves the previous version intact; from (4) to (8) the
+    * staging ledger pins the new map's foreign directories while the
+    * version ledger still pins the last manifest's, so a death at any
+    * step leaves the durable version fully pinned (rerun to recover —
+    * the staging name is reclaimed). Single-writer per index is
+    * ENFORCED, not assumed: the publish lock refuses a second
+    * concurrent publisher (see [[withPublishLock]]); a crashed
     * publisher's lock is cleared by deleting the file or
-    * [[dropIndexVersion]]. The commit also persists a per-version
-    * partition MANIFEST, so the published version survives JVM restarts
-    * via [[adoptPublishedVersion]] instead of needing a republish. Every
-    * metadata write of the commit (ledgers, manifest) and the lock go
-    * through [[MetaFiles]].
+    * [[dropIndexVersion]]. The manifest lets the published version
+    * survive JVM restarts via [[adoptPublishedVersion]] instead of
+    * needing a republish. Every metadata write of the commit (ledgers,
+    * manifest) and the lock go through [[MetaFiles]].
     *
     * @param baseTable the standing index ([[writePartitionedSnapshot]]
     *                  layout, or a previously published version —
@@ -427,90 +463,95 @@ object ParquetSink {
                            timer: graft.PhaseTimer = graft.NoTimer): Unit = {
     require(baseTable.toLowerCase != v2Table.toLowerCase,
       "publish target must differ from the base table")
-    withPublishLock(spark, v2Table)(publishPartitionSwapLocked(spark,
-      baseTable, v2Table, partCol, affected, deltaRows, sortCols, timer))
+    withPublishLock(spark, v2Table)(commitVersion(spark, v2Table, deltaRows,
+      partCol, sortCols, Some(Carry(baseTable, affected)), timer))
   }
 
-  private def publishPartitionSwapLocked(
-      spark: org.apache.spark.sql.SparkSession,
-      baseTable: String, v2Table: String,
-      partCol: String, affected: Set[String],
-      deltaRows: DataFrame, sortCols: Seq[String],
-      timer: graft.PhaseTimer): Unit = {
-    val t = timer
-    val fsConf = spark.sparkContext.hadoopConfiguration
+  /** What a publish carries over from its base: every partition outside
+    * `affected`, referenced in place.
+    */
+  private final case class Carry(baseTable: String, affected: Set[String])
+
+  /** The one version commit, in the step order
+    * [[publishPartitionSwap]]'s scaladoc names. `rows` is the new
+    * content of every partition the commit writes. A publish carries
+    * its base's unaffected partitions and writes its delta into
+    * `_delta_g<gen>`; a compaction (`carry = None`) keeps nothing and
+    * writes every live row into its own root `_g<gen>`. The phase labels
+    * are the publish's (perfbench reads them as `publish_swap_*`).
+    */
+  private def commitVersion(spark: org.apache.spark.sql.SparkSession,
+                            v2Table: String, rows: DataFrame, partCol: String,
+                            sortCols: Seq[String], carry: Option[Carry],
+                            t: graft.PhaseTimer): Unit = {
     val gen = generations(spark, v2Table).lastOption.getOrElse(0) + 1
-    val deltaRoot = tableLocation(spark, s"${v2Table}_delta_g$gen")
     val v2Root = tableLocation(spark, s"${v2Table}_g$gen")
-    val fs = deltaRoot.getFileSystem(fsConf)
-    t("delta_write") {
-      deltaRows.repartition(col(partCol))
-        .sortWithinPartitions((partCol +: sortCols).map(col): _*)
-        .write.mode(SaveMode.Overwrite).partitionBy(partCol)
-        .parquet(deltaRoot.toString)
+    val fs = v2Root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dataRoot =
+      if (carry.isEmpty) v2Root else tableLocation(spark, s"${v2Table}_delta_g$gen")
+    t("delta_write")(partitionedWriter(rows, partCol, sortCols).parquet(dataRoot.toString))
+    // v2 = (base partitions − affected) in place ∪ written partitions
+    val (kept, written) = t("resolve_parts") {
+      (carry.fold(Map.empty[String, org.apache.hadoop.fs.Path])(c =>
+        partitionLocations(spark, c.baseTable, partCol) -- c.affected),
+        partitionDirs(spark, dataRoot, partCol))
     }
-    // v2 = (base partitions − affected) in place ∪ delta partitions
-    val (keptParts, deltaParts) = t("resolve_parts") {
-      val kept = partitionLocations(spark, baseTable, partCol) -- affected
-      val fresh = partitionDirs(spark, deltaRoot, partCol)
-      (kept, fresh)
+    carry.foreach { c =>
+      val strayParts = written.keySet -- c.affected
+      require(strayParts.isEmpty,
+        s"deltaRows contain partition values outside `affected` — they would " +
+        s"shadow kept partitions: ${strayParts.toSeq.sorted.take(5).mkString(", ")}")
     }
-    val strayParts = deltaParts.keySet -- affected
-    require(strayParts.isEmpty,
-      s"deltaRows contain partition values outside `affected` — they would " +
-      s"shadow kept partitions: ${strayParts.toSeq.sorted.take(5).mkString(", ")}")
+    val parts = kept ++ written
+    val partType = rows.schema(partCol).dataType.sql
+    val cols = rows.schema.fields.filterNot(_.name == partCol)
+      .map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ")
     val stage = v2Table + "__stage"
-    t("stage_ddl") {
-      spark.sql(s"DROP TABLE IF EXISTS `$stage`")
-      // the v2 root itself stays EMPTY by construction (every partition
-      // points elsewhere) but must physically exist: Spark's
-      // FileStreamSink metadata probe resolves it on every read of the
-      // published table and logs a full FileNotFoundException stack
-      // per resolution when it is missing
-      fs.mkdirs(v2Root)
-      val dataCols = deltaRows.schema.fields.filterNot(_.name == partCol)
-        .map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ")
-      val partType = deltaRows.schema(partCol).dataType.sql
-      spark.sql(s"""CREATE TABLE `$stage` ($dataCols, `$partCol` $partType)
-        USING PARQUET PARTITIONED BY (`$partCol`) LOCATION ${sqlLit(v2Root.toString)}""")
-      (keptParts ++ deltaParts).toSeq.grouped(500).foreach { chunk =>
-        val specs = chunk.map { case (v, p) =>
-          s"PARTITION (`$partCol`=${sqlLit(v)}) LOCATION ${sqlLit(p.toString)}"
-        }.mkString(" ")
-        spark.sql(s"ALTER TABLE `$stage` ADD $specs")
-      }
-    }
+    t("stage_ddl")(register(spark, stage, v2Root, partCol, partType, cols, parts))
     t("commit") {
-      // Protect the kept directories BEFORE the commit: if the publish
-      // dies between the re-point and the final ledger write, the staged
-      // ledger still guards the base dirs the new version references (the
-      // guard honors ANY ledger file, live table or not; a rerun
-      // overwrites it).
-      val owned = Set(qualified(spark, deltaRoot).toString,
-        qualified(spark, v2Root).toString)
-      val foreignRefs = (keptParts ++ deltaParts).values.filterNot(p =>
-        owned.contains(qualified(spark, p).toString))
-      writeRefs(spark, stage, foreignRefs)
-      // THE COMMIT: re-point the name, then advance the ledger, persist
-      // the version MANIFEST (what a fresh JVM adopts from), and GC the
-      // superseded generations this version owned (skipping any a
-      // chained version still references).
+      val own = ownedBy(spark, v2Table)
+      val foreign = parts.values.filterNot(p => own(qualified(spark, p).toString))
+      // the staging ledger pins the new map's foreign directories BEFORE
+      // the re-point; the guard honors ANY ledger file, live table or not
+      writeRefs(spark, stage, foreign)
       spark.sql(s"DROP TABLE IF EXISTS `$v2Table`")
       spark.sql(s"ALTER TABLE `$stage` RENAME TO `$v2Table`")
-      writeRefs(spark, v2Table, foreignRefs)
-      fs.delete(refsPath(spark, stage), false)
-      writeVersionManifest(spark, v2Table, gen, partCol,
-        deltaRows.schema(partCol).dataType.sql,
-        deltaRows.schema.fields.filterNot(_.name == partCol),
-        keptParts ++ deltaParts)
+      // manifest BEFORE the version ledger: until the manifest advances,
+      // the version ledger keeps pinning what the durable manifest reads
+      writeVersionManifest(spark, v2Table, gen, partCol, partType, cols, parts)
+      writeRefs(spark, v2Table, foreign)
+      writeRefs(spark, stage, Nil) // drops the staging ledger
     }
     t("gc_superseded") {
-      generations(spark, v2Table).filter(_ < gen).foreach { g =>
-        deleteUnlessReferenced(spark,
-          tableLocation(spark, s"${v2Table}_delta_g$g"), Some(v2Table))
-        deleteUnlessReferenced(spark,
-          tableLocation(spark, s"${v2Table}_g$g"), Some(v2Table))
-      }
+      generations(spark, v2Table).filter(_ < gen)
+        .flatMap(generationDirs(spark, v2Table, _))
+        .filterNot(isReferenced(spark, _, Some(v2Table)))
+        .foreach(fs.delete(_, true))
+    }
+  }
+
+  /** Registers `table` as an external partitioned parquet table rooted at
+    * `root` whose partitions point at `parts`' locations: `CREATE …
+    * LOCATION`, then `ADD PARTITION … LOCATION` in chunks of 500. The
+    * commit's staging table and [[adoptPublishedVersion]] register this
+    * way. The root may hold nothing (a publish's partitions all live
+    * elsewhere) but must physically exist: Spark's FileStreamSink
+    * metadata probe resolves it on every read of the table and logs a
+    * full FileNotFoundException stack per resolution when it is missing.
+    */
+  private def register(spark: org.apache.spark.sql.SparkSession,
+                       table: String, root: org.apache.hadoop.fs.Path,
+                       partCol: String, partColTypeSql: String, cols: String,
+                       parts: Iterable[(String, org.apache.hadoop.fs.Path)]): Unit = {
+    root.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(root)
+    spark.sql(s"DROP TABLE IF EXISTS `$table`")
+    spark.sql(s"""CREATE TABLE `$table` ($cols, `$partCol` $partColTypeSql)
+      USING PARQUET PARTITIONED BY (`$partCol`) LOCATION ${sqlLit(root.toString)}""")
+    parts.toSeq.grouped(500).foreach { chunk =>
+      val specs = chunk.map { case (v, p) =>
+        s"PARTITION (`$partCol`=${sqlLit(v)}) LOCATION ${sqlLit(p.toString)}"
+      }.mkString(" ")
+      spark.sql(s"ALTER TABLE `$table` ADD $specs")
     }
   }
 
@@ -539,8 +580,7 @@ object ParquetSink {
 
   private def writeVersionManifest(spark: org.apache.spark.sql.SparkSession,
                                    v2Table: String, gen: Int,
-                                   partCol: String, partColTypeSql: String,
-                                   dataCols: Seq[org.apache.spark.sql.types.StructField],
+                                   partCol: String, partColTypeSql: String, cols: String,
                                    parts: Map[String, org.apache.hadoop.fs.Path]): Unit = {
     // partition values hide behind the same %XX escaping the hive dir
     // names use (covers tab/newline/quote), locations are qualified URIs
@@ -549,10 +589,9 @@ object ParquetSink {
       s"generation=$gen",
       s"partCol=$partCol",
       s"partColType=$partColTypeSql",
-      s"cols=${dataCols.map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ")}"
+      s"cols=$cols"
     ) ++ parts.toSeq.sortBy(_._1).map { case (v, loc) =>
-      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .escapePathName(v) + "\t" + qualified(spark, loc).toString
+      CatalogUtils.escapePathName(v) + "\t" + qualified(spark, loc).toString
     }
     MetaFiles.replace(spark, manifestPath(spark, v2Table), lines.mkString("\n"))
   }
@@ -584,8 +623,7 @@ object ParquetSink {
       val parts = lines.drop(5).filter(_.nonEmpty).map { l =>
         val cut = l.indexOf('\t')
         require(cut > 0, s"malformed partition line: $l")
-        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .unescapePathName(l.substring(0, cut)) ->
+        CatalogUtils.unescapePathName(l.substring(0, cut)) ->
           new org.apache.hadoop.fs.Path(l.substring(cut + 1))
       }.toSeq
       (gen, partCol, partColType, cols, parts)
@@ -615,37 +653,25 @@ object ParquetSink {
                             v2Table: String): Boolean = {
     val p = manifestPath(spark, v2Table)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parsed = readVersionManifest(spark, v2Table) match {
-      case None => return false
-      case Some(t) => t
-    }
-    parsed match {
-      case scala.util.Failure(e) =>
+    readVersionManifest(spark, v2Table) match {
+      case None => false
+      case Some(scala.util.Failure(e)) =>
         // torn/alien manifests read as "not adoptable" (caller
         // republishes), but say why — silence here cost a debug session
         System.err.println(
           s"[parquet-sink] manifest $p unreadable, not adopting: ${e.getMessage}")
         false
-      case scala.util.Success((gen, partCol, partColType, cols, parts)) =>
-        val missing = parts.find(pt => !fs.exists(pt._2))
-        missing.foreach { pt =>
-          System.err.println(s"[parquet-sink] manifest $p references a " +
-            s"vanished partition directory (${pt._1} -> ${pt._2}); not adopting")
+      case Some(scala.util.Success((gen, partCol, partColType, cols, parts))) =>
+        parts.find(pt => !fs.exists(pt._2)) match {
+          case Some((v, loc)) =>
+            System.err.println(s"[parquet-sink] manifest $p references a " +
+              s"vanished partition directory ($v -> $loc); not adopting")
+            false
+          case None =>
+            register(spark, v2Table, tableLocation(spark, s"${v2Table}_g$gen"),
+              partCol, partColType, cols, parts)
+            true
         }
-        if (missing.nonEmpty) return false
-        val v2Root = tableLocation(spark, s"${v2Table}_g$gen")
-        fs.mkdirs(v2Root) // see the publish-side note on FileStreamSink
-        spark.sql(s"DROP TABLE IF EXISTS `$v2Table`")
-        spark.sql(s"""CREATE TABLE `$v2Table` ($cols, `$partCol` $partColType)
-          USING PARQUET PARTITIONED BY (`$partCol`)
-          LOCATION ${sqlLit(v2Root.toString)}""")
-        parts.grouped(500).foreach { chunk =>
-          val specs = chunk.map { case (v, loc) =>
-            s"PARTITION (`$partCol`=${sqlLit(v)}) LOCATION ${sqlLit(loc.toString)}"
-          }.mkString(" ")
-          spark.sql(s"ALTER TABLE `$v2Table` ADD $specs")
-        }
-        true
     }
   }
 
@@ -747,24 +773,30 @@ object ParquetSink {
     * delta generation per hop), and the refs ledger then PINS all of
     * them — the original base can never be rebuilt or dropped while any
     * descendant version lives, reads fan out over ever more roots, and
-    * delta generations accumulate without bound. Compaction rewrites
-    * the version's LIVE rows once into a fresh generation root it owns
-    * outright (real hive layout, one sorted file per partition — the
-    * [[writePartitionedSnapshot]] discipline), re-points the catalog
-    * entry, EMPTIES the refs ledger (releasing every pin on prior
-    * bases' and generations' directories), rewrites the durable
-    * manifest, and GCs its superseded generations. Cost is O(live
-    * index) read+write — no maintenance recompute, embarrassingly
-    * parallel, one shuffle on the partition key — against the unbounded
-    * alternative. Run it on the chain-depth/dead-fraction cadence any
-    * LSM-ish structure uses.
+    * delta generations accumulate without bound. Compaction is a
+    * version commit whose delta is every LIVE row of the version,
+    * written once into a fresh generation root it owns outright (real
+    * hive layout, one sorted file per partition — the
+    * [[writePartitionedSnapshot]] discipline) with nothing carried
+    * over: the commit re-points the catalog entry, rewrites the durable
+    * manifest, DELETES the refs ledger (nothing foreign is referenced
+    * any more, so every pin on prior bases' and generations'
+    * directories is released), and GCs its superseded generations.
+    * Cost is O(live index) read+write — no maintenance recompute,
+    * embarrassingly parallel, one shuffle on the partition key — against
+    * the unbounded alternative. Run it on the chain-depth/dead-fraction
+    * cadence any LSM-ish structure uses.
     *
-    * Crash discipline mirrors the publish: all writes land in a fresh
-    * generation directory, the catalog re-point is last, and a death
-    * mid-compaction leaves the previous version (files, ledger,
-    * manifest) fully intact — rerun to recover. Takes the same
-    * single-writer publish lock, so a compaction and a publish of one
-    * version cannot interleave.
+    * Crash discipline is the publish's: the same commit body runs the
+    * same nine steps ([[publishPartitionSwap]] names them) — write into
+    * the fresh root, resolve, register the staging table, staging
+    * ledger (none: nothing foreign), re-point, manifest, version ledger
+    * (deleted), drop the staging ledger, GC. A death before the re-point
+    * leaves the previous version (files, ledger, manifest) fully intact,
+    * and the manifest advances before the ledger is deleted, so the old
+    * generation's pins hold while its manifest is the durable one —
+    * rerun to recover. Takes the same single-writer publish lock, so a
+    * compaction and a publish of one version cannot interleave.
     *
     * @param v2Table  a live swap-published (or previously compacted)
     *                 version, registered this JVM or adoptable
@@ -779,64 +811,12 @@ object ParquetSink {
         adoptPublishedVersion(spark, v2Table),
       s"compactPublishedVersion('$v2Table'): no such live version (not " +
       "registered this JVM and no adoptable manifest)")
-    withPublishLock(spark, v2Table)(
-      compactPublishedVersionLocked(spark, v2Table, partCol, sortCols, timer))
-  }
-
-  private def compactPublishedVersionLocked(
-      spark: org.apache.spark.sql.SparkSession,
-      v2Table: String, partCol: String, sortCols: Seq[String],
-      timer: graft.PhaseTimer): Unit = {
-    val t = timer
-    val schema = spark.table(v2Table).schema
-    require(schema.fieldNames.contains(partCol),
-      s"compactPublishedVersion('$v2Table'): no partition column $partCol " +
-      s"in ${schema.fieldNames.mkString(", ")}")
-    val gen = generations(spark, v2Table).lastOption.getOrElse(0) + 1
-    val newRoot = tableLocation(spark, s"${v2Table}_g$gen")
-    val fs = newRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    t("rewrite") {
-      spark.table(v2Table)
-        .repartition(col(partCol))
-        .sortWithinPartitions((partCol +: sortCols).map(col): _*)
-        .write.mode(SaveMode.Overwrite).partitionBy(partCol)
-        .parquet(newRoot.toString)
-    }
-    val parts = t("resolve_parts")(partitionDirs(spark, newRoot, partCol))
-    val dataCols = schema.fields.filterNot(_.name == partCol)
-    val stage = v2Table + "__stage"
-    t("stage_ddl") {
-      spark.sql(s"DROP TABLE IF EXISTS `$stage`")
-      val colsSql = dataCols
-        .map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ")
-      spark.sql(s"""CREATE TABLE `$stage` ($colsSql,
-        `$partCol` ${schema(partCol).dataType.sql}) USING PARQUET
-        PARTITIONED BY (`$partCol`) LOCATION ${sqlLit(newRoot.toString)}""")
-      // real hive dirs under the root this time, so partition discovery
-      // is one RECOVER instead of per-partition ADD ... LOCATION DDL
-      spark.sql(s"ALTER TABLE `$stage` RECOVER PARTITIONS")
-    }
-    t("commit") {
-      spark.sql(s"DROP TABLE IF EXISTS `$v2Table`")
-      spark.sql(s"ALTER TABLE `$stage` RENAME TO `$v2Table`")
-      // manifest BEFORE the ledger delete: a crash between the two
-      // leaves the new manifest with the old pins still in place
-      // (conservative — adopt sees the compacted version, the base
-      // stays guarded), where the reverse order would briefly unpin
-      // directories the still-adoptable OLD generation references
-      writeVersionManifest(spark, v2Table, gen, partCol,
-        schema(partCol).dataType.sql, dataCols, parts)
-      // every partition now lives under the version's own root: an
-      // ABSENT ledger releases the pins on prior bases' directories
-      fs.delete(refsPath(spark, v2Table), false)
-    }
-    t("gc_superseded") {
-      generations(spark, v2Table).filter(_ < gen).foreach { g =>
-        deleteUnlessReferenced(spark,
-          tableLocation(spark, s"${v2Table}_delta_g$g"), Some(v2Table))
-        deleteUnlessReferenced(spark,
-          tableLocation(spark, s"${v2Table}_g$g"), Some(v2Table))
-      }
+    withPublishLock(spark, v2Table) {
+      val rows = spark.table(v2Table)
+      require(rows.columns.contains(partCol),
+        s"compactPublishedVersion('$v2Table'): no partition column $partCol " +
+        s"in ${rows.columns.mkString(", ")}")
+      commitVersion(spark, v2Table, rows, partCol, sortCols, None, timer)
     }
   }
 
@@ -863,16 +843,6 @@ object ParquetSink {
       age >= maxAgeMs && fs.delete(p, false)
     }.getOrElse(false) // vanished between probe and stat = already freed
   }
-
-  /** True when any live ledger (any version's, including `owner`'s own if
-    * `owner` is None) pins `dir` — the boolean face of [[guardReferenced]]
-    * for reporting rather than refusing.
-    */
-  private def isReferenced(spark: org.apache.spark.sql.SparkSession,
-                           dir: org.apache.hadoop.fs.Path,
-                           owner: Option[String]): Boolean =
-    try { guardReferenced(spark, dir, owner); false }
-    catch { case _: IllegalStateException => true }
 
   /** Integrity check (`fsck`) of one swap-published version — the
     * health probe an operator runs before trusting an adopt, on the
@@ -954,17 +924,11 @@ object ParquetSink {
           if (!fs.exists(loc))
             report("error", "partition-missing", s"$partCol=$v -> $loc")
         }
-        // Ledger side: foreign dirs pinned, pins all needed and alive.
-        // "Own" = under this version's generation roots (any generation:
-        // a republish's parts may still reference an older own delta).
-        val ownPrefixes = generations(spark, v2Table).flatMap(g => Seq(
-          qualified(spark, tableLocation(spark, s"${v2Table}_delta_g$g")).toString,
-          qualified(spark, tableLocation(spark, s"${v2Table}_g$g")).toString))
-        def isOwn(q: String) =
-          ownPrefixes.exists(p => q == p || q.startsWith(p + "/"))
+        // Ledger side: foreign dirs pinned, pins all needed and alive
+        val own = ownedBy(spark, v2Table)
         val partQ = parts.map { case (v, loc) =>
           v -> qualified(spark, loc).toString }
-        val foreign = partQ.filterNot { case (_, q) => isOwn(q) }
+        val foreign = partQ.filterNot { case (_, q) => own(q) }
         val refs = readLedger(spark, refsPath(spark, v2Table)).getOrElse(Nil)
         def pinned(q: String) =
           refs.exists(r => q == r || q.startsWith(r + "/"))
@@ -1001,8 +965,7 @@ object ParquetSink {
           report("warn", "root-missing",
             s"$curRoot (reads log FileStreamSink probe stacks; adopt recreates it)")
         generations(spark, v2Table).filterNot(_ == gen).foreach { g =>
-          Seq(tableLocation(spark, s"${v2Table}_delta_g$g"),
-              tableLocation(spark, s"${v2Table}_g$g"))
+          generationDirs(spark, v2Table, g)
             .filter(d => fs.exists(d))
             .filterNot(d => partQ.exists { case (_, q) =>
               val dq = qualified(spark, d).toString
@@ -1054,19 +1017,10 @@ object ParquetSink {
     }
     withPublishLock(spark, v2Table) {
       val (_, _, _, _, parts) = parsed
-      val ownPrefixes = generations(spark, v2Table).flatMap(g => Seq(
-        qualified(spark, tableLocation(spark, s"${v2Table}_delta_g$g")).toString,
-        qualified(spark, tableLocation(spark, s"${v2Table}_g$g")).toString))
-      def isOwn(q: String) =
-        ownPrefixes.exists(p => q == p || q.startsWith(p + "/"))
-      val foreign = parts.map(_._2)
-        .filterNot(p => isOwn(qualified(spark, p).toString))
-      if (foreign.isEmpty) {
-        // the compacted (self-owned) form: absent ledger, not empty file
-        val rp = refsPath(spark, v2Table)
-        rp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .delete(rp, false)
-      } else writeRefs(spark, v2Table, foreign)
+      val own = ownedBy(spark, v2Table)
+      // an empty foreign set (the compacted form) deletes the ledger
+      writeRefs(spark, v2Table,
+        parts.map(_._2).filterNot(p => own(qualified(spark, p).toString)))
       true
     }
   }
@@ -1104,9 +1058,8 @@ object ParquetSink {
     */
   def dropIndexVersion(spark: org.apache.spark.sql.SparkSession,
                        v2Table: String): Unit = {
-    val gens = generations(spark, v2Table)
-    val dirs = gens.flatMap(g => Seq(tableLocation(spark, s"${v2Table}_delta_g$g"),
-      tableLocation(spark, s"${v2Table}_g$g"))) :+ tableLocation(spark, v2Table)
+    val dirs = generations(spark, v2Table).flatMap(generationDirs(spark, v2Table, _)) :+
+      tableLocation(spark, v2Table)
     dirs.foreach(guardReferenced(spark, _, Some(v2Table)))
     spark.sql(s"DROP TABLE IF EXISTS `$v2Table`")
     spark.sql(s"DROP TABLE IF EXISTS `${v2Table}__stage`")

@@ -13,7 +13,7 @@ import graft.streaming.StreamingIvfUpsert.{IndexRow, VecChange}
   * other vectors' top-k lists), so the streaming face maintains the
   * ASSIGNMENT index continuously ([[StreamingIvfUpsert.indexStream]])
   * and edges compact in batch micro-compactions over the maintained
-  * assignments — [[Ann.knnEdgeIndexUpsertParts]] recomputing exactly
+  * assignments — [[Ann.knnEdgeIndexUpsert]] recomputing exactly
   * the affected buckets. This spec proves the COMPOSITION end to end:
   * a shuffled micro-batched change stream, folded by the streaming
   * operator, feeds the batch edge compactor, and the compacted edge
