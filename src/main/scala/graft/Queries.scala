@@ -3429,7 +3429,7 @@ object Queries {
         |FROM events""".stripMargin)),
 
     Q("percentile_profile",
-      // Exact interpolated percentiles per group via the bucket-histogram
+      // Exact interpolated percentiles per group via the histogram-refined
       // Percentiles operator — bit-identical to Spark `percentile` ≡
       // DuckDB `quantile_cont` (linear interpolation, probed bit-exact)
       // but never buffering a corpus-sized group's values in one task.

@@ -306,11 +306,11 @@ object Analytics {
     * Two user-keyed aggregates + one equi-join (the ts ≥ first-touch
     * bound is a post-join filter, not an inequality join); the final
     * reductions run over the users-sized relation, with the latency
-    * percentiles through [[Percentiles.exactPercentiles]] — exact but
-    * bucket-histogram-based, so no task ever buffers the users-sized
-    * latency list. That relation persists across its passes and is
-    * released before returning (the report is ONE row, finalized
-    * eagerly).
+    * percentiles through [[Percentiles.exactPercentiles]] — exact,
+    * histogram-refined until the ranked slices fit the driver budget, so
+    * no task ever buffers the users-sized latency list. That relation
+    * persists across its passes and is released before returning (the
+    * report is ONE row, finalized eagerly).
     */
   def funnelConversionTime(events: DataFrame, userCol: String,
                            typeCol: String, tsCol: String,

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftOrderedKey
 import org.apache.spark.sql.types._
 
 /** Profiling/observability aggregates from the reference: the column-stats
@@ -139,21 +140,33 @@ object Stats {
     * absolute deviation ignore them (the standard robust screen for
     * metric columns before training-data filtering). Outlier = |v−med| >
     * k·1.4826·MAD (1.4826 scales MAD to σ under normality). Both medians
-    * run through [[Percentiles.exactPercentiles]] — bit-identical to
-    * Spark `percentile` ≡ DuckDB `quantile_cont` but computed from
-    * bucket histograms, never buffering a corpus-sized group's values in
-    * one aggregation buffer — with the groups-sized median relation
-    * broadcast back; no window over the data side.
+    * run through [[Percentiles]]' refine loop — bit-identical to Spark
+    * `percentile` ≡ DuckDB `quantile_cont`, never buffering a
+    * corpus-sized group's values in one aggregation buffer. The
+    * deviation median reuses the value median's pass 1 (same group
+    * counts, a key range derived from min/max/median), and the
+    * groups-sized (median, MAD) relation is broadcast back; no window
+    * over the data side.
     */
   def madOutliers(df: DataFrame, valueCol: String, groupCol: String,
                   k: Double): DataFrame = {
     val v = col(valueCol).cast("double")
-    val med = Percentiles.exactPercentiles(df, col(valueCol),
-      Seq(groupCol), Seq(0.5 -> "med"))
-    val mad = Percentiles.exactPercentiles(
-        df.join(broadcast(med), Seq(groupCol)),
-        abs(v - col("med")), Seq(groupCol), Seq(0.5 -> "mad"))
-      .join(med, Seq(groupCol))
+    val values = new Percentiles.Keyed(df, v, Seq(groupCol))
+    val groups = values.groups(Percentiles.DefaultMaxGroups)
+    val meds = values.percentiles(groups, Seq(0.5), Percentiles.DefaultBuckets)
+    val med = values.toDf(groups, meds, Seq("med"))
+    // |v − med| keeps each group's n, and monotone float subtraction
+    // keeps it in [0, max(max − med, med − min)]: pass 1 is known.
+    val devGroups = groups.zip(meds).map { case (g, Array(m)) =>
+      val bound = math.max(GraftOrderedKey.value(g.hi) - m,
+        m - GraftOrderedKey.value(g.lo))
+      g.copy(lo = GraftOrderedKey.key(0.0), hi = GraftOrderedKey.key(bound))
+    }
+    val devs = new Percentiles.Keyed(df.join(broadcast(med), Seq(groupCol)),
+      abs(v - col("med")), Seq(groupCol))
+    val mads = devs.percentiles(devGroups, Seq(0.5), Percentiles.DefaultBuckets)
+    val mad = devs.toDf(groups, meds.zip(mads).map { case (m, d) => m ++ d },
+      Seq("med", "mad"))
     df.join(broadcast(mad), Seq(groupCol))
       .groupBy(col(groupCol))
       .agg(count(lit(1)).as("n"),
@@ -168,8 +181,9 @@ object Stats {
     * rows from dominating any downstream mean/sum (loss statistics,
     * quality scores, reward signals). The bounds relation is groups-sized
     * → broadcast into one clamped projection of the data side. Bounds via
-    * [[Percentiles.exactPercentiles]] (bucket-histogram exact — no
-    * group-sized aggregation buffer).
+    * [[Percentiles.exactPercentiles]] (exact, histogram-refined until the
+    * ranked slices fit the driver budget — no group-sized aggregation
+    * buffer).
     */
   def winsorize(df: DataFrame, valueCol: String, groupCol: String,
                 pLo: Double, pHi: Double): DataFrame = {
@@ -191,10 +205,11 @@ object Stats {
     * percentile/top-share reductions run over the KEYS-sized relation
     * (never the data side), with the top slice a distributed
     * TakeOrdered (`orderBy.limit`), not a window. The percentiles run
-    * through [[Percentiles.exactPercentiles]] (bucket-histogram exact —
-    * even a billion-key relation never buffers in one task); the sizes
-    * relation is persisted across its four reductions and released
-    * before returning (the report is ONE row, finalized eagerly).
+    * through [[Percentiles.exactPercentiles]] (exact, histogram-refined
+    * until the ranked slices fit the driver budget — even a billion-key
+    * relation never buffers in one task); the sizes relation is
+    * persisted across its four reductions and released before
+    * returning (the report is ONE row, finalized eagerly).
     */
   def keySkewReport(df: DataFrame, keyCol: String): DataFrame = {
     val sizes = df.groupBy(col(keyCol).as("k"))

@@ -99,7 +99,7 @@ class PlanSpec extends SparkSpec {
     // Spark's `percentile` buffers every group's values in one
     // aggregation buffer — corpus-sized groups OOM a task at 100 TB.
     // These five entries must plan through Percentiles.exactPercentiles
-    // (bucket histograms + bounded bucket-partitioned windows) instead;
+    // (histograms, then a driver-budget collect of the ranked slices);
     // funnel/key-skew finalize eagerly, so their returned plan is a
     // LocalTableScan, which trivially satisfies the gate.
     for (name <- Seq("mad_outliers", "winsorize_events",

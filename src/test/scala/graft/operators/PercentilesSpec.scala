@@ -1,19 +1,28 @@
 package graft.operators
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
 /** Percentiles.exactPercentiles must be BIT-identical to Spark's
   * `percentile` aggregate (the value-buffering form it replaces) on every
-  * distribution shape: ties, heavy duplication (the min==max bucket
-  * short-circuit), single-row groups, and the p=0/p=1 boundaries — and
-  * must stay exact on a group large enough that the buffering aggregate
-  * is the thing being avoided.
+  * distribution shape: ties, heavy duplication (flat slices answered
+  * without a scan), single-row groups, the p=0/p=1 boundaries, signed
+  * zeros, NaN and infinities, and exponential spreads that a
+  * value-uniform split would refine one binade at a time — and must stay
+  * exact on a group large enough that the buffering aggregate is the
+  * thing being avoided. Results compare under `Double.compare`, so −0.0
+  * and 0.0 differ and NaN equals NaN. A small grouped call is pinned to
+  * its job count: pass 1 and one collecting scan.
   */
 class PercentilesSpec extends SparkSpec {
 
-  private def reference(df: org.apache.spark.sql.DataFrame, valueExpr: String,
+  private def reference(df: DataFrame, valueExpr: String,
                         groupCol: String, ps: Seq[Double]) = {
     val aggs = ps.zipWithIndex.map { case (p, i) =>
       expr(s"percentile($valueExpr, $p)").as(s"q$i")
@@ -22,6 +31,22 @@ class PercentilesSpec extends SparkSpec {
       .collect()
       .map(r => r.get(0) -> ps.indices.map(i => r.getDouble(i + 1)))
       .toMap
+  }
+
+  /** exactPercentiles of `v` grouped by `g` equals `percentile`. */
+  private def assertMatchesReference(df: DataFrame, ps: Seq[Double],
+                                     buckets: Int = 1024): Unit = {
+    val want = reference(df, "v", "g", ps)
+    val names = ps.indices.map(i => s"q$i")
+    val got = Percentiles.exactPercentiles(df, col("v"), Seq("g"),
+        ps.zip(names), buckets = buckets)
+      .collect()
+      .map(r => r.get(0) -> names.indices.map(i => r.getDouble(i + 1)))
+      .toMap
+    assert(got.keySet === want.keySet)
+    for (g <- want.keySet; i <- ps.indices)
+      assert(java.lang.Double.compare(got(g)(i), want(g)(i)) == 0,
+        s"group $g p=${ps(i)} buckets=$buckets: got ${got(g)(i)} want ${want(g)(i)}")
   }
 
   test("matches Spark percentile bit-exactly across distribution shapes") {
@@ -42,18 +67,64 @@ class PercentilesSpec extends SparkSpec {
     // group e: negative + positive range with exact-tie interpolation
     (0 until 101).foreach(i => rows += (("e", i - 50.0)))
     val df = rows.result().toDF("g", "v")
-    val ps = Seq(0.0, 0.01, 0.25, 0.5, 0.75, 0.9, 0.99, 1.0)
-    val want = reference(df, "v", "g", ps)
-    val names = ps.indices.map(i => s"q$i")
-    val got = Percentiles.exactPercentiles(df, col("v"), Seq("g"),
-        ps.zip(names), buckets = 16)
-      .collect()
-      .map(r => r.get(0) -> names.indices.map(i => r.getDouble(i + 1)))
-      .toMap
-    assert(got.keySet === want.keySet)
-    for (g <- want.keySet; i <- ps.indices)
-      assert(got(g)(i) === want(g)(i),
-        s"group $g p=${ps(i)}: got ${got(g)(i)} want ${want(g)(i)}")
+    assertMatchesReference(df,
+      Seq(0.0, 0.01, 0.25, 0.5, 0.75, 0.9, 0.99, 1.0), buckets = 16)
+  }
+
+  test("signed zeros, NaN and infinities rank in Double.compare order") {
+    val spark0 = spark
+    import spark0.implicits._
+    val inf = Double.PositiveInfinity
+    val df = (Seq(-0.0, 0.0).map("zeros" -> _) ++
+      Seq(1.0, 2.0, 3.0, Double.NaN).map("nan" -> _) ++
+      Seq(-inf, 1.0, inf).map("inf" -> _)).toDF("g", "v")
+    assertMatchesReference(df, Seq(0.0, 0.25, 0.5, 0.75, 1.0))
+  }
+
+  test("exponential spreads refine within the histogram bound") {
+    // 3 groups over ~900 binades: a value-uniform split needs a histogram
+    // per few binades, the bit-split key a bounded number at any bucket
+    // count (it throws past the bound).
+    val df = spark.range(200000L).select(
+      (col("id") % 3).as("g"),
+      (pow(lit(2.0), -(col("id") % 900)) * (lit(1.0) + rand(11))).as("v"))
+    for (buckets <- Seq(2, 16))
+      assertMatchesReference(df, Seq(0.0, 0.01, 0.5, 0.9, 0.999, 1.0), buckets)
+  }
+
+  test("a small grouped call launches at most 4 jobs") {
+    val spark0 = spark
+    import spark0.implicits._
+    val rng = new scala.util.Random(3)
+    val df = Seq.tabulate(1000)(i => (i % 5, rng.nextDouble())).toDF("g", "v")
+    val sc = spark.sparkContext
+    val key = "graft.test.tag"
+    val tag = s"percentile-jobs-${System.nanoTime()}"
+    val jobs = new AtomicInteger()
+    val drained = new CountDownLatch(1)
+    // Suites share the session: count only jobs carrying this tag, and
+    // drain the async bus with a sentinel job posted after the call.
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(key)) match {
+          case Some(`tag`) => jobs.incrementAndGet()
+          case Some(t) if t == tag + "-sentinel" => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      try Percentiles.exactPercentiles(df, col("v"), Seq("g"),
+        Seq(0.25 -> "p25", 0.5 -> "p50", 0.9 -> "p90"))
+      finally sc.setLocalProperty(key, tag + "-sentinel")
+      sc.parallelize(1 to 1, 1).count()
+      assert(drained.await(30, TimeUnit.SECONDS), "listener bus drain timed out")
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get <= 4, s"${jobs.get} jobs")
   }
 
   test("global percentiles (no group) and empty input") {
@@ -112,16 +183,6 @@ class PercentilesSpec extends SparkSpec {
       (col("id") % 2).cast("string").as("g"),
       when(col("id") % 10 =!= 0, (pmod(col("id"), lit(1000))).cast("double"))
         .otherwise(col("id").cast("double") / 7.0).as("v"))
-    val ps = Seq(0.25, 0.5, 0.95, 0.999)
-    val want = reference(df, "v", "g", ps)
-    val names = ps.indices.map(i => s"q$i")
-    val got = Percentiles.exactPercentiles(df, col("v"), Seq("g"),
-        ps.zip(names))
-      .collect()
-      .map(r => r.get(0) -> names.indices.map(i => r.getDouble(i + 1)))
-      .toMap
-    for (g <- want.keySet; i <- ps.indices)
-      assert(got(g)(i) === want(g)(i),
-        s"group $g p=${ps(i)}: got ${got(g)(i)} want ${want(g)(i)}")
+    assertMatchesReference(df, Seq(0.25, 0.5, 0.95, 0.999))
   }
 }
