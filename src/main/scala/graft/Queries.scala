@@ -4895,7 +4895,7 @@ object Queries {
     Q("template_topk",
       // Boilerplate-template mining: top-50 leading-8-token templates by
       // document count with source spread + example id — ranked by the
-      // distributed TakeOrdered idiom, never a corpus-wide window.
+      // bounded-heap topKRanked, never a corpus-wide window.
       (s, d) => TextAnalysis.templateTopK(Tables.documents(s, d),
         "doc_id", "source", "text", prefixTokens = 8, k = 50),
       Some("""WITH t AS (SELECT doc_id, source,

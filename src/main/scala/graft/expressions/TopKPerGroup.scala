@@ -7,7 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, Expression, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, UnspecifiedDistribution}
+import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution, Partitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, Dataset, SparkSession => ClassicSparkSession}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.types.IntegerType
@@ -25,6 +25,12 @@ import org.apache.spark.sql.types.IntegerType
   * with a 1-based rank. O(n log k) per partition, k rows of state per
   * group, versus the window's O(n log n) sort and full-group
   * materialization.
+  *
+  * With no group columns it is the global top-k with its rank: the
+  * final stage requires `AllTuples` — one task merging at most
+  * partitions x k rows, the shape of TakeOrdered's final stage — and
+  * replaces the unpartitioned row_number window over an
+  * `orderBy.limit`.
   *
   * Registered through spark.experimental.extraStrategies on first use;
   * rank semantics (including tie-breaks) are exactly row_number's for the
@@ -70,8 +76,12 @@ case class TopKPerGroupExec(
   override def producedAttributes: AttributeSet =
     if (partial) AttributeSet.empty else AttributeSet(rankAttr)
 
+  // Both stages keep every row in its input partition.
+  override def outputPartitioning: Partitioning = child.outputPartitioning
+
   override def requiredChildDistribution: Seq[Distribution] =
     if (partial) Seq(UnspecifiedDistribution)
+    else if (groupExprs.isEmpty) Seq(AllTuples)
     else Seq(ClusteredDistribution(groupExprs))
 
   override protected def doExecute(): RDD[InternalRow] = {
@@ -123,13 +133,12 @@ object TopKPerGroup {
 
   /** Top-k rows per group with a 1-based `rank` column; drop-in for the
     * row_number window idiom. `orderCols` accepts `col(...).desc/.asc`
-    * (bare columns default to ascending).
+    * (bare columns default to ascending). `groupCols = Nil` is the
+    * global top-k, equal to row_number over an unpartitioned window.
     */
   def apply(df: DataFrame, groupCols: Seq[Column], orderCols: Seq[Column],
             k: Int, rankName: String = "rank"): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    require(groupCols.nonEmpty,
-      "TopKPerGroup needs at least one group column (for a global top-k use orderBy.limit)")
     val spark = df.sparkSession.asInstanceOf[ClassicSparkSession]
     if (!spark.experimental.extraStrategies.contains(TopKPerGroupStrategy)) {
       spark.experimental.extraStrategies =

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.TopKPerGroup
 import org.apache.spark.sql.types.DecimalType
 
 /** Event-stream analytics shapes beyond plain grouped aggregation: pivoted
@@ -68,32 +69,18 @@ object Analytics {
   }
 
   /** Global top-k by a count column (desc, `tieCol` asc tie-break) with a
-    * 1-based `rank` column — the vocabulary-ranking shape, scale-safe. The
-    * top-k itself is `orderBy.limit` (TakeOrdered: per-partition partial
-    * top-k, bounded merge — never a full sort), and the rank over the ≤k
-    * survivors avoids the unpartitioned-window trap: rows bucket by
-    * floor(log2(count)) (weakly monotone in the count, so equal counts
-    * never split buckets), per-bucket row_numbers run in a PARTITIONED
-    * window, and each bucket's global offset is a broadcast non-equi
-    * self-join over the ≤64-row bucket histogram. No driver action, no
-    * single-task sort of anything larger than k rows.
+    * 1-based long `rank` column — the vocabulary-ranking shape,
+    * scale-safe. One [[org.apache.spark.sql.graft.TopKPerGroup]] with no
+    * group columns: each partition keeps a bounded heap of k rows, and
+    * one final task merges at most partitions × k of them and numbers
+    * them — never a full sort, never an unpartitioned window over the
+    * input. Ranks equal row_number over the same order.
     */
   def topKRanked(df: DataFrame, countCol: String, tieCol: String,
                  k: Int): DataFrame = {
     require(k > 0, "k must be positive")
-    val top = df.orderBy(col(countCol).desc, col(tieCol)).limit(k)
-      .withColumn("__b", -floor(log(2.0, col(countCol))).cast("long"))
-    val hist = top.groupBy("__b").agg(count(lit(1)).as("__bc"))
-    val off = hist.as("x")
-      .join(broadcast(hist.as("y")), col("y.__b") < col("x.__b"), "left")
-      .groupBy(col("x.__b").as("__b"))
-      .agg(coalesce(sum(col("y.__bc")), lit(0L)).as("__off"))
-    top.join(broadcast(off), "__b")
-      .withColumn("rank",
-        row_number().over(Window.partitionBy("__b")
-          .orderBy(col(countCol).desc, col(tieCol))).cast("long") +
-          col("__off"))
-      .drop("__b", "__off")
+    TopKPerGroup(df, Nil, Seq(col(countCol).desc, col(tieCol)), k)
+      .withColumn("rank", col("rank").cast("long"))
   }
 
   /** Trailing-window rolling stats per key: count and exact (decimal)

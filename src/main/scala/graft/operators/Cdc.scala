@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.TopKPerGroup
 
 /** Change-data-capture core: snapshot diffing, tiling, key reconciliation.
   *
@@ -116,11 +117,13 @@ object Cdc {
     * :896 buildJson, :975 buildLogSummary).
     *
     * Scale shape: directions come from ONE full-outer join of the
-    * distinct key sets (counts map-side combined over 3 groups); each
-    * sample is a TakeOrdered — per-partition heads, never a full sort,
-    * at most `sampleSize` rows ever reach the driver side of the plan.
-    * Every direction always appears, zero-count included (callers
-    * iterate "one row per direction").
+    * distinct key sets (counts map-side combined over 3 groups); the
+    * samples are one [[org.apache.spark.sql.graft.TopKPerGroup]] keyed
+    * on the direction — a bounded heap of `sampleSize` keys per
+    * direction and partition, never a full sort — and one grouped
+    * sorted `concat_ws` over its at most 3 × `sampleSize` rows.
+    * `sampleSize = 0` builds no heap. Every direction always appears,
+    * zero-count included (callers iterate "one row per direction").
     */
   def reconcileReport(source: DataFrame, target: DataFrame,
                       pkCols: Seq[String], sampleSize: Int): DataFrame = {
@@ -135,19 +138,19 @@ object Cdc {
         when(col("in_s").isNotNull && col("in_t").isNotNull, "common")
           .when(col("in_s").isNotNull, "missing_in_target")
           .otherwise("extra_in_target").as("direction"))
-    val allDirs = Seq("missing_in_target", "extra_in_target", "common")
     val counts = flagged.groupBy("direction").agg(count(lit(1)).as("n_keys"))
-    val samples = allDirs.map { dir =>
-      flagged.filter(col("direction") === dir).orderBy("k").limit(sampleSize)
-        .agg(concat_ws(",", sort_array(collect_list(col("k")))).as("sample_keys"))
-        .select(lit(dir).as("direction"), col("sample_keys"))
-    }.reduce(_ unionByName _)
-    allDirs.toDF("direction")
+    val report = Seq("missing_in_target", "extra_in_target", "common").toDF("direction")
       .join(counts, Seq("direction"), "left")
-      .join(samples, Seq("direction"), "left")
-      .select(col("direction"),
-        coalesce(col("n_keys"), lit(0L)).as("n_keys"),
-        coalesce(col("sample_keys"), lit("")).as("sample_keys"))
+    val withSamples =
+      if (sampleSize == 0) report.withColumn("sample_keys", lit(""))
+      else report.join(
+        TopKPerGroup(flagged, Seq(col("direction")), Seq(col("k")), sampleSize)
+          .groupBy("direction")
+          .agg(concat_ws(",", sort_array(collect_list(col("k")))).as("sample_keys")),
+        Seq("direction"), "left")
+    withSamples.select(col("direction"),
+      coalesce(col("n_keys"), lit(0L)).as("n_keys"),
+      coalesce(col("sample_keys"), lit("")).as("sample_keys"))
   }
 
   /** Per-CELL last-writer-wins merge of two replicas of the same table —

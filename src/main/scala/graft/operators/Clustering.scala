@@ -18,9 +18,10 @@ import org.apache.spark.sql.graft.DataFrameUtils.release
   * arrive in random order and kNN graphs whose components are not
   * cliques. Every round is declarative (groupBy + min + join) with an
   * eager localCheckpoint truncating lineage; the driver only decides
-  * WHEN to stop (one star-forest violator count per round), it never
-  * touches row data. `maxIter` bounds the loop, and a loop that reaches
-  * it unconverged throws rather than return partial labels.
+  * WHEN to stop (one existence check for star-forest violators per
+  * round), it never touches row data. `maxIter` bounds the loop, and a
+  * loop that reaches it unconverged throws rather than return partial
+  * labels.
   */
 object Clustering {
 
@@ -125,19 +126,19 @@ object Clustering {
     }
     // Nodes that break the star-forest shape of a round's (distinct,
     // canonical src < dst) edges: a `dst` with two parents, or a `dst`
-    // that is also a `src`. One grouped count; 0 ⟺ star forest.
-    def starViolators(e: DataFrame): Long =
+    // that is also a `src`. None ⟺ star forest; the loop asks only
+    // whether one exists, and the count is read for the error message.
+    def starViolators(e: DataFrame): DataFrame =
       e.select(col("dst").as("node"), lit(1).as("in"), lit(0).as("out"))
         .unionByName(e.select(col("src").as("node"), lit(0).as("in"),
           lit(1).as("out")))
         .groupBy("node").agg(sum(col("in")).as("in"), max(col("out")).as("out"))
         .filter(col("in") > 1 || (col("in") === 1 && col("out") === 1))
-        .count()
     // The initial edges keep self-loops and duplicate pairs: the final
-    // labelling reads its node set from them, so a node whose only pair
-    // is a self-loop stays covered. largeStar drops self-loops (v > u)
-    // and round 1's small-star distinct() drops duplicates, so no
-    // round's edges carry either. They are protected from the loop's
+    // labelling reads the self-loop nodes from them, so a node whose
+    // only pair is a self-loop stays covered. largeStar drops self-loops
+    // (v > u) and round 1's small-star distinct() drops duplicates, so
+    // no round's edges carry either. They are protected from the loop's
     // release and freed after the labels checkpoint.
     val (edges0, edges0Rdds) = checkpointTracked(pairs
       .select(least(col(aCol), col(bCol)).as("src"),
@@ -146,35 +147,35 @@ object Clustering {
       2L * Scans.materializedBytes(sc, edges0Rdds))
     var edges = edges0
     var edgeRdds = Seq.empty[RDD[_]]
-    var violators = -1L
+    var converged = false
     var iter = 0
-    while (iter < maxIter && violators != 0) {
+    while (iter < maxIter && !converged) {
       val (next, nextRdds) = checkpointTracked(smallStar(largeStar(edges)))
       release(edgeRdds)
       edges = next
       edgeRdds = nextRdds
-      violators = starViolators(edges)
+      converged = starViolators(edges).isEmpty
       iter += 1
     }
-    if (violators != 0) {
+    if (!converged) {
+      val violators = starViolators(edges).count()
       release(edgeRdds ++ edges0Rdds)
       throw notConverged(maxIter, violators)
     }
-    // Every non-root appears exactly once in the star forest as
-    // (component min, node). Nodes absent from the dst side are
-    // component roots labelling themselves. Checkpoint the labels BEFORE
-    // releasing the edge blocks they derive from (the caller consumes
-    // labels after this frame returns).
-    val nodes = edges0.select(col("src").as("node"))
-      .unionByName(edges0.select(col("dst").as("node"))).distinct()
-    // the star forest never exceeds the initial edge relation, so the
-    // same size gate covers broadcasting it under the left join
-    val (labels, _) = checkpointTracked(nodes
-      .join(maybeBcast(
-          edges.select(col("dst").as("node"), col("src").as("comp"))),
-        Seq("node"), "left")
-      .select(col("node").as("doc_id"),
-        coalesce(col("comp"), col("node")).as("cluster_id")))
+    // Every forest edge is (component min, node) and labels both its
+    // ends with its `src`: a non-root appears once, as a `dst`, and a
+    // root only ever as a `src`. A node whose only pair is a self-loop
+    // is in no forest edge, so it labels itself from the initial edges;
+    // a self-loop on a forest node loses the min to its root. One
+    // grouped min, no node set and no join. Checkpoint the labels
+    // BEFORE releasing the edge blocks they derive from (the caller
+    // consumes labels after this frame returns).
+    val (labels, _) = checkpointTracked(
+      edges.select(explode(array(col("dst"), col("src"))).as("doc_id"),
+          col("src").as("cluster_id"))
+        .unionByName(edges0.filter(col("src") === col("dst"))
+          .select(col("src").as("doc_id"), col("src").as("cluster_id")))
+        .groupBy("doc_id").agg(min(col("cluster_id")).as("cluster_id")))
     release(edgeRdds ++ edges0Rdds)
     labels
   }

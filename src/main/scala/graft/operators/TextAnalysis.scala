@@ -386,10 +386,10 @@ object TextAnalysis {
   /** The top-V vocabulary as a first-class artifact (rank, token, corpus
     * frequency, document frequency) — what a tokenizer trainer or the
     * [[oovRate]] gate consumes. One token-count aggregate, then
-    * [[Analytics.topKRanked]]: distributed TakeOrdered top-V plus a
-    * partitioned-window rank, count-desc with token tie-break so the
-    * relation is engine-portable. The count relation is never sorted in
-    * one task.
+    * [[Analytics.topKRanked]]: a bounded per-partition heap of V rows,
+    * one task merging and numbering them, count-desc with token
+    * tie-break so the relation is engine-portable. The count relation is
+    * never sorted in one task.
     */
   def vocabBuild(docs: DataFrame, idCol: String, textCol: String,
                  vocabSize: Int): DataFrame = {
@@ -397,7 +397,7 @@ object TextAnalysis {
       explode(split(col(textCol), " ")).as("tok"))
     val counts = toks.groupBy("tok")
       .agg(count(lit(1)).as("cf"), countDistinct(col("doc_id")).as("df"))
-    // Distributed top-V (TakeOrdered) + partitioned-window rank — the
+    // Bounded-heap top-V with its rank (TopKPerGroup, no group) — the
     // vocabulary relation is corpus-vocab-sized (billions of rows at
     // 100 TB); an unpartitioned row_number window over it is a one-task
     // sort.
@@ -416,8 +416,8 @@ object TextAnalysis {
     * Plan: the pair explosion runs over the VOCABULARY-sized distinct-word
     * relation (first groupBy map-side combines the corpus stream down to
     * it), never the token stream — at 100 TB the bigram stage is bounded
-    * by |vocab|·avg_len, not corpus size. Top-K is an orderBy+limit =
-    * TakeOrdered, never a full sort.
+    * by |vocab|·avg_len, not corpus size. Top-K is the bounded-heap
+    * [[Analytics.topKRanked]], never a full sort.
     */
   def bpePairCounts(docs: DataFrame, textCol: String, topK: Int): DataFrame = {
     val words = docs.select(
@@ -797,8 +797,8 @@ object TextAnalysis {
     * `prefixTokens`-token template; the top-`k` templates by document
     * count (with source spread and a deterministic example id) surface
     * the mirror/chrome candidates a boilerplate filter should review.
-    * One group-by + the distributed TakeOrdered ranking
-    * ([[Analytics.topKRanked]] — never a corpus-wide window).
+    * One group-by + the bounded-heap ranking ([[Analytics.topKRanked]]
+    * — never a corpus-wide window).
     */
   def templateTopK(docs: DataFrame, idCol: String, sourceCol: String,
                    textCol: String, prefixTokens: Int, k: Int): DataFrame = {

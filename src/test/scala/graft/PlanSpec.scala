@@ -81,8 +81,8 @@ class PlanSpec extends SparkSpec {
 
   test("vocab rankings never run an unpartitioned window") {
     // An unpartitioned row_number window pulls the whole vocabulary-sized
-    // relation through ONE task; these four must use TakeOrdered +
-    // partitioned rank (topKRanked) or TopKPerGroup instead. A WindowExec
+    // relation through ONE task; these four must rank with TopKPerGroup
+    // (topKRanked is its global form) instead. A WindowExec
     // line prints "[exprs], [part], [order]" when partitioned but only
     // "[exprs], [order]" when not.
     for (name <- Seq("vocab_build", "bpe_pair_counts", "oov_rate",
@@ -93,6 +93,16 @@ class PlanSpec extends SparkSpec {
       }.toSeq
       assert(bad.isEmpty, s"$name has unpartitioned WindowExec:\n${bad.mkString("\n")}")
     }
+  }
+
+  test("retrieval_rrf_fusion ranks with no window and no nested-loop join") {
+    // The ranks come from TopKPerGroup's global form, not a window over
+    // bucket offsets joined by a non-equi self-join. The one nested loop
+    // left is bm25TopK's cross join with its one-row corpus totals.
+    val plan = finalPlan("retrieval_rrf_fusion")
+    assert(!plan.contains("Window"), plan)
+    val loops = plan.linesIterator.filter(_.contains("NestedLoopJoin")).toSeq
+    assert(loops.forall(_.trim.endsWith("BuildRight, Cross")), plan)
   }
 
   test("no profiling entry runs a value-buffering Percentile aggregate") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.TopKPerGroup
@@ -19,16 +20,25 @@ class TopKPerGroupSpec extends SparkSpec {
       Gen.frequency(5 -> Gen.const(0), 5 -> Gen.choose(1, 30)),
       Gen.choose(0, 9)), 2000)
       .zipWithIndex.map { case ((g, score), i) => (g, score, i.toLong) }
-    val df = rows.toDF("g", "score", "id").repartition(7)
-    for (k <- Seq(1, 3, 10)) {
-      val custom = TopKPerGroup(df, Seq(col("g")),
-          Seq(col("score").desc, col("id")), k)
-        .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getInt(3))).toSet
-      val window = df.withColumn("rank", row_number().over(
-          Window.partitionBy("g").orderBy(col("score").desc, col("id"))))
-        .filter(col("rank") <= k)
-        .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getInt(3))).toSet
-      assert(custom == window && window.nonEmpty, s"k=$k")
+    val all = rows.toDF("g", "score", "id")
+    def rowsOf(df: DataFrame) =
+      df.collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getInt(3))).toSet
+    // the grouped form, then the global form (no group columns) against
+    // an unpartitioned window, with k > n and an empty input included
+    val cases =
+      Seq(1, 3, 10).map(k => (Seq("g"), all.repartition(7), k)) ++
+      (for (parts <- Seq(1, 7); k <- Seq(1, 3, 10, rows.size + 5))
+        yield (Nil, all.repartition(parts), k)) ++
+      Seq(1, 7).map(parts => (Nil, all.limit(0).repartition(parts), 3))
+    for ((groups, df, k) <- cases) {
+      val order = Seq(col("score").desc, col("id"))
+      val custom = rowsOf(TopKPerGroup(df, groups.map(col), order, k))
+      val window = rowsOf(df.withColumn("rank", row_number().over(
+          Window.partitionBy(groups.map(col): _*).orderBy(order: _*)))
+        .filter(col("rank") <= k))
+      val n = df.rdd.getNumPartitions
+      assert(custom == window, s"groups=$groups partitions=$n k=$k")
+      assert(window.nonEmpty || df.isEmpty, s"groups=$groups partitions=$n k=$k")
     }
   }
 

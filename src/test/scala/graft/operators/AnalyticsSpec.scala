@@ -2,6 +2,7 @@ package graft.operators
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -51,6 +52,25 @@ class AnalyticsSpec extends SparkSpec {
       .orderBy("v").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(out == Seq((10L, 1L), (20L, 1L), (30L, 1L), (40L, 2L),
       (50L, 2L), (60L, 3L), (70L, 3L)))
+  }
+
+  test("topKRanked ranks like row_number and a small call launches at most 3 jobs") {
+    val spark0 = spark
+    import spark0.implicits._
+    // counts tie in runs of 7, so the token tie-break decides most ranks
+    val df = Seq.tabulate(1000)(i => (s"t${i % 331}", (i % 143).toLong))
+      .toDF("tok", "cf").repartition(4)
+    var got = Array.empty[(String, Long, Long)]
+    val jobs = jobsLaunchedBy {
+      got = Analytics.topKRanked(df, "cf", "tok", 50).collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    }
+    val want = df.withColumn("rank", row_number().over(
+        Window.orderBy(col("cf").desc, col("tok"))).cast("long"))
+      .filter(col("rank") <= 50).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    assert(got.toSet == want.toSet && got.length == 50)
+    assert(jobs <= 3, s"$jobs jobs")
   }
 
   test("rollingStats counts/sums exactly the trailing range frame") {

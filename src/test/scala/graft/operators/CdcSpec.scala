@@ -85,6 +85,27 @@ class CdcSpec extends SparkSpec {
     assert(repC("common") == "1|a")
   }
 
+  test("reconcileReport: sampleSize 0 keeps the counts and samples nothing") {
+    val src = Seq(1L, 2L, 3L, 4L, 10L, 11L).toDF("id")
+    val tgt = Seq(2L, 3L, 4L, 10L, 11L, 12L).toDF("id")
+    val rep = Cdc.reconcileReport(src, tgt, Seq("id"), sampleSize = 0)
+      .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getString(2)))).toMap
+    assert(rep == Map("missing_in_target" -> ((1L, "")),
+      "extra_in_target" -> ((1L, "")), "common" -> ((5L, ""))))
+  }
+
+  test("reconcileReport: a sample larger than a direction holds all its keys") {
+    // 7 partitions so the per-partition heaps merge; "common" holds 5
+    // keys against a sample of 4, the other directions fewer than 4
+    val src = Seq(1L, 2L, 3L, 4L, 10L, 11L, 20L, 21L).toDF("id").repartition(7)
+    val tgt = Seq(2L, 3L, 4L, 10L, 11L, 30L).toDF("id").repartition(7)
+    val rep = Cdc.reconcileReport(src, tgt, Seq("id"), sampleSize = 4)
+      .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getString(2)))).toMap
+    assert(rep("missing_in_target") == ((3L, "1,20,21")))
+    assert(rep("extra_in_target") == ((1L, "30")))
+    assert(rep("common") == ((5L, "10,11,2,3")))
+  }
+
   test("cellLwwMerge: per-cell independence, ties, null writetimes, one-side rows") {
     val a = Seq(
       // key, v1, w1, v2, w2

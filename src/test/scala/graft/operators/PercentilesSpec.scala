@@ -1,9 +1,5 @@
 package graft.operators
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -97,34 +93,9 @@ class PercentilesSpec extends SparkSpec {
     import spark0.implicits._
     val rng = new scala.util.Random(3)
     val df = Seq.tabulate(1000)(i => (i % 5, rng.nextDouble())).toDF("g", "v")
-    val sc = spark.sparkContext
-    val key = "graft.test.tag"
-    val tag = s"percentile-jobs-${System.nanoTime()}"
-    val jobs = new AtomicInteger()
-    val drained = new CountDownLatch(1)
-    // Suites share the session: count only jobs carrying this tag, and
-    // drain the async bus with a sentinel job posted after the call.
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty(key)) match {
-          case Some(`tag`) => jobs.incrementAndGet()
-          case Some(t) if t == tag + "-sentinel" => drained.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(key, tag)
-      try Percentiles.exactPercentiles(df, col("v"), Seq("g"),
-        Seq(0.25 -> "p25", 0.5 -> "p50", 0.9 -> "p90"))
-      finally sc.setLocalProperty(key, tag + "-sentinel")
-      sc.parallelize(1 to 1, 1).count()
-      assert(drained.await(30, TimeUnit.SECONDS), "listener bus drain timed out")
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
-    }
-    assert(jobs.get <= 4, s"${jobs.get} jobs")
+    val jobs = jobsLaunchedBy(Percentiles.exactPercentiles(df, col("v"), Seq("g"),
+      Seq(0.25 -> "p25", 0.5 -> "p50", 0.9 -> "p90")))
+    assert(jobs <= 4, s"$jobs jobs")
   }
 
   test("global percentiles (no group) and empty input") {
