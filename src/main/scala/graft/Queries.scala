@@ -1227,13 +1227,12 @@ object Queries {
     // downstream consumer off the corpus plan.
     val (stale, bandedChanged, added) = t("parts_compute") {
       val sub = t.sub("parts")
-      val touched = sub("diff_cut") {
-        val diff = prev.select(col("doc_id"), xxhash64(col("text")).as("ph"))
-          .join(curr.select(col("doc_id"), xxhash64(col("text")).as("ch")),
-            Seq("doc_id"), "full_outer")
-        diff.filter(!(col("ph") <=> col("ch")))
-          .select("doc_id", "ph", "ch").localCheckpoint(true)
-      }
+      val diff = prev.select(col("doc_id"), xxhash64(col("text")).as("ph"))
+        .join(curr.select(col("doc_id"), xxhash64(col("text")).as("ch")),
+          Seq("doc_id"), "full_outer")
+      val touched = Scans.cut(
+        diff.filter(!(col("ph") <=> col("ch"))).select("doc_id", "ph", "ch"),
+        "diff_cut", sub).df
       val changed = touched.filter(col("ch").isNotNull).select("doc_id")
       val removed = touched.filter(col("ph").isNotNull && col("ch").isNull)
         .select("doc_id")

@@ -338,10 +338,15 @@ object Ann {
       pmod(xxhash64(col("vec_id"), lit(seed), lit(round)), lit(1000000000L))
         .cast("double") / 1e9
 
+    // The result is a driver-built relation, so every cut taken here is
+    // dead on return and released there — not per pass: a lazy cut
+    // still reads its predecessor's blocks until its own first action.
+    val cuts = scala.collection.mutable.ArrayBuffer.empty[Scans.Cut]
+    def held(c: Scans.Cut): DataFrame = { cuts += c; c.df }
     // round 0: the hash-minimal vector seeds the center set. Candidates
-    // live in a (localCheckpoint'ed) DataFrame throughout — the driver
-    // never holds candidate VECTORS beyond the final k picks, so resident
-    // memory stays O(k·dim) however rounds·oversample scale, and every
+    // live in a cut DataFrame throughout — the driver never holds
+    // candidate VECTORS beyond the final k picks, so resident memory
+    // stays O(k·dim) however rounds·oversample scale, and every
     // membership test is a broadcast (anti-)join, never a k-sized IN-list
     // literal (whose expression tree alone costs O(k) analysis time).
     // r15: every candidate checkpoint also observes its row count, so the
@@ -349,7 +354,8 @@ object Ann {
     // count job over the relation.
     def ckCounted(df: DataFrame): (DataFrame, Long) = {
       val o = org.apache.spark.sql.Observation()
-      val ck = df.observe(o, count(lit(1)).as("n")).localCheckpoint(true)
+      val ck = held(Scans.cut(df.observe(o, count(lit(1)).as("n")),
+        "kmeans_candidates"))
       (ck, Scans.observed(o, "initCentroids candidate count")("n")
         .asInstanceOf[Long])
     }
@@ -372,13 +378,13 @@ object Ann {
       // blocks. The checkpoint is (vec_id, d) — 16 bytes/row — and is
       // released as soon as the round's candidate set is materialized.
       val costObs = org.apache.spark.sql.Observation()
-      val scored = ivfAssign(v, cents, "vec_id", "v", "centroid_id", "cv")
-        .select(col("vec_id"), greatest(lit(0.0), lit(1.0) - col("cosine")).as("d"))
-        .observe(costObs,
-          sum(col("d").cast(org.apache.spark.sql.types.DecimalType(38, 12)))
-            .cast("double").as("cost"))
-        .localCheckpoint(true)
-      val scoredRdds = Scans.persistedRdds(scored)
+      val scored = Scans.cut(
+        ivfAssign(v, cents, "vec_id", "v", "centroid_id", "cv")
+          .select(col("vec_id"), greatest(lit(0.0), lit(1.0) - col("cosine")).as("d"))
+          .observe(costObs,
+            sum(col("d").cast(org.apache.spark.sql.types.DecimalType(38, 12)))
+              .cast("double").as("cost")),
+        "kmeans_scored")
       // a null sum (empty corpus) reads as exhausted — the padding below
       // covers it (the former head().getDouble raised on that input)
       val cost =
@@ -391,7 +397,7 @@ object Ann {
         // distance-proportional sample, hard-capped at l rows per round
         // (hash-ordered TakeOrdered) so candidate growth is bounded by
         // design, not by sampling luck
-        val sampled = v.join(scored, "vec_id")
+        val sampled = v.join(scored.df, "vec_id")
           .filter(uniform(r) < least(lit(1.0), lit(l) * col("d") / lit(cost)))
           .orderBy(xxhash64(col("vec_id"), lit(seed + 2), lit(r)), col("vec_id"))
           .limit(lCap)
@@ -403,7 +409,7 @@ object Ann {
         candDf = ck
         nCandCur = n
       }
-      org.apache.spark.sql.graft.DataFrameUtils.release(scoredRdds)
+      scored.release()
     }
     // pad deterministically if sampling came up short of k
     val nCand = nCandCur
@@ -414,7 +420,8 @@ object Ann {
         .orderBy(xxhash64(col("vec_id"), lit(seed + 1)), col("vec_id"))
         .limit(k - nCand.toInt)
         .select(col("vec_id").as("cand_id"), col("v").as("cv"))
-      candDf = candDf.unionByName(extra).localCheckpoint()
+      candDf = held(Scans.cut(candDf.unionByName(extra), "kmeans_padded",
+        eager = false))
     }
     val nCandTotal = math.max(nCand, k.toLong)
 
@@ -449,8 +456,9 @@ object Ann {
         reduceLocal(candWeighted, k, passes, batchSize)
       else
         // iterated over by the pass loop — cut lineage once up front
-        reduceDistributed(candWeighted.localCheckpoint(), k, passes,
-          batchSize)
+        reduceDistributed(held(Scans.cut(candWeighted, "kmeans_weighted",
+          eager = false)), k, passes, batchSize)
+    cuts.foreach(_.release())
     chosen.sortBy(_._1).zipWithIndex
       .map { case ((_, vec), i) => (i.toLong, vec) }.toSeq
       .toDF("centroid_id", "cv")
@@ -546,18 +554,20 @@ object Ann {
     var cand = candWeighted.filter(col("cid") =!= seedRow._1)
       .withColumn("min_d", lit(Double.MaxValue))
     var newPicks: Seq[(Long, Array[Float])] = chosen.toSeq
+    // the picks are collected, so every pass's cut is dead on return
+    val cuts = scala.collection.mutable.ArrayBuffer.empty[Scans.Cut]
     while (chosen.size < k && newPicks.nonEmpty) {
       val batch = newPicks.toDF("bid", "bv")
       val upd = cand.select(col("cid"), col("cv")).join(broadcast(batch))
         .groupBy("cid")
         .agg(min(lit(1.0) - cosine(col("cv"), col("bv"))).as("nd"))
-      // localCheckpoint: the relation is O(candidates) rows — cutting
-      // lineage each pass keeps the plan from re-deriving every earlier
-      // pass's join chain
-      cand = cand.join(upd, "cid")
+      // lazy cut: the relation is O(candidates) rows — cutting lineage
+      // each pass keeps the plan from re-deriving every earlier pass's
+      // join chain, and the pick below is the action that fills it
+      cuts += Scans.cut(cand.join(upd, "cid")
         .withColumn("min_d", least(col("min_d"), col("nd")))
-        .drop("nd")
-        .localCheckpoint()
+        .drop("nd"), "kmeans_reduce_pass", eager = false)
+      cand = cuts.last.df
       val take = math.min(batchSize, k - chosen.size)
       newPicks = cand
         .orderBy((col("w").cast("double") * col("min_d")).desc, col("cid"))
@@ -569,6 +579,7 @@ object Ann {
         cand = cand.join(broadcast(pickedIds), Seq("cid"), "left_anti")
       }
     }
+    cuts.foreach(_.release())
     chosen.toSeq
   }
 
@@ -725,7 +736,7 @@ object Ann {
                          centroidIdCol: String, centroidVecCol: String,
                          k: Int): DataFrame = {
     val affected = affectedBuckets(prevEmb, currEmb, centroids, idCol,
-      vecCol, centroidIdCol, centroidVecCol, eager = true).affected
+      vecCol, centroidIdCol, centroidVecCol).affected
     val recomputed = knnEdgeRecompute(
       currIdx.join(broadcast(affected), Seq("centroid_id"), "left_semi"), k)
     base.join(broadcast(affected), Seq("centroid_id"), "left_anti")
@@ -943,18 +954,17 @@ object Ann {
     * dedup oracle. Output: (vec_id, pv, nv) for touched rows only.
     */
   private def touchedDiff(prevEmb: DataFrame, currEmb: DataFrame,
-                          idCol: String, vecCol: String,
-                          eager: Boolean): DataFrame = {
+                          idCol: String, vecCol: String): DataFrame = {
     val p = prevEmb.select(col(idCol).as("vec_id"),
       xxhash64(col(vecCol)).as("ph"))
     val c = currEmb.select(col(idCol).as("vec_id"),
       xxhash64(col(vecCol)).as("ch"))
     // cut: the id set feeds BOTH broadcast probes below — without it
     // the corpus diff join would execute once per probe build
-    val touchedIds = localCut(p.join(c, Seq("vec_id"), "full_outer")
+    val touchedIds = Scans.cut(p.join(c, Seq("vec_id"), "full_outer")
       .filter(!(col("ph") <=> col("ch")))
       .select(col("vec_id"), col("ph").isNotNull.as("had"),
-        col("ch").isNotNull.as("has")), eager)
+        col("ch").isNotNull.as("has")), "ivf_touched_ids").df
     val pv = prevEmb.select(col(idCol).as("vec_id"), col(vecCol).as("pv"))
       .join(broadcast(touchedIds.filter(col("had")).select("vec_id")),
         Seq("vec_id"), "left_semi")
@@ -964,18 +974,6 @@ object Ann {
     pv.join(nv, Seq("vec_id"), "full_outer")
       .select("vec_id", "pv", "nv")
   }
-
-  /** Lineage cut on a DELTA-SIZED relation (the upsertLshPairs
-    * discipline): with `eager = true` the corpus-sized upstream runs
-    * ONCE at call time and every downstream consumer (the affected-set
-    * collect a swap publish needs, the delta write, both sides of a
-    * bucket self-join) reads the small cached blocks. localCheckpoint
-    * blocks are executor-local and non-replicated — acceptable for an
-    * idempotent maintenance batch that re-runs on loss; callers needing
-    * fault-tolerant lineage pass eager = false and persist themselves.
-    */
-  private def localCut(df: DataFrame, eager: Boolean): DataFrame =
-    if (eager) df.localCheckpoint(true) else df
 
   /** [[ivfIndexUpsert]] split at its carry-over boundary for the
     * DELTA-COST PUBLISH: (affected centroid ids, the new full content of
@@ -1000,11 +998,10 @@ object Ann {
   def ivfIndexUpsertParts(base: DataFrame, prevEmb: DataFrame,
                           currEmb: DataFrame, centroids: DataFrame,
                           idCol: String, vecCol: String,
-                          centroidIdCol: String, centroidVecCol: String,
-                          eagerCheckpoint: Boolean = true)
+                          centroidIdCol: String, centroidVecCol: String)
       : (DataFrame, DataFrame) = {
     val diff = affectedBuckets(prevEmb, currEmb, centroids, idCol, vecCol,
-      centroidIdCol, centroidVecCol, eagerCheckpoint)
+      centroidIdCol, centroidVecCol)
     val removed = diff.leaving.select("vec_id")
     val incomingAssigned = diff.incoming
       .join(diff.incomingAssign.select("vec_id", "centroid_id"), "vec_id")
@@ -1029,15 +1026,15 @@ object Ann {
   /** The one derivation of [[AffectedBuckets]], shared by
     * [[ivfIndexUpsertParts]] and [[knnEdgeIndexUpsert]]: ONE pass over
     * the corpus-sized diff behind a cut; everything after it is
-    * delta-sized.
+    * delta-sized, and every consumer (the publish's affected-set
+    * collect, the delta write, a bucket self-join) reads cached blocks.
     */
   private def affectedBuckets(prevEmb: DataFrame, currEmb: DataFrame,
                               centroids: DataFrame, idCol: String,
                               vecCol: String, centroidIdCol: String,
-                              centroidVecCol: String,
-                              eager: Boolean): AffectedBuckets = {
-    val touched = localCut(touchedDiff(prevEmb, currEmb, idCol, vecCol,
-      eager), eager)
+                              centroidVecCol: String): AffectedBuckets = {
+    val touched = Scans.cut(touchedDiff(prevEmb, currEmb, idCol, vecCol),
+      "ivf_touched").df
     val incoming = touched.filter(col("nv").isNotNull)
       .select(col("vec_id"), col("nv").as("v"))
     val leaving = touched.filter(col("pv").isNotNull)
@@ -1050,12 +1047,12 @@ object Ann {
     // both probes are delta-sized against the broadcast frozen set; cut
     // so the swap publish's driver-side partition list and the
     // carry-over anti-join both read the tiny cached set
-    val affected = localCut(
+    val affected = Scans.cut(
       ivfAssign(leaving, centroids, "vec_id", "v",
           centroidIdCol, centroidVecCol).select("centroid_id")
         .unionByName(incomingAssign.select("centroid_id"))
         .distinct(),
-      eager)
+      "ivf_affected_buckets").df
     AffectedBuckets(incoming, leaving, incomingAssign, affected)
   }
 

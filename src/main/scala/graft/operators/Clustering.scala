@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.DataFrameUtils.release
+import org.apache.spark.sql.graft.DataFrameUtils.rebase
 
 /** Connected components over a pair relation — the step that turns
   * near-duplicate PAIRS (from LSH / embedding bucketing) into duplicate
@@ -17,7 +16,7 @@ import org.apache.spark.sql.graft.DataFrameUtils.release
   * O(log² n) rounds on ANY graph, including long chains whose node ids
   * arrive in random order and kNN graphs whose components are not
   * cliques. Every round is declarative (groupBy + min + join) with an
-  * eager localCheckpoint truncating lineage; the driver only decides
+  * eager [[Scans.cut]] truncating lineage; the driver only decides
   * WHEN to stop (one existence check for star-forest violators per
   * round), it never touches row data. `maxIter` bounds the loop, and a
   * loop that reaches it unconverged throws rather than return partial
@@ -50,28 +49,18 @@ object Clustering {
                           maxIter: Int = 32): DataFrame = {
     require(maxIter > 0, "maxIter must be positive")
     val spark = pairs.sparkSession
-    val sc = spark.sparkContext
-    // Eager localCheckpoint TRUNCATES LINEAGE: the edge relation is tiny
-    // relative to the corpus (only near-dup docs appear) while its
-    // upstream plan (e.g. the whole LSH pipeline) is huge — without the
-    // cut, every round's logical plan embeds the full upstream tree and
-    // re-pays optimizer + codegen over it.
-    // The checkpoint is then rebased on a FRESH logical relation: a bare
-    // localCheckpoint keeps the original plan's inferred constraints,
-    // which reference attributes the checkpoint no longer outputs —
-    // re-wrapping the next round's union/join over that relation trips
-    // Catalyst's constraint rewrite ("key not found: src#N").
-    // DataFrameUtils.rebase hands the checkpoint's InternalRow RDD
-    // straight to the fresh relation, with no per-row conversion.
-    // Block tracking frees superseded rounds' cached RDDs
-    // DETERMINISTICALLY (the ContextCleaner would eventually GC them, but
-    // a long-lived driver clustering repeatedly shouldn't accumulate
-    // block-manager entries until then).
-    def checkpointTracked(df: DataFrame): (DataFrame, Seq[RDD[_]]) = {
-      val ck = df.localCheckpoint(true)
-      (org.apache.spark.sql.graft.DataFrameUtils.rebase(ck),
-        Scans.persistedRdds(ck))
-    }
+    // Every round is an eager cut, TRUNCATING LINEAGE: the edge relation
+    // is tiny relative to the corpus (only near-dup docs appear) while
+    // its upstream plan (e.g. the whole LSH pipeline) is huge, and
+    // without the cut every round's plan embeds that tree and re-pays
+    // optimizer + codegen over it. Each cut is rebased on a FRESH logical
+    // relation: a bare checkpoint keeps the original plan's inferred
+    // constraints, which reference attributes it no longer outputs, and
+    // the next round's union/join over it trips Catalyst's constraint
+    // rewrite ("key not found: src#N"); `rebase` hands the InternalRow
+    // RDD over with no per-row conversion. Superseded rounds are released
+    // at once: a long-lived driver clustering repeatedly shouldn't
+    // accumulate block-manager entries until the ContextCleaner runs.
     // Size-gated broadcast of each star's per-node-min side (broadcast
     // the side you KNOW is small): `mins` is one (node, min) row per
     // node, never more than twice the canonical edge relation whose
@@ -140,26 +129,28 @@ object Clustering {
     // (v > u) and round 1's small-star distinct() drops duplicates, so
     // no round's edges carry either. They are protected from the loop's
     // release and freed after the labels checkpoint.
-    val (edges0, edges0Rdds) = checkpointTracked(pairs
+    val initial = Scans.cut(pairs
       .select(least(col(aCol), col(bCol)).as("src"),
-        greatest(col(aCol), col(bCol)).as("dst")))
+        greatest(col(aCol), col(bCol)).as("dst")), "cc_edges")
+    val edges0 = rebase(initial.df)
     minsFit = Scans.fitsBroadcast(spark,
-      2L * Scans.materializedBytes(sc, edges0Rdds))
+      2L * Scans.materializedBytes(spark.sparkContext, initial.rdds))
     var edges = edges0
-    var edgeRdds = Seq.empty[RDD[_]]
+    var round = Option.empty[Scans.Cut]
     var converged = false
     var iter = 0
     while (iter < maxIter && !converged) {
-      val (next, nextRdds) = checkpointTracked(smallStar(largeStar(edges)))
-      release(edgeRdds)
-      edges = next
-      edgeRdds = nextRdds
+      val next = Scans.cut(smallStar(largeStar(edges)), "cc_round")
+      round.foreach(_.release())
+      round = Some(next)
+      edges = rebase(next.df)
       converged = starViolators(edges).isEmpty
       iter += 1
     }
+    def releaseEdges(): Unit = (round.toSeq :+ initial).foreach(_.release())
     if (!converged) {
       val violators = starViolators(edges).count()
-      release(edgeRdds ++ edges0Rdds)
+      releaseEdges()
       throw notConverged(maxIter, violators)
     }
     // Every forest edge is (component min, node) and labels both its
@@ -170,14 +161,15 @@ object Clustering {
     // grouped min, no node set and no join. Checkpoint the labels
     // BEFORE releasing the edge blocks they derive from (the caller
     // consumes labels after this frame returns).
-    val (labels, _) = checkpointTracked(
+    val labels = Scans.cut(
       edges.select(explode(array(col("dst"), col("src"))).as("doc_id"),
           col("src").as("cluster_id"))
         .unionByName(edges0.filter(col("src") === col("dst"))
           .select(col("src").as("doc_id"), col("src").as("cluster_id")))
-        .groupBy("doc_id").agg(min(col("cluster_id")).as("cluster_id")))
-    release(edgeRdds ++ edges0Rdds)
-    labels
+        .groupBy("doc_id").agg(min(col("cluster_id")).as("cluster_id")),
+      "cc_labels")
+    releaseEdges()
+    rebase(labels.df)
   }
 
   private def notConverged(maxIter: Int, violators: Long): IllegalStateException =
@@ -219,17 +211,14 @@ object Clustering {
     * anti-join.
     */
   def upsertClusters(prevClusters: DataFrame, pairs: DataFrame,
-                     seedIds: DataFrame,
-                     eagerCheckpoint: Boolean = true): DataFrame = {
+                     seedIds: DataFrame): DataFrame = {
     // Composed from the parts split, so the rebuild-equality oracle and
     // the poisoned-bucket carry-over spec gate the split form the
-    // delta-cost publish consumes. EXECUTION SEMANTICS: with the
-    // default eagerCheckpoint the affected-doc set runs Spark jobs AT
-    // CALL TIME (the upsertLshPairs convention — see its scaladoc for
-    // the lineage/fault-tolerance tradeoff); pass false for lazy
-    // composition.
+    // delta-cost publish consumes. EXECUTION SEMANTICS: the affected-doc
+    // set is cut eagerly, so the call runs Spark jobs AT CALL TIME (the
+    // upsertLshPairs convention; see Scans.cut for the fault tradeoff).
     val (affDocs, reclosed) =
-      upsertClustersParts(prevClusters, pairs, seedIds, eagerCheckpoint)
+      upsertClustersParts(prevClusters, pairs, seedIds)
     prevClusters.join(affDocs, Seq("doc_id"), "left_anti")
       .select("doc_id", "cluster_id")
       .unionByName(reclosed)
@@ -240,22 +229,20 @@ object Clustering {
     * for docs in the affected set (the one-hop-expansion argument above),
     * so a publish that rewrites only the partitions holding affected
     * docs and references the rest in place is row-identical to the
-    * union form. `affDocs` is delta-sized and eagerly checkpointed — it
-    * feeds the affected-partition list, the carry-over anti-join, and
-    * the re-close, and its upstream is a corpus-sized semi-join
-    * (eagerCheckpoint = false composes lazily, re-executing that
-    * upstream per consumer).
+    * union form. `affDocs` is delta-sized and cut eagerly — it feeds
+    * the affected-partition list, the carry-over anti-join, and the
+    * re-close, and its upstream is a corpus-sized semi-join that would
+    * otherwise re-execute per consumer.
     */
   def upsertClustersParts(prevClusters: DataFrame, pairs: DataFrame,
-                          seedIds: DataFrame,
-                          eagerCheckpoint: Boolean = true)
-      : (DataFrame, DataFrame) = {
+                          seedIds: DataFrame): (DataFrame, DataFrame) = {
     val seeds = seedIds.select(col("doc_id")).distinct()
     val affClusters = prevClusters.join(seeds, Seq("doc_id"), "left_semi")
       .select("cluster_id").distinct()
-    val affDocs0 = prevClusters.join(affClusters, Seq("cluster_id"), "left_semi")
-      .select("doc_id").unionByName(seeds).distinct()
-    val affDocs = if (eagerCheckpoint) affDocs0.localCheckpoint(true) else affDocs0
+    val affDocs = Scans.cut(
+      prevClusters.join(affClusters, Seq("cluster_id"), "left_semi")
+        .select("doc_id").unionByName(seeds).distinct(),
+      "affected_docs").df
     val affPairs = pairs.join(affDocs.select(col("doc_id").as("doc_a")),
       Seq("doc_a"), "left_semi")
     val reclosed = dedupClusters(affPairs, "doc_a", "doc_b")

@@ -88,21 +88,19 @@ object CurationPipeline {
     // The gate survivors feed TWO separate executions: the near-dup
     // clustering loop materializes its edge relation (LSH over `gated`)
     // in its own checkpoint action, and the caller's final action runs
-    // `gated` again under the anti-join. An eager localCheckpoint here
-    // makes the exact-dedup + gates subtree execute ONCE per pipeline
-    // instead of twice (r15, guide §2.4/§5 — reuse over recompute; the
-    // survivors are a filtered projection of the input, far smaller than
-    // the corpus, and the blocks are released by the context cleaner
-    // with the relation). Stage-0/1/2 observations ride the checkpoint
-    // job (CollectMetrics fires during it — same pattern as the CC
-    // loops' fused convergence counts, spec-gated by "stageCounts equals
-    // independent per-stage counts").
-    val gated = tap(2)(afterExact
+    // `gated` again under the anti-join. An eager cut here makes the
+    // exact-dedup + gates subtree execute ONCE per pipeline instead of
+    // twice (r15 — reuse over recompute; the survivors are a filtered
+    // projection of the input, far smaller than the corpus, and the
+    // context cleaner frees the blocks with the relation). Stage-0/1/2
+    // observations ride the checkpoint job (as `initCentroids`' candidate
+    // counts read through `Scans.observed`; spec-gated here by
+    // "stageCounts equals independent per-stage counts").
+    val gated = Scans.cut(tap(2)(afterExact
       .filter(TextAnalysis.qualityScore(col("text")) >= cfg.qualityMin)
       .join(rep, "doc_id")
       .filter(col("dup_ratio") <= cfg.dupRatioMax)
-      .select(col("doc_id"), col("text"), col("lang")))
-      .localCheckpoint(true)
+      .select(col("doc_id"), col("text"), col("lang"))), "curation_gated").df
 
     // 4. near-dup clustering over the survivors; drop non-canonicals
     // spread = false (r14): `gated` is already exchange-partitioned by

@@ -3,12 +3,46 @@ package graft.operators
 import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.graft.DataFrameUtils
 import org.apache.spark.storage.StorageLevel
 
-/** Scan-parallelism plumbing shared by operators and query bodies (r14
-  * optimization round).
+import graft.{NoTimer, PhaseTimer}
+
+/** Plumbing shared by operators and query bodies: scan-parallelism
+  * spreads (r14) and the one lineage cut every operator takes ([[cut]]),
+  * with its blocks' RDDs, their sizes and the Observations it publishes.
   */
 object Scans {
+
+  /** A lineage cut: `df` reads the checkpointed blocks, `rdds` hold them.
+    * `release()` frees them; call it once nothing reads `df` again, nor
+    * a lazy relation built over it.
+    */
+  final case class Cut(df: DataFrame, rdds: Seq[RDD[_]]) {
+    def release(): Unit = DataFrameUtils.release(rdds)
+  }
+
+  /** The library's one lineage cut: `localCheckpoint(eager)` of `df`,
+    * timed as the span `label` of `t`, its RDDs named `label` (storage
+    * reports show which operator holds which blocks). Eager (default):
+    * one `localCheckpoint at …` job now, which also publishes any
+    * Observation upstream of the cut ([[observed]]). Lazy: the first
+    * action fills the blocks — for a relation that action reads whole
+    * anyway. Not rebased: that would drop the output partitioning the
+    * joins downstream rely on (connected components rebases its rounds).
+    *
+    * Local checkpoint blocks are executor-local and not replicated: an
+    * executor lost after the cut fails the query — fine for an
+    * idempotent batch that re-runs, not for a stage that must survive
+    * preemption; a reliable checkpoint would replace it here, in one
+    * place. Cuts an operator returns are freed by Spark's ContextCleaner
+    * once unreachable; cuts it supersedes it releases itself.
+    */
+  def cut(df: DataFrame, label: String, t: PhaseTimer = NoTimer,
+          eager: Boolean = true): Cut = {
+    val ck = t(label)(df.localCheckpoint(eager))
+    Cut(ck, persistedRdds(ck).map(_.setName(label)))
+  }
 
   /** Scale-ADAPTIVE compute spread: repartition `df` by `key` only when
     * its scan offers fewer partitions than the session's parallelism.
@@ -88,7 +122,7 @@ object Scans {
       df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, key)
 
   /** Bounded read of an [[org.apache.spark.sql.Observation]] whose
-    * metrics were published by an EAGER localCheckpoint rather than a
+    * metrics were published by an eager [[cut]] rather than a
     * caller-run action (the kmeans candidate counts and round costs in
     * `Ann.initCentroids`, the only reader). That publish relies on
     * Spark-internal behavior — eager checkpoint executing under
@@ -118,13 +152,12 @@ object Scans {
             "reads to driver-side count() probes.")
     }
 
-  /** The persisted RDDs in `df`'s own lineage: for an eager
-    * `localCheckpoint`, the checkpointed RDD that holds its blocks. Read
-    * from the Dataset itself rather than diffed from the context-wide
-    * `getPersistentRDDs` before and after the checkpoint, so an RDD that
-    * another thread persists in that window is never taken (and later
+  /** The persisted RDDs in `df`'s own lineage: for a [[cut]], eager or
+    * not, the checkpointed RDD that holds its blocks. Read from the
+    * Dataset, not diffed from the context-wide `getPersistentRDDs`, so an
+    * RDD another thread persists meanwhile is never taken (and later
     * unpersisted) as this caller's. The walk stops at the first persisted
-    * RDD on each path; a checkpoint truncates the lineage there anyway.
+    * RDD on each path, where a checkpoint truncates the lineage anyway.
     */
   def persistedRdds(df: Dataset[_]): Seq[RDD[_]] = {
     def walk(rdd: RDD[_]): Seq[RDD[_]] =
@@ -135,8 +168,7 @@ object Scans {
 
   /** Exact materialized byte size of already-cached/checkpointed RDDs, from
     * the block manager's storage report (driver-side metadata, no job).
-    * `rdds` are the ones a `localCheckpoint(true)` registered, as
-    * [[persistedRdds]] finds them. Returns 0 when nothing is found (empty
+    * `rdds` are an eager [[cut]]'s. Returns 0 when nothing is found (empty
     * relation or already unpersisted).
     */
   def materializedBytes(sc: SparkContext, rdds: Seq[RDD[_]]): Long = {

@@ -491,18 +491,18 @@ object TextDedup {
       .withColumn("ch", md5(concat_ws(" ",
         slice(split(col("_t"), " "), col("span_start").cast("int") + 1,
           (col("span_end") - col("span_start")).cast("int")))))
-    // Eager localCheckpoint TRUNCATES LINEAGE (the Clustering discipline):
+    // An eager cut TRUNCATES LINEAGE (the Clustering discipline):
     // the removal set is tiny — only spans that LOSE the canonical pick —
     // but its upstream plan is the whole span-detection pipeline, and
     // three downstream branches (anti-join, affected set, accounting)
     // would otherwise each re-pay it. One evaluation, constant-size plan
     // for every consumer.
-    val rem = withContent
+    val rem = Scans.cut(withContent
       .withColumn("rn", row_number().over(
         Window.partitionBy("ch").orderBy("doc_id", "span_start")))
       .filter(col("rn") > 1)
-      .select(col("doc_id").as("r_doc"), col("span_start"), col("span_end"))
-      .localCheckpoint(true)
+      .select(col("doc_id").as("r_doc"), col("span_start"), col("span_end")),
+      "repeated_span_removals").df
     val affected = rem.select(col("r_doc").as("doc_id")).distinct()
     val tokens = docs.select(col(idCol).as("doc_id"),
         posexplode(split(col(textCol), " ")).as(Seq("pos", "tok")))
@@ -640,42 +640,29 @@ object TextDedup {
     * sized banded index streams through un-shuffled (bucketed on
     * (band, bh) it co-locates with the candidate join too).
     *
-    * EXECUTION SEMANTICS: with `eagerCheckpoint = true` (the default,
-    * and what the benched entries price) this method RUNS SPARK JOBS AT
-    * CALL TIME — the delta-sized intermediates are eagerly
-    * localCheckpointed, so the call is not a lazy plan-builder and an
-    * `explain`/conditional caller triggers real work. localCheckpoint
-    * blocks are NON-REPLICATED executor-local state: on a multi-executor
-    * cluster an executor loss makes the truncated lineage unrecoverable
-    * and fails the job (acceptable for an idempotent maintenance batch
-    * that simply re-runs; not for a pipeline stage that must survive
-    * preemption). Callers needing lazy composition or fault-tolerant
-    * lineage pass `eagerCheckpoint = false` and apply their own
-    * persistence discipline (e.g. `persist` + unpersist, or reliable
-    * `checkpoint` to the cluster FS) — correctness is unaffected, only
-    * re-execution shape.
+    * EXECUTION SEMANTICS: this method RUNS SPARK JOBS AT CALL TIME —
+    * the delta-sized intermediates are cut eagerly ([[Scans.cut]] states
+    * the executor-loss caveat), so an `explain`/conditional caller
+    * triggers real work.
     *
     * @param prevPairs  standing verified pairs (doc_a < doc_b, jaccard)
     * @param prevBanded standing banded keys (doc_id, band, bh)
     * @param currDocs   the NEW corpus snapshot
     * @param changedIds doc_id relation: inserts + updated docs
     * @param removedIds doc_id relation: docs absent from `currDocs`
-    * @param eagerCheckpoint truncate lineage on the delta-sized
-    *                   intermediates (eager jobs at call time; see above)
     * @return (maintained pairs, maintained banded keys, added pairs)
     */
   def upsertLshPairs(prevPairs: DataFrame, prevBanded: DataFrame,
                      currDocs: DataFrame, changedIds: DataFrame,
                      removedIds: DataFrame, idCol: String, textCol: String,
                      n: Int, numPerm: Int, bands: Int,
-                     threshold: Double,
-                     eagerCheckpoint: Boolean = true): (DataFrame, DataFrame, DataFrame) = {
+                     threshold: Double): (DataFrame, DataFrame, DataFrame) = {
     // Composed from the parts split (the Ann.ivfIndexUpsert pattern), so
     // every rebuild-equivalence oracle/spec on this form gates the parts
     // form the delta-cost publish consumes.
     val (stale, bandedChanged, added) = upsertLshPairsParts(prevPairs,
       prevBanded, currDocs, changedIds, removedIds, idCol, textCol,
-      n, numPerm, bands, threshold, eagerCheckpoint)
+      n, numPerm, bands, threshold)
     val keptBanded = prevBanded.join(stale, Seq("doc_id"), "left_anti")
     val keptPairs = prevPairs
       .join(stale.select(col("doc_id").as("doc_a")), Seq("doc_a"), "left_anti")
@@ -698,33 +685,29 @@ object TextDedup {
                           removedIds: DataFrame, idCol: String,
                           textCol: String, n: Int, numPerm: Int, bands: Int,
                           threshold: Double,
-                          eagerCheckpoint: Boolean = true,
                           t: graft.PhaseTimer = graft.NoTimer)
       : (DataFrame, DataFrame, DataFrame) = {
     require(numPerm % bands == 0, "numPerm must be a multiple of bands")
-    // Eager localCheckpoints TRUNCATE LINEAGE on the delta-sized
-    // relations (the Clustering discipline): the caller typically
-    // derives changed/removed from a corpus-sized snapshot diff and then
-    // WRITES the returned relations as separate jobs — without the
-    // cuts, `stale` re-runs that diff in three anti-joins and the
-    // minhash banding of the changed docs (128 perms x shingles, the
-    // CPU-heavy stage) re-executes in every subplan that references
-    // `bandedChanged` or `cand`. All are delta/candidate-sized by
-    // the operator's contract, so the cached blocks stay small at any
-    // corpus scale.
-    // With eagerCheckpoint the cuts RUN at call time, so wrapping each
-    // in a phase label gives the probe the true stage attribution
-    // (banding vs candidate join vs exact verify) of the SAME code the
-    // entries ship.
-    def cut(label: String)(df: DataFrame): DataFrame =
-      if (eagerCheckpoint) t(label)(df.localCheckpoint(true)) else df
-    val stale = cut("stale_cut")(changedIds.select(col("doc_id"))
-      .unionByName(removedIds.select(col("doc_id"))).distinct())
+    // Eager cuts TRUNCATE LINEAGE on the delta-sized relations (the
+    // Clustering discipline): the caller typically derives
+    // changed/removed from a corpus-sized snapshot diff and then WRITES
+    // the returned relations as separate jobs — without the cuts,
+    // `stale` re-runs that diff in three anti-joins and the minhash
+    // banding of the changed docs (128 perms x shingles, the CPU-heavy
+    // stage) re-executes in every subplan that references
+    // `bandedChanged` or `cand`. All are delta/candidate-sized, so the
+    // cached blocks stay small at any corpus scale. Each cut is a span
+    // of `t`: a timed caller sees banding vs candidate join vs exact
+    // verify of the SAME code the entries ship.
+    val stale = Scans.cut(changedIds.select(col("doc_id"))
+      .unionByName(removedIds.select(col("doc_id"))).distinct(),
+      "stale_cut", t).df
     val keptBanded = prevBanded.join(broadcast(stale), Seq("doc_id"), "left_anti")
     val changedDocs = currDocs.join(
       changedIds.select(col("doc_id").as(idCol)), Seq(idCol), "left_semi")
-    val bandedChanged = cut("band_changed")(
-      bandedKeys(shingleHashTable(changedDocs, idCol, textCol, n), numPerm, bands))
+    val bandedChanged = Scans.cut(
+      bandedKeys(shingleHashTable(changedDocs, idCol, textCol, n), numPerm, bands),
+      "band_changed", t).df
     val newBanded = keptBanded.unionByName(bandedChanged)
     // BROADCAST the delta side of the candidate join: bandedChanged is
     // |changed docs| × bands rows (delta-sized by this operator's
@@ -739,20 +722,21 @@ object TextDedup {
     // for file-based storage, since the delta's ~|delta|·bands random
     // hash keys saturate any row-group pruning; embarrassingly
     // parallel at cluster scale, one corpus scan per maintenance batch.
-    val cand = cut("candidate_join")(
+    val cand = Scans.cut(
       broadcast(bandedChanged).as("a").join(newBanded.as("b"),
         col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
           col("a.doc_id") =!= col("b.doc_id"))
       .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
         greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"))
-      .distinct())
+      .distinct(), "candidate_join", t).df
     val endpoints = cand.select(col("doc_a").as(idCol))
       .unionByName(cand.select(col("doc_b").as(idCol))).distinct()
     // shVer feeds three subplans (sizes + both sides of the
     // intersection self-join); it is candidate-endpoint-sized, so the
     // cut trades a bounded cache for two re-shingling passes.
-    val shVer = cut("verify_shingle")(shingleHashTable(
-      currDocs.join(endpoints, Seq(idCol), "left_semi"), idCol, textCol, n))
+    val shVer = Scans.cut(shingleHashTable(
+      currDocs.join(endpoints, Seq(idCol), "left_semi"), idCol, textCol, n),
+      "verify_shingle", t).df
     val sizes = shVer.groupBy("doc_id").agg(count(lit(1)).as("sz"))
     val inter = cand
       .join(shVer.as("sa"), col("doc_a") === col("sa.doc_id"))
@@ -761,7 +745,8 @@ object TextDedup {
       .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("inter"))
     // added feeds the delta content, the affected-partition set and the
     // re-close seeds — cut so the verify join runs once
-    val added = cut("verify_jaccard")(withJaccard(inter, sizes, threshold))
+    val added = Scans.cut(withJaccard(inter, sizes, threshold),
+      "verify_jaccard", t).df
     (stale, bandedChanged, added)
   }
 

@@ -297,10 +297,22 @@ class AnnSpec extends SparkSpec {
     assert(refined == again)
   }
 
+  /** `body`'s result and the RDD ids it leaves persisted:
+    * `initCentroids` returns a driver-built relation, so every cut it
+    * took must be released.
+    */
+  private def persistedAfter[A](body: => A): (A, Set[Int]) = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val out = body
+    (out, spark.sparkContext.getPersistentRDDs.keySet.toSet -- before)
+  }
+
   test("initCentroids: deterministic, k respected, distinct real vectors") {
     val emb = graft.Tables.embeddings(spark, sfDir)
-    val c1 = Ann.initCentroids(emb, "vec_id", "embedding", k = 8, seed = 7L)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
+    val (c1, leaked) = persistedAfter(
+      Ann.initCentroids(emb, "vec_id", "embedding", k = 8, seed = 7L)
+        .collect().map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap)
+    assert(leaked.isEmpty, s"initCentroids left persisted RDDs $leaked")
     assert(c1.size == 8)
     assert(c1.keySet == (0L until 8L).toSet) // relabelled 0..k-1
     assert(c1.values.toSeq.distinct.size == 8) // no duplicate centers
@@ -353,9 +365,10 @@ class AnnSpec extends SparkSpec {
         ((pmod(xxhash64(col("id"), lit(d)), lit(1000)).cast("double") / 500.0) - 1.0)
           .cast("float")): _*)
         .as("embedding"))
-    val cents = Ann.initCentroids(emb, "vec_id", "embedding",
-      k = 1000, seed = 3L)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
+    val (cents, leaked) = persistedAfter(
+      Ann.initCentroids(emb, "vec_id", "embedding", k = 1000, seed = 3L)
+        .collect().map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap)
+    assert(leaked.isEmpty, s"initCentroids left persisted RDDs $leaked")
     assert(cents.size == 1000)
     assert(cents.keySet == (0L until 1000L).toSet)   // relabelled 0..k-1
     assert(cents.values.toSeq.distinct.size == 1000) // distinct real centers

@@ -1,6 +1,10 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
 
@@ -65,13 +69,24 @@ class DedupIndexUpsertSpec extends SparkSpec {
         n = 3, numPerm = 128, bands = 32, threshold = 0.8)
       val prevBanded = TextDedup.bandedKeys(
         TextDedup.shingleHashTable(prev, "doc_id", "text", 3), 128, 32)
-      val (_, _, added) = TextDedup.upsertLshPairsParts(
+      // The operator cuts the candidate join eagerly, so the join runs at
+      // call time: read the plans its checkpoint jobs executed (the
+      // returned relations only scan the cut blocks). jobsLaunchedBy
+      // drains the listener queue the plans arrive on.
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val qel = new QueryExecutionListener {
+        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          if (f == "localCheckpoint") plans.add(qe.executedPlan.toString)
+        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(qel)
+      try jobsLaunchedBy(TextDedup.upsertLshPairsParts(
         prevPairs, prevBanded, curr,
         df(Seq(40L -> "", 50L -> "")).select("doc_id"),
         df(Seq(3L -> "")).select("doc_id"),
-        "doc_id", "text", n = 3, numPerm = 128, bands = 32, threshold = 0.8,
-        eagerCheckpoint = false)
-      val plan = added.queryExecution.executedPlan.toString
+        "doc_id", "text", n = 3, numPerm = 128, bands = 32, threshold = 0.8))
+      finally spark.listenerManager.unregister(qel)
+      val plan = plans.asScala.mkString("\n")
       assert("BroadcastHashJoin \\[band#\\d+".r.findFirstIn(plan).nonEmpty,
         s"the (band, bh) candidate join should be a hinted broadcast:\n${plan.take(2500)}")
     } finally
@@ -127,52 +142,5 @@ class DedupIndexUpsertSpec extends SparkSpec {
     assert(gotPoisoned(20L) === 999L && gotPoisoned(21L) === 999L,
       "untouched component was recomputed")
     assert(gotPoisoned - 20L - 21L === got - 20L - 21L)
-  }
-
-  test("eagerCheckpoint=false composes lazily and returns identical relations") {
-    val prev = df(prevDocs)
-    val curr = df(currDocs)
-    val prevPairs = TextDedup.minhashLshPairs(prev, "doc_id", "text",
-      n = 3, numPerm = 128, bands = 32, threshold = 0.8)
-      .localCheckpoint(true) // pre-materialize the INPUTS so the lazy-call
-    val prevBanded = TextDedup.bandedKeys(     // job count isolates the
-        TextDedup.shingleHashTable(prev, "doc_id", "text", 3), 128, 32)
-      .localCheckpoint(true)                   // operator itself
-    val changed = df(Seq(40L -> "", 50L -> "")).select("doc_id").localCheckpoint(true)
-    val removed = df(Seq(3L -> "")).select("doc_id").localCheckpoint(true)
-
-    // the documented lazy-composition contract: NO Spark jobs at call time
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val (lazyPairs, lazyBanded, lazyAdded) =
-      try {
-        val r = TextDedup.upsertLshPairs(
-          prevPairs, prevBanded, curr, changed, removed,
-          "doc_id", "text", n = 3, numPerm = 128, bands = 32,
-          threshold = 0.8, eagerCheckpoint = false)
-        Thread.sleep(1000) // listener bus is async; let any job event land
-        r
-      } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get() === 0,
-      s"eagerCheckpoint=false must not run jobs at call time, ran ${jobs.get()}")
-
-    // and the relations are row-identical to the eager path's
-    val (eagerPairs, eagerBanded, eagerAdded) = TextDedup.upsertLshPairs(
-      prevPairs, prevBanded, curr, changed, removed,
-      "doc_id", "text", n = 3, numPerm = 128, bands = 32, threshold = 0.8)
-    def pairSet(d: org.apache.spark.sql.DataFrame) = d.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    def bandSet(d: org.apache.spark.sql.DataFrame) = d.collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    assert(pairSet(lazyPairs) === pairSet(eagerPairs))
-    assert(bandSet(lazyBanded) === bandSet(eagerBanded))
-    assert(pairSet(lazyAdded) === pairSet(eagerAdded))
-    assert(pairSet(lazyPairs).nonEmpty)
   }
 }

@@ -1,5 +1,9 @@
 package graft.operators
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -74,5 +78,71 @@ class ScansSpec extends SparkSpec {
     assert(Scans.materializedBytes(sc, rdds) > 0)
     rdds.foreach(_.unpersist(true))
     other.unpersist(true)
+  }
+
+  test("cut names its RDDs, times its span, and release frees only its own blocks") {
+    val sc = spark.sparkContext
+    // a recording timer: each span's label with the jobs run inside it
+    val spans = scala.collection.mutable.ArrayBuffer.empty[(String, Int)]
+    val rec = new graft.PhaseTimer {
+      def apply[A](label: String)(f: => A): A = {
+        var out: Option[A] = None
+        val jobs = jobsLaunchedBy { out = Some(f) }
+        spans += label -> jobs
+        out.get
+      }
+    }
+    val c = Scans.cut(spark.range(1000).filter(col("id") % 3 === 0).toDF(),
+      "spec_cut", rec)
+    assert(spans.toSeq == Seq("spec_cut" -> 1), spans)
+    assert(c.rdds.size == 1 && c.rdds.map(_.name) == Seq("spec_cut"))
+    assert(sc.getRDDStorageInfo.exists(i =>
+      i.id == c.rdds.head.id && i.name == "spec_cut"))
+    assert(Scans.materializedBytes(sc, c.rdds) > 0)
+    assert(c.df.count() == 334L)
+    // an RDD persisted by another caller while the cut is live stays
+    val other = sc.parallelize(1 to 10).cache()
+    other.count()
+    c.release()
+    assert(!sc.getPersistentRDDs.contains(c.rdds.head.id))
+    assert(sc.getPersistentRDDs.contains(other.id))
+    other.unpersist(true)
+  }
+
+  test("a lazy cut runs no job until its first action") {
+    val sc = spark.sparkContext
+    var c: Scans.Cut = null
+    assert(jobsLaunchedBy {
+      c = Scans.cut(spark.range(1000).filter(col("id") % 3 === 0).toDF(),
+        "spec_lazy_cut", eager = false)
+    } == 0)
+    assert(c.rdds.size == 1 && sc.getPersistentRDDs.contains(c.rdds.head.id))
+    assert(Scans.materializedBytes(sc, c.rdds) == 0)
+    var rows = 0
+    assert(jobsLaunchedBy { rows = c.df.collect().length } == 1)
+    assert(rows == 334)
+    assert(Scans.materializedBytes(sc, c.rdds) > 0)
+    c.release()
+    assert(!sc.getPersistentRDDs.contains(c.rdds.head.id))
+  }
+
+  test("Scans.cut is the only local checkpoint in src/main") {
+    // one lineage cut for every operator: a new `.localCheckpoint(` call
+    // elsewhere would bypass its naming, timing and release, and the one
+    // place a checkpoint-kind decision can land
+    def codeLines(p: java.nio.file.Path): Seq[(String, Int)] =
+      Files.readAllLines(p).asScala.toSeq.zipWithIndex.flatMap {
+        case (line, i) =>
+          val code = line.split("//", 2)(0).trim
+          if (code.startsWith("*") || code.startsWith("/*")) None
+          else Some(code -> (i + 1))
+      }
+    val sources = Files.walk(Paths.get("src/main")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    val hits = sources.flatMap(p => codeLines(p)
+      .collect { case (code, n) if code.contains(".localCheckpoint(") =>
+        s"${p.getFileName}:$n" })
+    assert(hits.size == 1 && hits.head.startsWith("Scans.scala:"),
+      s"local checkpoints outside Scans.cut: ${hits.mkString(", ")}")
   }
 }
